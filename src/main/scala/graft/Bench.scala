@@ -8,6 +8,8 @@ import org.apache.spark.sql.SparkSession
   * Runs every SparkEntry query (count() action) plus a streaming replay of
   * the indicator pipeline (MemoryStream-fed, measured as wall seconds; the
   * replayed record rate is printed to stderr for BASELINE.md).
+  * A failing entry is named on stderr, gets no time (`"status":"error"`
+  * in the timing artifact) and makes Bench exit 1 after its output.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -22,6 +24,8 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft.ops.LocalTail", org.apache.logging.log4j.Level.INFO)
 
     // Optional subset run (dev / scale-rehearsal tooling): a comma-
     // separated SPARK_GRAFT_ONLY limits both the streaming replays and
@@ -30,15 +34,32 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def want(name: String): Boolean = only.forall(_.contains(name))
 
+    // entry name -> error, for every run that threw
+    val failures = scala.collection.mutable.LinkedHashMap[String, String]()
+    def attempt[T](name: String)(body: => T): Option[T] =
+      try Some(body)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] $name FAILED: $e")
+        failures(name) = e.toString
+        None
+      }
+    def secs(body: => Unit): Double = {
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    }
+
     // JIT/codegen warm-up outside the timed loop: exercise the parquet
     // scan, shuffle, window, and aggregate code paths once so the first
     // timed query doesn't absorb one-time compilation cost
-    try {
+    attempt("warmup") {
       SparkEntry.queries("q_indicators")(spark, sfDir).count()
       SparkEntry.queries("q_agg_avg")(spark, sfDir).count()
-    } catch { case _: Throwable => () }
+    }
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
+    def record(name: String)(run: => Double): Unit =
+      if (want(name)) attempt(name)(run).foreach(results(name) = _)
     // Warm (repeat-run) timings for entries re-run after their cold run —
     // the self-adjudication channel for session-age/codegen-cold noise:
     // a cold reading far above its own warm repeat is JVM state, not a
@@ -52,78 +73,59 @@ object Bench {
     // a fresh session state reports the number the pipeline actually has;
     // the batch queries are insensitive to position (verified across
     // rounds) and keep their alphabetical order below.
-    if (want("stream_indicators"))
-      results("stream_indicators") = streamReplay(spark, sfDir)
+    record("stream_indicators")(streamReplay(spark, sfDir))
     // same pipeline at bulk cadence (4 large batches): shows the per-batch
     // fixed cost amortizing away — the throughput number that scales
-    if (want("stream_indicators_bulk"))
-      results("stream_indicators_bulk") =
-        streamReplay(spark, sfDir, batches = 4)
+    record("stream_indicators_bulk")(streamReplay(spark, sfDir, batches = 4))
     // LLM-data streaming path: documents through dedup/quality/chunking
-    if (want("stream_docs"))
-      results("stream_docs") = docStreamReplay(spark, sfDir)
+    record("stream_docs")(docStreamReplay(spark, sfDir))
     // native session_window sessionization over the events replay
-    if (want("stream_sessions"))
-      results("stream_sessions") = sessionStreamReplay(spark, sfDir)
+    record("stream_sessions")(sessionStreamReplay(spark, sfDir))
     // live Pareto-frontier maintenance over the part-table replay
-    if (want("stream_skyline"))
-      results("stream_skyline") = skylineStreamReplay(spark, sfDir)
+    record("stream_skyline")(skylineStreamReplay(spark, sfDir))
     // stateless stream-static near-dup gate: incoming docs vs a static
     // corpus band index (the zero-state ingest-dedup path)
-    if (want("stream_cross_dedup"))
-      results("stream_cross_dedup") = crossDedupReplay(spark, sfDir)
+    record("stream_cross_dedup")(crossDedupReplay(spark, sfDir))
     // one-pass submodular maximization (SieveStreaming), 4 shards
-    if (want("stream_sieve"))
-      results("stream_sieve") = sieveStreamReplay(spark, sfDir)
+    record("stream_sieve")(sieveStreamReplay(spark, sfDir))
     // stream-static substring-dedup gate: incoming docs' CDC chunk
     // fingerprints probed against the static corpus chunk index
-    if (want("stream_substr_dedup"))
-      results("stream_substr_dedup") = substrDedupReplay(spark, sfDir)
+    record("stream_substr_dedup")(substrDedupReplay(spark, sfDir))
     // residual-IVF-PQ ANN serving: streamed query batches answered by
     // ADC over residual codes + exact per-cell correction (the serving
     // leg of q_knn_ivfpq_res)
-    if (want("stream_ann_res"))
-      results("stream_ann_res") = annResReplay(spark, sfDir)
+    record("stream_ann_res")(annResReplay(spark, sfDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => want(kv._1)).foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      val cold = (System.nanoTime() - t0) / 1e9
-      results(name) = cold
+      record(name)(secs(fn(spark, sfDir).count()))
       // Immediate repeat for the non-trivial entries (>0.5 s cold): same
       // plan, codegen/classloading now warm. Cheap (warm << cold for the
       // noise-dominated cases, and sub-0.5 s entries are skipped), and it
       // lets a future verdict separate real regressions from cold-JVM
       // artifacts without a separate isolated-replay session.
-      if (cold > 0.5) {
-        val t1 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-        warmRuns(name) = (System.nanoTime() - t1) / 1e9
-      }
+      if (results.get(name).exists(_ > 0.5))
+        attempt(name)(secs(fn(spark, sfDir).count())) match {
+          case Some(warm) => warmRuns(name) = warm
+          case None => results.remove(name)
+        }
       // OUTSIDE the timed region: drop checkpoint blocks the finished
       // entry leaked (tradeBase / co-occurrence edge frames are
       // localCheckpoints that otherwise pin executor storage until the
       // ContextCleaner notices — r9 ADVICE). The result frame is
       // discarded, every entry recomputes from parquet, so this frees
       // memory without touching what any query computes or when.
-      try spark.sparkContext.getPersistentRDDs.values
+      spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
     }
     // end-to-end BATCH curation: exact dedup -> near-dup components ->
     // quality -> PII scrub -> chunk -> pack, one composed job
-    if (want("pipeline_curate")) results("pipeline_curate") = {
-      val t0 = System.nanoTime()
-      try graft.pipelines.CorpusPipeline
-        .curate(graft.model.Tables.documents(spark, sfDir)).count()
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
+    record("pipeline_curate")(secs(
+      graft.pipelines.CorpusPipeline
+        .curate(graft.model.Tables.documents(spark, sfDir)).count()))
     // store maintenance under small-file pressure: compact a sliver-heavy
     // day-partitioned store (the streaming-sink debris pattern) into
     // right-sized files
-    if (want("pipeline_compact")) results("pipeline_compact") =
-      try compactReplay(spark, sfDir) catch { case _: Throwable => -1.0 }
+    record("pipeline_compact")(compactReplay(spark, sfDir))
 
     val qs = results
       .map { case (k, v) => "\"" + k + "\":" + v }
@@ -144,12 +146,17 @@ object Bench {
       def num(v: Double, digits: Int): String =
         String.format(java.util.Locale.ROOT, s"%.${digits}f",
           Double.box(v))
-      val entries = results.map { case (k, cold) =>
+      val ok = results.map { case (k, cold) =>
         val warm = warmRuns.get(k).map(w => num(w, 4)).getOrElse("null")
-        s""""$k":{"cold":${num(cold, 4)},"warm":$warm}"""
-      }.mkString("{", ",", "}")
+        s""""$k":{"status":"ok","cold":${num(cold, 4)},"warm":$warm}"""
+      }
+      val failed = failures.map { case (k, err) =>
+        val msg = err.replaceAll("[\"\\\\\\p{Cntrl}]", " ")
+        s""""$k":{"status":"error","error":"$msg"}"""
+      }
+      val entries = (ok ++ failed).mkString("{", ",", "}")
       val body =
-        s"""{"sf":"$sfDir","total_sec":${num(total, 2)},"entries":${results.size},"timings":$entries}"""
+        s"""{"sf":"$sfDir","total_sec":${num(total, 2)},"entries":${results.size},"failed":${failures.size},"timings":$entries}"""
       val p = java.nio.file.Paths.get(timingsOut)
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(p, body.getBytes("UTF-8"))
@@ -158,6 +165,7 @@ object Bench {
       System.err.println(s"[bench] timing artifact write failed: $e")
     }
     spark.stop()
+    if (failures.nonEmpty) sys.exit(1)
   }
 
   /** Small-file compaction: seed a day-partitioned store with the sliver

@@ -44,14 +44,13 @@ object Bfs {
     require(maxHops >= 1)
     val raw = edges.select(col(src).as("src"), col(dst).as("dst"))
       .filter(col("src") =!= col("dst"))
-    // r10 hybrid tail (the CC-local pattern, guide §1.2): under the
-    // absolute bound the whole expansion is per-round-latency-bound —
-    // run it driver-local. The tail gates on (and collects) the RAW
-    // edge list: level-synchronous BFS is idempotent to duplicate
-    // edges, so the distributed path's distinct shuffle + checkpoint
-    // never runs. Identical set algebra; GraphLocalSpec pins it.
-    if (raw.count() <= GraphLocal.limit(edges.sparkSession))
-      return GraphLocal.bfs(raw, seeds, maxHops)
+    // local tail (LocalTail gate): the probe collects the RAW edge
+    // list — level-synchronous BFS is idempotent to duplicate edges, so
+    // the distributed path's distinct shuffle + checkpoint never runs.
+    // Identical set algebra; GraphLocalSpec pins it.
+    val local = LocalTail.collect("bfs", raw)
+    if (local.isDefined)
+      return GraphLocal.bfs(local.get, seeds, maxHops)
     val e0 = materialize(raw.distinct())
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
     val e = materialize(e0.repartition(p, col("src")))
@@ -117,14 +116,17 @@ object Bfs {
     require(maxHops >= 1)
     val raw = edges.select(col(src).as("src"), col(dst).as("dst"))
       .filter(col("src") =!= col("dst"))
-    // r10 hybrid tail over the RAW edge list (duplicates are harmless
-    // to BFS and to the node set) — string ids only (the md5-min seed
-    // must replay Spark's md5 over UTF8 bytes); both sweeps + argmaxes
-    // run locally
-    if (raw.schema.fields.take(2).forall(_.dataType ==
-          org.apache.spark.sql.types.StringType) &&
-        raw.count() <= GraphLocal.limit(edges.sparkSession))
-      return GraphLocal.doubleSweep(raw, maxHops)
+    // local tail over the RAW edge list (duplicates are harmless to
+    // BFS and to the node set) — string ids only (the md5-min seed must
+    // replay Spark's md5 over UTF8 bytes); both sweeps + argmaxes run
+    // locally
+    val local =
+      if (raw.schema.fields.take(2).forall(_.dataType ==
+            org.apache.spark.sql.types.StringType))
+        LocalTail.collect("double_sweep", raw)
+      else None
+    if (local.isDefined)
+      return GraphLocal.doubleSweep(local.get, maxHops, edges.sparkSession)
     val e0 = materialize(raw.distinct())
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
     val e = materialize(e0.repartition(p, col("src")))

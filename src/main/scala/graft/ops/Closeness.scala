@@ -43,11 +43,12 @@ object Closeness {
     require(maxHops >= 1)
     val raw = edges.select(col(src).as("src"), col(dst).as("dst"))
       .filter(col("src") =!= col("dst"))
-    // r10 hybrid tail (GraphLocal) over the RAW edge list (duplicate
+    // local tail (LocalTail gate) over the RAW edge list (duplicate
     // edges are harmless to per-seed BFS): k seed BFS runs + integer
-    // harmonic sums driver-local under the absolute bound
-    if (raw.count() <= GraphLocal.limit(edges.sparkSession))
-      return GraphLocal.closeness(raw, seeds, maxHops)
+    // harmonic sums driver-local
+    val local = LocalTail.collect("closeness", raw)
+    if (local.isDefined)
+      return GraphLocal.closeness(local.get, seeds, maxHops)
     val e0 = materialize(raw.distinct())
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
     val e = materialize(e0.repartition(p, col("src")))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Connected components over an edge list, via the alternating
   * large-star / small-star algorithm (Kiveris et al., "Connected
@@ -22,6 +23,9 @@ import org.apache.spark.sql.functions._
   * loop uses reliable checkpoints (the cluster deployment path);
   * otherwise `localCheckpoint` (executor-local blocks — fine for
   * local-mode tests, lost on executor failure).
+  *
+  * Small graphs: [[LocalTail]] decides, at entry and after every round,
+  * when the contraction finishes as a driver-local union-find instead.
   */
 object ConnectedComponents {
 
@@ -72,95 +76,27 @@ object ConnectedComponents {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Total order identical to Spark's own min() over the supported node
-    * types (integral compare; strings by UTF8 binary order, which is
-    * what Spark's UTF8String comparison uses — NOT java.lang.String's
-    * UTF-16 code-unit order).
-    */
-  private[ops] def cmpAny(a: Any, b: Any): Int = (a, b) match {
-    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-    case (x: Int, y: Int) => Integer.compare(x, y)
-    case (x: String, y: String) =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(x)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
-    case _ => throw new IllegalArgumentException(
-      s"unsupported node type: ${a.getClass} vs ${b.getClass}")
-  }
-
-  /** Node types [[cmpAny]] orders identically to Spark's min(). A frame
-    * with any other id type skips the local tail and finishes through
-    * the distributed star rounds (which order everything natively). */
-  private[ops] def localTypeOk(t: org.apache.spark.sql.types.DataType): Boolean =
-    t match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.StringType => true
-      case _ => false
-    }
-
-  /** Edge-count bound under which the contraction finishes locally —
-    * an ABSOLUTE driver-memory bound (2^17 edges ~ a few MB collected:
-    * the same order as a broadcast-join build side), not a knob tuned
-    * to the local core count. Override: `spark.graft.cc.localEdges`
-    * (0 disables the local tail).
-    */
-  private def localLimit(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.cc.localEdges")
-      .map(_.toLong).getOrElse(1L << 17)
-
-  /** Driver-local union-find over a collected edge frame — the
-    * contraction TAIL (guide §1.2: per-round fixed cost dominates once
-    * the live graph is tiny; a graph under [[localLimit]] edges is
-    * latency-bound through the distributed rounds, metadata-sized for
-    * the driver). Output rows are EXACTLY [[run]]'s fixpoint contract:
-    * (id, rep = minimum node of the component) for every node present
-    * in an edge — same values at any parallelism, so the switch is
-    * invisible to every caller and to the oracles.
+  /** Driver-local union-find over the collected edge rows — the
+    * contraction tail. Output rows are EXACTLY [[run]]'s fixpoint
+    * contract: (id, rep = minimum node of the component) for every node
+    * present in an edge, so the switch is invisible to every caller.
     */
   private def runLocal(cur: DataFrame): DataFrame = {
     val spark = cur.sparkSession
-    val rows = cur.collect()
-    val idx = new java.util.HashMap[Any, Integer]()
-    val nodes = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def id(v: Any): Int = {
-      val got = idx.get(v)
-      if (got == null) {
-        idx.put(v, Integer.valueOf(nodes.length)); nodes += v
-        nodes.length - 1
-      } else got.intValue
-    }
-    val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    rows.foreach { r =>
-      val a = id(r.get(0)); val b = id(r.get(1))
-      while (parent.length < nodes.length) parent += parent.length
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent(rb) = ra
-    }
-    // component representative = minimum member (cmpAny == Spark min)
-    val repOf = new java.util.HashMap[Int, Any]()
-    var i = 0
-    while (i < nodes.length) {
-      val r = find(i)
-      val cand = nodes(i)
-      val cu = repOf.get(r)
-      if (cu == null || cmpAny(cand, cu) < 0) repOf.put(r, cand)
-      i += 1
-    }
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](nodes.length)
-    i = 0
-    while (i < nodes.length) {
-      out.add(org.apache.spark.sql.Row(nodes(i), repOf.get(find(i))))
-      i += 1
-    }
+    val ids = new LocalTail.Interner
+    val uf = new LocalTail.UnionFind
+    cur.collect().foreach(r => uf.union(ids(r.get(0)), ids(r.get(1))))
+    // component representative = minimum member (cmpAny == Spark min),
+    // kept at the component's root id
+    val root = Array.tabulate(ids.size)(uf.find)
+    val rep = new Array[Any](ids.size)
+    for (i <- root.indices; r = root(i))
+      if (rep(r) == null || LocalTail.cmpAny(ids.node(i), rep(r)) < 0)
+        rep(r) = ids.node(i)
+    val out = root.indices
+      .map(i => org.apache.spark.sql.Row(ids.node(i), rep(root(i))))
     val t = cur.schema.fields(0).dataType
-    spark.createDataFrame(out, org.apache.spark.sql.types.StructType(Seq(
+    spark.createDataFrame(out.asJava, org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", t, nullable = false),
       org.apache.spark.sql.types.StructField("rep", t, nullable = false))))
   }
@@ -172,9 +108,9 @@ object ConnectedComponents {
     * parallelism; throws if `maxIter` rounds don't reach the fixpoint
     * (provably impossible below O(log^2 n) rounds).
     *
-    * Hybrid tail (r9): once the live edge frame is under
-    * [[localLimit]] rows — at entry, or after any contraction round —
-    * the remaining rounds collapse into one driver-local union-find
+    * Hybrid tail: once the live edge frame fits the [[LocalTail]]
+    * budget — at entry, or after any contraction round — the
+    * remaining rounds collapse into one driver-local union-find
     * ([[runLocal]]), the standard multi-level-contraction endgame. The
     * distributed star rounds still carry anything larger; results are
     * bit-identical either way.
@@ -182,17 +118,20 @@ object ConnectedComponents {
   def run(
       edges: DataFrame, src: String = "src", dst: String = "dst",
       maxIter: Int = 25): DataFrame = {
-    val limit0 = localLimit(edges.sparkSession)
     var cur = materialize(
       edges.select(col(src).as("src"), col(dst).as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct())
     // unsupported id types (decimal/date/short...) disable the tail
-    // rather than throw mid-contraction — the star rounds carry them
-    val limit =
-      if (localTypeOk(cur.schema.fields(0).dataType)) limit0 else -1L
+    // rather than throw mid-contraction — the star rounds carry them;
+    // the signature's edge count is the size measure (no extra pass):
+    // the tail holds the edges plus up to two (id, rep) rows per edge
+    val rowBytes = LocalTail.rowBytes(cur.schema)
+    def fits(n: Long): Boolean =
+      LocalTail.orderable(cur.schema.fields(0).dataType) &&
+        LocalTail.fits(cur.sparkSession, "connected_components", 3 * n * rowBytes)
     var sig = signature(cur)
-    if (sig._1 <= limit) {
+    if (fits(sig._1)) {
       val out = runLocal(cur)
       cur.unpersist()
       return out
@@ -207,7 +146,7 @@ object ConnectedComponents {
       cur.unpersist()
       cur = next
       it += 1
-      if (!converged && nsig._1 <= limit) {
+      if (!converged && fits(nsig._1)) {
         val out = runLocal(cur)
         cur.unpersist()
         return out

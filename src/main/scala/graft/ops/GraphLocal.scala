@@ -4,39 +4,16 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Driver-local tails for the BFS-tier graph operators ([[Bfs]],
-  * [[Closeness]], [[Sssp]], [[TemporalReach]]) — the r10 extension of
-  * the [[ConnectedComponents]] local-tail pattern (guide §1.2: per-round
-  * fixed cost dominates small graphs; each distributed round is a full
-  * frontier×edges join + groupBy + checkpoint regardless of frontier
-  * size).
-  *
-  * Gate: an ABSOLUTE edge bound (`spark.graft.graph.localEdges`,
-  * default 2^21 rows, 0 disables) — broadcast-build-side order (~tens
-  * of MB collected for short string node ids), not a local-core-count
-  * knob. Under the bound the whole expansion is latency-bound through
-  * the distributed rounds while the driver can run it in milliseconds;
-  * over it (any corpus-scale graph) the distributed level-synchronous
-  * rounds carry the query unchanged. Every local recurrence below is
-  * the op's EXACT set/min algebra (level-synchronous BFS, synchronous
+  * [[Closeness]], [[Sssp]], [[TemporalReach]]), run on the raw edge rows
+  * that the [[LocalTail]] probe collected. Each local recurrence is the
+  * op's EXACT set/min algebra (level-synchronous BFS, synchronous
   * Bellman-Ford relaxation, integer harmonic sums), so results are
-  * bit-identical either way — `GraphLocalSpec` pins local ≡ distributed
-  * on random fixtures, and the DuckDB oracles re-verify end to end.
-  *
-  * Representation: node ids are interned to dense ints once (edge
-  * endpoints first, then graph-absent seeds — which keep an empty
-  * adjacency range) and the adjacency stored CSR-style, so the loops
-  * run on primitive arrays, never boxed maps.
-  *
-  * EAGER-EXECUTION CONTRACT (same as the CC tail / Sinkhorn): when the
-  * tail fires, the edge collect and the loop run at DataFrame-
-  * construction time; the returned frame is a LocalTableScan.
+  * bit-identical to the distributed rounds — `GraphLocalSpec` pins it.
+  * Node ids are interned to dense ints (edge endpoints first, then
+  * graph-absent seeds, which keep an empty adjacency range) and the
+  * adjacency stored CSR-style, so the loops run on primitive arrays.
   */
 private[ops] object GraphLocal {
-
-  /** The absolute local-tail bound; 0 disables. */
-  def limit(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.graph.localEdges")
-      .map(_.toLong).getOrElse(1L << 21)
 
   /** Interned CSR adjacency over collected (src, dst[, payload]) rows
     * plus the seed values (interned after the edge endpoints, so
@@ -44,18 +21,7 @@ private[ops] object GraphLocal {
     */
   private final class Csr(
       rows: Array[Row], seedVals: Array[Any], withPayload: Boolean) {
-    private val idx = new java.util.HashMap[Any, Integer]()
-    private val nodeBuf = scala.collection.mutable.ArrayBuffer.empty[Any]
-    private def intern(v: Any): Int = {
-      val got = idx.get(v)
-      if (got == null) {
-        idx.put(v, Integer.valueOf(nodeBuf.length)); nodeBuf += v
-        nodeBuf.length - 1
-      } else got.intValue
-    }
-    def lookup(v: Any): Int = {
-      val got = idx.get(v); if (got == null) -1 else got.intValue
-    }
+    private val ids = new LocalTail.Interner
     private val m = rows.length
     private val srcs = new Array[Int](m)
     private val dsts = new Array[Int](m)
@@ -64,14 +30,14 @@ private[ops] object GraphLocal {
       var e = 0
       while (e < m) {
         val r = rows(e)
-        srcs(e) = intern(r.get(0))
-        dsts(e) = intern(r.get(1))
+        srcs(e) = ids(r.get(0))
+        dsts(e) = ids(r.get(1))
         if (withPayload) pays(e) = r.get(2).asInstanceOf[Number].longValue
         e += 1
       }
     }
-    val seeds: Array[Int] = seedVals.map(intern)
-    val n: Int = nodeBuf.length
+    val seeds: Array[Int] = seedVals.map(ids(_))
+    val n: Int = ids.size
     // CSR: off(u)..off(u+1) index into eDst/ePay
     val off: Array[Int] = new Array[Int](n + 1)
     val eDst: Array[Int] = new Array[Int](m)
@@ -91,7 +57,7 @@ private[ops] object GraphLocal {
         e += 1
       }
     }
-    def node(i: Int): Any = nodeBuf(i)
+    def node(i: Int): Any = ids.node(i)
   }
 
   /** Level-synchronous BFS over a CSR graph from interned seed ids;
@@ -128,12 +94,13 @@ private[ops] object GraphLocal {
     hop
   }
 
-  /** [[Bfs]] local tail: collect, expand, LocalTableScan. `seeds` is a
-    * one-column frame; node output type follows the seed column.
+  /** [[Bfs]] local tail over the collected (src, dst) rows: expand,
+    * LocalTableScan. `seeds` is a one-column frame; node output type
+    * follows the seed column.
     */
-  def bfs(e: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val spark = e.sparkSession
-    val g = new Csr(e.collect(),
+  def bfs(edges: Array[Row], seeds: DataFrame, maxHops: Int): DataFrame = {
+    val spark = seeds.sparkSession
+    val g = new Csr(edges,
       seeds.distinct().collect().map(_.get(0)), withPayload = false)
     val hop = bfsHops(g, g.seeds, maxHops)
     val out = new java.util.ArrayList[Row]()
@@ -152,10 +119,11 @@ private[ops] object GraphLocal {
     * (node = seed, n_reached, harmonic_fp), exactly [[Closeness.run]]'s
     * aggregate.
     */
-  def closeness(e: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val spark = e.sparkSession
+  def closeness(
+      edges: Array[Row], seeds: DataFrame, maxHops: Int): DataFrame = {
+    val spark = seeds.sparkSession
     val seedVals = seeds.distinct().collect().map(_.get(0))
-    val g = new Csr(e.collect(), seedVals, withPayload = false)
+    val g = new Csr(edges, seedVals, withPayload = false)
     val out = new java.util.ArrayList[Row]()
     var k = 0
     while (k < seedVals.length) {
@@ -184,10 +152,10 @@ private[ops] object GraphLocal {
     * exactly the distributed union + groupBy-min recurrence.
     */
   private def relaxFrame(
-      e: DataFrame, seeds: DataFrame, rounds: Int, init: Long,
+      edges: Array[Row], seeds: DataFrame, rounds: Int, init: Long,
       temporal: Boolean, outCol: String): DataFrame = {
-    val spark = e.sparkSession
-    val g = new Csr(e.collect(),
+    val spark = seeds.sparkSession
+    val g = new Csr(edges,
       seeds.distinct().collect().map(_.get(0)), withPayload = true)
     val n = g.n
     var cur = new Array[Long](n)
@@ -232,13 +200,14 @@ private[ops] object GraphLocal {
   }
 
   /** [[Sssp]] local tail (edges (src, dst, w)). */
-  def sssp(e: DataFrame, seeds: DataFrame, rounds: Int): DataFrame =
-    relaxFrame(e, seeds, rounds, init = 0L, temporal = false, outCol = "dist")
+  def sssp(edges: Array[Row], seeds: DataFrame, rounds: Int): DataFrame =
+    relaxFrame(edges, seeds, rounds, init = 0L, temporal = false, outCol = "dist")
 
   /** [[TemporalReach]] local tail (edges (src, dst, day)). */
   def temporalReach(
-      e: DataFrame, seeds: DataFrame, rounds: Int, seedDay: Long): DataFrame =
-    relaxFrame(e, seeds, rounds, init = seedDay, temporal = true,
+      edges: Array[Row], seeds: DataFrame, rounds: Int,
+      seedDay: Long): DataFrame =
+    relaxFrame(edges, seeds, rounds, init = seedDay, temporal = true,
       outCol = "arr_day")
 
   /** [[Bfs.doubleSweep]] local tail — STRING node ids only (the seed is
@@ -246,9 +215,9 @@ private[ops] object GraphLocal {
     * hex of the UTF8 bytes, which only strings guarantee).
     * Returns (start_node, end_node, diameter_lb).
     */
-  def doubleSweep(e: DataFrame, maxHops: Int): DataFrame = {
-    val spark = e.sparkSession
-    val g = new Csr(e.collect(), Array.empty, withPayload = false)
+  def doubleSweep(edges: Array[Row], maxHops: Int,
+      spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    val g = new Csr(edges, Array.empty, withPayload = false)
     def md5hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -271,7 +240,7 @@ private[ops] object GraphLocal {
       var j = 0
       while (j < hop.length) {
         if (hop(j) >= 0 && (best < 0 || hop(j) > hop(best) ||
-          (hop(j) == hop(best) && ConnectedComponents.cmpAny(
+          (hop(j) == hop(best) && LocalTail.cmpAny(
             g.node(j), g.node(best)) < 0))) best = j
         j += 1
       }

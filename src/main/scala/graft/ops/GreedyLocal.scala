@@ -11,42 +11,30 @@ import org.apache.spark.sql.types._
   * so k rounds cost k× the per-round stage latency while the driver
   * can replay the identical selection in microseconds.
   *
-  * Gate: `spark.graft.greedy.localRows` (absolute collected-row bound,
-  * default 2^20, 0 disables) — the frames here are bounded by
-  * construction (batch × top-N candidates; per-doc distinct bigrams),
-  * the bound is the safety valve that keeps any mis-sized caller on
-  * the distributed rounds. Selections are exact integer argmaxes with
-  * (score DESC, id ASC) tie-breaks replayed verbatim
-  * ([[ConnectedComponents.cmpAny]] = Spark's ordering), so results are
+  * Gate: [[LocalTail]] — the frames here are bounded by construction
+  * (batch × top-N candidates; per-doc distinct bigrams), and its
+  * bounded probe keeps any mis-sized caller on the distributed rounds;
+  * the collected rows arrive here. Selections are exact integer
+  * argmaxes with (score DESC, id ASC) tie-breaks replayed verbatim
+  * ([[LocalTail.cmpAny]] = Spark's ordering), so results are
   * bit-identical either way — `GreedyLocalSpec` pins local ≡
   * distributed, the DuckDB oracles re-verify end to end.
-  *
-  * EAGER-EXECUTION CONTRACT (as CC/GraphLocal/Sinkhorn): when the tail
-  * fires, collects and the selection loop run at DataFrame-construction
-  * time; the returned frame is a LocalTableScan.
   */
 private[graft] object GreedyLocal {
 
-  /** The absolute local-tail bound; 0 disables. */
-  def limit(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.greedy.localRows")
-      .map(_.toLong).getOrElse(1L << 20)
+  private def lt(a: Any, b: Any): Boolean = LocalTail.cmpAny(a, b) < 0
 
-  private def lt(a: Any, b: Any): Boolean =
-    ConnectedComponents.cmpAny(a, b) < 0
-
-  /** [[Mmr.rerank]]'s greedy loop, driver-local. `cand` rows are
-    * (q_id, c_id, rel_fp); `sims` rows (q_id, a, b, s_fp); both
-    * collected. Per query: pick 1 = (rel_fp DESC, c_id) argmax; round
+  /** [[Mmr.rerank]]'s greedy loop, driver-local. `candRows` are the
+    * collected rows of `cand` (q_id, c_id, rel_fp), `simRows` of sims
+    * (q_id, a, b, s_fp). Per query: pick 1 = (rel_fp DESC, c_id) argmax; round
     * r picks the (rel_fp - max_sim_to_picked DESC, c_id) argmax among
     * unpicked candidates having AT LEAST ONE sim row to a picked item
     * (the distributed inner join's exclusion, replayed exactly).
     * Output rows: (q_id, c_id, mmr_rank 1..k).
     */
-  def mmr(cand: DataFrame, sims: DataFrame, k: Int): DataFrame = {
+  def mmr(cand: DataFrame, candRows: Array[Row], simRows: Array[Row],
+      k: Int): DataFrame = {
     val spark = cand.sparkSession
-    val candRows = cand.collect()
-    val simRows = sims.collect()
     val byQ = candRows.groupBy(_.get(0))
     // (q, a) -> list of (b, s_fp)
     val simBy = new java.util.HashMap[(Any, Any), scala.collection.mutable.ArrayBuffer[(Any, Long)]]()
@@ -108,16 +96,15 @@ private[graft] object GreedyLocal {
         StructField("mmr_rank", IntegerType, nullable = false))))
   }
 
-  /** The k-round greedy max-coverage selection, driver-local. `toks`
-    * rows are DISTINCT (doc_id, bigram); per round the winner is the
+  /** The k-round greedy max-coverage selection, driver-local. `rows`
+    * are the collected DISTINCT (doc_id, bigram) rows of `toks`; per round the winner is the
     * (uncovered-bigram count DESC, doc_id ASC) argmax among docs with
     * at least one uncovered bigram (absent-group semantics of the
     * distributed count), and its whole bigram set joins the covered
     * set. Output rows: (pick 1..k, doc_id, gain).
     */
-  def maxCoverage(toks: DataFrame, k: Int): DataFrame = {
+  def maxCoverage(toks: DataFrame, rows: Array[Row], k: Int): DataFrame = {
     val spark = toks.sparkSession
-    val rows = toks.collect()
     val byDoc = rows.groupBy(_.get(0))
       .map { case (d, rs) => (d, rs.map(_.getString(1))) }.toArray
     val covered = scala.collection.mutable.HashSet.empty[String]

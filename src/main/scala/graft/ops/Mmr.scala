@@ -31,14 +31,15 @@ object Mmr {
     */
   def rerank(cand: DataFrame, sims: DataFrame, k: Int): DataFrame = {
     require(k >= 1)
-    // r10 hybrid tail (GreedyLocal, guide §1.2): the candidate frame is
+    // local tail (GreedyLocal, guide §1.2): the candidate frame is
     // bounded by construction (batch x top-N retriever output) and the
-    // k rounds are pure per-round stage latency distributed — under the
-    // absolute bound the identical integer greedy runs driver-local.
-    // GreedyLocalSpec pins local == distributed.
-    val lim = GreedyLocal.limit(cand.sparkSession)
-    if (lim > 0 && cand.count() + sims.count() <= lim)
-      return GreedyLocal.mmr(cand, sims, k)
+    // k rounds are pure per-round stage latency distributed — when both
+    // frames fit the LocalTail budget the identical integer greedy runs
+    // driver-local on the probe's rows. GreedyLocalSpec pins
+    // local == distributed.
+    val local = LocalTail.collectAll("mmr", Seq(cand, sims))
+    if (local.isDefined)
+      return GreedyLocal.mmr(cand, local.get(0), local.get(1), k)
     val byRel = Window.partitionBy(col("q_id"))
       .orderBy(col("rel_fp").desc, col("c_id"))
     var picks = cand

@@ -28,6 +28,9 @@ import org.apache.spark.sql.functions._
   * 4096 initial components; under-convergence cannot pass the gate
   * (the oracle's Kruskal is exact), and `MstSpec` asserts the budget on
   * random fixtures.
+  *
+  * Small graphs: when the edge frame fits the [[LocalTail]] budget,
+  * [[forest]] runs driver-local Kruskal instead of the Boruvka rounds.
   */
 object Mst {
 
@@ -42,33 +45,18 @@ object Mst {
     val ord = new Ordering[org.apache.spark.sql.Row] {
       def compare(x: org.apache.spark.sql.Row,
           y: org.apache.spark.sql.Row): Int = {
-        var c = ConnectedComponents.cmpAny(x.get(2), y.get(2))
+        var c = LocalTail.cmpAny(x.get(2), y.get(2))
         if (c != 0) return c
-        c = ConnectedComponents.cmpAny(x.get(0), y.get(0))
+        c = LocalTail.cmpAny(x.get(0), y.get(0))
         if (c != 0) return c
-        ConnectedComponents.cmpAny(x.get(1), y.get(1))
+        LocalTail.cmpAny(x.get(1), y.get(1))
       }
     }
-    val idx = new java.util.HashMap[Any, Integer]()
-    val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def id(v: Any): Int = {
-      val got = idx.get(v)
-      if (got == null) {
-        idx.put(v, Integer.valueOf(parent.length)); parent += parent.length
-        parent.length - 1
-      } else got.intValue
-    }
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
+    val ids = new LocalTail.Interner
+    val uf = new LocalTail.UnionFind
     val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
     rows.sorted(ord).foreach { r =>
-      val ra = find(id(r.get(0))); val rb = find(id(r.get(1)))
-      if (ra != rb) { parent(rb) = ra; out.add(r) }
+      if (uf.union(ids(r.get(0)), ids(r.get(1)))) out.add(r)
     }
     spark.createDataFrame(out, e.schema)
   }
@@ -84,21 +72,16 @@ object Mst {
           greatest(col("a"), col("b")).as("b"), col("w"))
         .groupBy(col("a"), col("b")).agg(min(col("w")).as("w")))
     val n = e.count()
-    // Hybrid tail (r9, same bound/convention as ConnectedComponents'
-    // local union-find): under the absolute edge bound the whole forest
-    // is latency-bound through Boruvka's nested contraction rounds —
-    // finish it as driver-local Kruskal over the SAME strict total
-    // order (w, a, b), which selects the identical unique MSF. The
-    // distributed rounds still carry anything larger.
-    val limit0 = e.sparkSession.conf.getOption("spark.graft.cc.localEdges")
-      .map(_.toLong).getOrElse(1L << 17)
-    // unsupported node/weight types fall through to the Boruvka rounds
-    val limit =
-      if (e.schema.fields.take(3)
-            .forall(f => ConnectedComponents.localTypeOk(f.dataType)))
-        limit0
-      else -1L
-    if (n <= limit) {
+    // Hybrid tail (same convention as ConnectedComponents' local
+    // union-find): when the edge frame fits the LocalTail budget the
+    // whole forest is latency-bound through Boruvka's nested
+    // contraction rounds — finish it as driver-local Kruskal over the
+    // SAME strict total order (w, a, b), which selects the identical
+    // unique MSF. The distributed rounds still carry anything larger.
+    // Unsupported node/weight types fall through to the Boruvka rounds.
+    // The tail holds the edges plus up to one forest row per edge.
+    if (e.schema.fields.take(3).forall(f => LocalTail.orderable(f.dataType)) &&
+        LocalTail.fits(e.sparkSession, "mst", 2 * n * LocalTail.rowBytes(e.schema))) {
       val out = forestLocal(e)
       e.unpersist()
       return out

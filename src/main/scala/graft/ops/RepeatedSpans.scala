@@ -38,16 +38,17 @@ object RepeatedSpans {
     require(minLen >= 1 && cap >= minLen)
     val spark = docs.sparkSession
     import spark.implicits._
-    // r10 hybrid tail (SaLocal): under the suffix-array family's
-    // absolute character bound, the sort AND the neighbor scan run
-    // driver-local off one docs collect — no distributed rounds, no
-    // pairs x texts joins. Exact contract replay; SaLocalSpec pins it.
+    // local tail (SaLocal): when the corpus arrays fit the LocalTail
+    // budget, the sort AND the neighbor scan run driver-local
+    // off one docs collect — no distributed rounds, no pairs x texts
+    // joins. Exact contract replay; SaLocalSpec pins it.
     val base = docs.select(col("id"), col("text"))
       .filter(length(col("text")) >= 1)
     val nChars = base
       .agg(coalesce(sum(length(col("text")).cast("long")), lit(0L)))
       .head().getLong(0)
-    if (nChars > 0 && nChars <= SaLocal.limit(spark))
+    if (nChars > 0 &&
+        LocalTail.fits(spark, "repeated_spans", SaLocal.charge(nChars, 0L)))
       return SaLocal.spans(
         base.collect(), base.schema.fields(0).dataType, minLen, cap, spark)
     val (sa, n) = SuffixArray.buildWithCount(docs) // (id, pos, sfx_rank)

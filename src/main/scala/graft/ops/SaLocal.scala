@@ -4,12 +4,11 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Driver-local tail for the suffix-array family ([[SuffixArray]],
-  * [[RepeatedSpans]]) — the r10 extension of the local-tail pattern to
-  * the dedup-index tier (guide §1.2). The distributed prefix-doubling
-  * rounds each pay a range-sort shuffle + two RDD passes + a
-  * checkpoint; under an absolute TOTAL-CHARACTER bound
-  * (`spark.graft.sa.localChars`, default 2^23 ≈ 16 MB of text
-  * collected — broadcast-build-side order; 0 disables) the same
+  * [[RepeatedSpans]]) — the local-tail pattern on the dedup-index tier
+  * (guide §1.2). The distributed prefix-doubling rounds each pay a
+  * range-sort shuffle + two RDD passes + a checkpoint; when the corpus
+  * arrays (plus any output rows), charged per character off the count
+  * both callers already compute, fit the [[LocalTail]] budget, the same
   * doubling runs on primitive int arrays in milliseconds.
   *
   * Exactness: `sfx_rank` is the DENSE rank of each suffix in the
@@ -23,27 +22,25 @@ import org.apache.spark.sql.types._
   * `SaLocalSpec` pins local ≡ distributed on random corpora; the
   * DuckDB oracles (which sort the suffix STRINGS outright) re-verify
   * end to end.
-  *
-  * EAGER-EXECUTION CONTRACT (as the other local tails): when the tail
-  * fires, the docs collect and the sort run at DataFrame-construction
-  * time; the returned frame is a LocalTableScan.
   */
 private[ops] object SaLocal {
 
-  /** The absolute local-tail bound on total characters; 0 disables. */
-  def limit(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.sa.localChars")
-      .map(_.toLong).getOrElse(1L << 23)
+  /** [[LocalTail]] bytes for a corpus of `nChars` characters: the seven
+    * Int arrays of length n that [[Corpus.rank]] keeps live at its peak,
+    * plus `outBytes` per character; unbounded past Int indexing.
+    */
+  def charge(nChars: Long, outBytes: Long): Long =
+    if (nChars < Int.MaxValue) nChars * (7 * 4 + outBytes) else Long.MaxValue
 
   /** One collected corpus, sorted by doc id (Spark's order via
-    * [[ConnectedComponents.cmpAny]]), suffixes laid out doc-major so
+    * [[LocalTail.cmpAny]]), suffixes laid out doc-major so
     * the suffix at (doc, pos+h) is global index i+h of (doc, pos).
     */
   final class Corpus(docRows: Array[Row]) {
     val docs: Array[(Any, String)] = docRows
       .map(r => (r.get(0), r.getString(1)))
       .filter(_._2.length >= 1)
-      .sortWith((a, b) => ConnectedComponents.cmpAny(a._1, b._1) < 0)
+      .sortWith((a, b) => LocalTail.cmpAny(a._1, b._1) < 0)
     val start: Array[Int] = {
       val s = new Array[Int](docs.length + 1)
       var d = 0
@@ -168,12 +165,14 @@ private[ops] object SaLocal {
       out.add(Row(c.docs(c.docOf(i))._1, (c.posOf(i) + 1).toLong, r(i).toLong))
       i += 1
     }
-    (spark.createDataFrame(out,
-      StructType(Seq(
-        StructField("id", idType),
-        StructField("pos", LongType, nullable = false),
-        StructField("sfx_rank", LongType, nullable = false)))), c.n.toLong)
+    (spark.createDataFrame(out, buildSchema(idType)), c.n.toLong)
   }
+
+  /** [[build]]'s output: one (id, pos, sfx_rank) row per suffix. */
+  def buildSchema(idType: DataType): StructType = StructType(Seq(
+    StructField("id", idType),
+    StructField("pos", LongType, nullable = false),
+    StructField("sfx_rank", LongType, nullable = false)))
 
   /** [[RepeatedSpans.find]]'s local tail: the adjacent-suffix neighbor
     * scan with the 16-char pre-filter and the capped LCP — one output

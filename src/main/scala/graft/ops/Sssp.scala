@@ -54,11 +54,12 @@ object Sssp {
     val raw = edges.select(col(src).as("src"), col(dst).as("dst"),
         col(w).cast("long").as("w"))
       .filter(col("src") =!= col("dst"))
-    // r10 hybrid tail (GraphLocal) over the RAW edge list (the relax
+    // local tail (LocalTail gate) over the RAW edge list (the relax
     // min absorbs parallel edges exactly like the min-collapse):
-    // synchronous Bellman-Ford rounds driver-local under the bound
-    if (raw.count() <= GraphLocal.limit(edges.sparkSession))
-      return GraphLocal.sssp(raw, seeds, rounds)
+    // synchronous Bellman-Ford rounds driver-local
+    val local = LocalTail.collect("sssp", raw)
+    if (local.isDefined)
+      return GraphLocal.sssp(local.get, seeds, rounds)
     val e0 = materialize(
       raw.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>

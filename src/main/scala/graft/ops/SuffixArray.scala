@@ -133,15 +133,16 @@ object SuffixArray {
       return (sfxCh.select(col("id"), col("pos"), lit(0L).as("sfx_rank")),
         0L)
     }
-    // r10 hybrid tail (SaLocal, guide §1.2): under the absolute total-
-    // character bound the whole doubling runs on driver int arrays —
-    // the rank is a pure function of the corpus (dense rank in
-    // lexicographic suffix order), so any correct algorithm is exact;
-    // SaLocalSpec pins local == distributed, the string-sorting DuckDB
-    // oracle re-verifies end to end.
-    if (nSfx <= SaLocal.limit(spark))
-      return SaLocal.build(
-        base.collect(), base.schema.fields(0).dataType, spark)
+    // local tail (SaLocal, guide §1.2): when the corpus arrays plus one
+    // output row per suffix fit the LocalTail budget the whole doubling
+    // runs on driver int arrays — the rank is a pure function of the
+    // corpus (dense rank in lexicographic suffix order), so any correct
+    // algorithm is exact; SaLocalSpec pins local == distributed, the
+    // string-sorting DuckDB oracle re-verifies end to end.
+    val idType = base.schema.fields(0).dataType
+    if (LocalTail.fits(spark, "suffix_array", SaLocal.charge(nSfx,
+        LocalTail.rowBytes(SaLocal.buildSchema(idType)))))
+      return SaLocal.build(base.collect(), idType, spark)
     // the alphabet is bounded (distinct single chars), so the
     // char -> dense-rank map is a literal expression, not a join; it is
     // collected from PER-DOC distinct chars (docs-sized pass), not from

@@ -45,11 +45,12 @@ object TemporalReach {
     val raw = edges.select(col(src).as("src"), col(dst).as("dst"),
         col(day).cast("long").as("day"))
       .filter(col("src") =!= col("dst"))
-    // r10 hybrid tail (GraphLocal) over the RAW edge list (duplicate
+    // local tail (LocalTail gate) over the RAW edge list (duplicate
     // (src, dst, day) rows are harmless to the min): time-respecting
-    // relaxation rounds driver-local under the absolute bound
-    if (raw.count() <= GraphLocal.limit(edges.sparkSession))
-      return GraphLocal.temporalReach(raw, seeds, rounds, seedDay)
+    // relaxation rounds driver-local
+    val local = LocalTail.collect("temporal_reach", raw)
+    if (local.isDefined)
+      return GraphLocal.temporalReach(local.get, seeds, rounds, seedDay)
     val e0 = materialize(raw.distinct())
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
       val e = materialize(e0.repartition(p, col("src")))

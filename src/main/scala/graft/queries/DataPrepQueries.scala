@@ -248,16 +248,16 @@ object DataPrepQueries {
             "concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"))
           .as("bigram"))
         .distinct()
+      // local tail (GreedyLocal, guide §1.2): per-doc distinct bigram
+      // rows are bounded (docs x bounded text); when they fit the
+      // LocalTail budget the identical k-round greedy runs driver-local
+      // on the probe's rows. GreedyLocalSpec pins local == distributed.
+      // Cached first: an over-budget probe still runs the distinct's
+      // shuffle, which the rounds then read back instead of recomputing.
       toks.cache()
-      // r10 hybrid tail (GreedyLocal, guide §1.2): per-doc distinct
-      // bigram rows are bounded (docs x bounded text); under the
-      // absolute bound the identical k-round greedy runs driver-local
-      // (the count materializes the cache either way — the distributed
-      // loop's first round would otherwise pay the same scan).
-      // GreedyLocalSpec pins local == distributed.
-      val lim = graft.ops.GreedyLocal.limit(s)
-      if (lim > 0 && toks.count() <= lim) {
-        val out = graft.ops.GreedyLocal.maxCoverage(toks, k)
+      val local = graft.ops.LocalTail.collect("max_coverage", toks)
+      if (local.isDefined) {
+        val out = graft.ops.GreedyLocal.maxCoverage(toks, local.get, k)
         toks.unpersist()
         out
       } else {

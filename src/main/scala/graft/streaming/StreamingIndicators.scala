@@ -121,59 +121,6 @@ object StreamingIndicators {
         OutputMode.Append, GroupStateTimeout.NoTimeout)(advanceGroup)
   }
 
-  /** The same incremental enrichment on Spark 4's arbitrary-state API
-    * (`transformWithState` / `StatefulProcessor`) — the successor to
-    * flatMapGroupsWithState, with typed per-key state variables and state
-    * schema evolution. Identical output (shares [[step]]).
-    *
-    * Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` =
-    * `...state.RocksDBStateStoreProvider`) — the only provider backing
-    * the new API.
-    */
-  class IndicatorProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, Candle, EnrichedCandle] {
-    @transient private var state:
-        org.apache.spark.sql.streaming.ValueState[IndState] = _
-
-    override def init(
-        outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      state = getHandle.getValueState[IndState](
-        "indicators",
-        org.apache.spark.sql.Encoders.product[IndState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[Candle],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[EnrichedCandle] = {
-      val sorted = rows.toSeq.sortBy(candleSortKey)
-      var st = if (state.exists()) state.get() else emptyState
-      val out = sorted.map { c =>
-        val (next, enriched) = step(st, c)
-        st = next
-        enriched
-      }
-      state.update(st)
-      out.iterator
-    }
-  }
-
-  /** [[enrichStream]] on the transformWithState API. */
-  def enrichStreamTWS(candles: Dataset[Candle]): Dataset[EnrichedCandle] = {
-    val spark = candles.sparkSession
-    import spark.implicits._
-    candles
-      .groupByKey(_.stock_symbol)
-      .transformWithState(
-        new IndicatorProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-  }
-
   /** Watermarked dedup gate (replaces the reference's `already_sent` set,
     * K6): at-most-one row per (symbol, local_time) within the watermark
     * horizon, state evicted as the watermark advances.

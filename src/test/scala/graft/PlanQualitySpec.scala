@@ -94,6 +94,23 @@ class PlanQualitySpec extends AnyFunSuite with Matchers {
     }
   }
 
+  /** Every registry entry's executed plan under the measured branch,
+    * plus, for the entries whose construction consulted the LocalTail
+    * gate, under forced-distributed — so the two plan-shape gates below
+    * see the distributed plan (the one that runs at 100 TB) as well as
+    * the local tail the fixture reaches. Built once for both gates.
+    */
+  private lazy val plans: Seq[(String, Seq[String])] =
+    RegistryBuilds.of(sfDir).map { b =>
+      val forced =
+        if (!b.gated) Nil
+        else Seq(graft.ops.LocalTail.scoped(
+          Some(graft.ops.LocalTail.Distributed))(
+          SparkEntry.queries(b.name)(spark, sfDir)
+            .queryExecution.executedPlan.toString)._1)
+      b.name -> (b.plan +: forced)
+    }
+
   test("NO query plans a cartesian product or accidental nested-loop join") {
     // broadcast cross joins against a tiny probe/centroid set (knn/ivf/
     // semdedup: k ~ sqrt(n) centroid rows) — or the single-row corpus
@@ -102,16 +119,15 @@ class PlanQualitySpec extends AnyFunSuite with Matchers {
     // equi join. Intent lives ON the QueryDef (with a justification
     // string), so a new query cannot silently skip this gate by editing
     // a spec-local whitelist — it has to declare its shape where the
-    // query is defined.
+    // query is defined. Checked on both branches of gated entries.
     val intendedNestedLoop = SparkEntry.allQueries
       .filter(_.planIntent.broadcastNestedLoop.isDefined).map(_.name).toSet
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-        val cartesian = plan.contains("CartesianProduct")
-        val bnlj = plan.contains("BroadcastNestedLoopJoin") &&
-          !intendedNestedLoop(name)
-        if (cartesian || bnlj) Some(name) else None
+    val offenders = plans.collect {
+      case (name, ps) if ps.exists { plan =>
+          plan.contains("CartesianProduct") ||
+            (plan.contains("BroadcastNestedLoopJoin") &&
+              !intendedNestedLoop(name))
+        } => name
     }
     offenders shouldBe empty
   }
@@ -119,14 +135,15 @@ class PlanQualitySpec extends AnyFunSuite with Matchers {
   test("declared plan intent is not stale: every intent-annotated query still plans that shape") {
     // the inverse gate — an intent annotation on a query whose plan no
     // longer contains the declared shape is dead documentation and must
-    // be removed (keeps the QueryDef metadata honest over time)
-    val stale = SparkEntry.allQueries
-      .filter(_.planIntent.broadcastNestedLoop.isDefined)
-      .filterNot { q =>
-        q.fn(spark, sfDir).queryExecution.executedPlan.toString
-          .contains("BroadcastNestedLoopJoin")
-      }
-      .map(_.name)
+    // be removed (keeps the QueryDef metadata honest over time). A gated
+    // entry's intent holds if either branch plans the shape (q_diameter:
+    // only its distributed double sweep cross-joins the 1-row seed).
+    val annotated = SparkEntry.allQueries
+      .filter(_.planIntent.broadcastNestedLoop.isDefined).map(_.name).toSet
+    val stale = plans.collect {
+      case (name, ps) if annotated(name) &&
+          !ps.exists(_.contains("BroadcastNestedLoopJoin")) => name
+    }
     stale shouldBe empty
   }
 

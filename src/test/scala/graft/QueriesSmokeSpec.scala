@@ -1,9 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ops.LocalTail
+
 /** Every registered query runs end-to-end at sf0.001 and returns a sane
-  * result; queries that can legitimately be empty are allowlisted.
+  * result; queries that can legitimately be empty are allowlisted. Every
+  * entry gated by LocalTail returns the same rows on both branches.
   */
 class QueriesSmokeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -29,6 +34,38 @@ class QueriesSmokeSpec extends AnyFunSuite {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     // keep this list tiny and intentional
     assert(noOracle == rowsOnlyAllowed, s"queries without oracle: $noOracle")
+  }
+
+  /** (rows, order-independent content hash). */
+  private def fingerprint(df: DataFrame): (Long, BigDecimal) = {
+    val cols = df.columns.indices.map(i => s"c$i")
+    val r = df.toDF(cols: _*)
+      .select(xxhash64(cols.map(col): _*).cast("decimal(38,0)").as("h"))
+      .agg(count(lit(1)), coalesce(sum(col("h")), lit(0).cast("decimal(38,0)")))
+      .head()
+    (r.getLong(0), BigDecimal(r.getDecimal(1)))
+  }
+
+  // Both branches of every gated entry agree. The fixture reaches the
+  // local tails (which the DuckDB oracles check), so each entry whose
+  // construction consulted the LocalTail gate is re-run forced
+  // distributed, and its row count and content hash must equal the
+  // default run's — carrying the oracle check over to the distributed
+  // branch, the one that runs at 100 TB.
+  test("every gated entry: forced-distributed == default (rows + content hash)") {
+    val builds = RegistryBuilds.of(sfDir).filter(_.gated)
+    assert(builds.exists(_.decisions.exists(_.branch == LocalTail.Local)),
+      "the default run must reach local tails")
+    info(s"gated entries: ${builds.map(_.name).mkString(", ")}")
+    val mismatches = builds.map(_.name).flatMap { name =>
+      val fn = SparkEntry.queries(name)
+      val default = fingerprint(fn(spark, sfDir))
+      val (dist, decisions) = LocalTail.scoped(Some(LocalTail.Distributed))(
+        fingerprint(fn(spark, sfDir)))
+      assert(decisions.forall(_.branch == LocalTail.Distributed), decisions)
+      if (dist == default) None else Some(s"$name: $default vs $dist")
+    }
+    assert(mismatches.isEmpty, mismatches)
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

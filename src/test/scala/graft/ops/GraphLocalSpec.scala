@@ -7,8 +7,8 @@ import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
 
 /** The r10 BFS-tier hybrid tails (GraphLocal) must be INVISIBLE:
-  * forcing the distributed rounds (spark.graft.graph.localEdges=0) and
-  * the local path (default bound) on the same random inputs yields
+  * forcing the distributed rounds (LocalTail forced distributed) and
+  * the local path (default budget) on the same random inputs yields
   * identical rows for Bfs.run, Bfs.doubleSweep, Closeness.run,
   * Sssp.run and TemporalReach.run — including unreachable seeds,
   * dangling nodes and tie-heavy argmaxes.
@@ -16,17 +16,6 @@ import graft.TestSpark
 class GraphLocalSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def withLimit[T](v: String)(body: => T): T = {
-    val key = "spark.graft.graph.localEdges"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, v)
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   private def randomEdges(n: Int, nodes: Int, seed: Int): Seq[(String, String)] = {
     val r = new scala.util.Random(seed)
@@ -37,20 +26,18 @@ class GraphLocalSpec extends AnyFunSuite with Matchers {
     val e = randomEdges(600, 150, seed = 3).toDF("src", "dst")
     // seeds include a node absent from the graph (hop-0 contract)
     val seeds = Seq("N1", "N2", "N3", "GHOST").toDF("node")
-    val local = Bfs.run(e, seeds, maxHops = 4)
-      .as[(String, Int)].collect().toMap
-    val dist = withLimit("0") {
-      Bfs.run(e, seeds, maxHops = 4).as[(String, Int)].collect().toMap
+    val (local, dist) = Branches.both {
+      Bfs.run(e, seeds, maxHops = 4)
+        .as[(String, Int)].collect().toMap
     }
     local shouldBe dist
   }
 
   test("doubleSweep local tail == distributed double sweep") {
     val e = randomEdges(500, 120, seed = 9).toDF("src", "dst")
-    val local = Bfs.doubleSweep(e, maxHops = 6)
-      .as[(String, String, Long)].collect().toSeq
-    val dist = withLimit("0") {
-      Bfs.doubleSweep(e, maxHops = 6).as[(String, String, Long)].collect().toSeq
+    val (local, dist) = Branches.both {
+      Bfs.doubleSweep(e, maxHops = 6)
+        .as[(String, String, Long)].collect().toSeq
     }
     local shouldBe dist
   }
@@ -58,9 +45,7 @@ class GraphLocalSpec extends AnyFunSuite with Matchers {
   test("closeness local tail == distributed per-seed expansion") {
     val e = randomEdges(700, 160, seed = 17).toDF("src", "dst")
     val seeds = Seq("N0", "N5", "N7", "LONER").toDF("node")
-    val local = Closeness.run(e, seeds, maxHops = 4)
-      .as[(String, Long, Long)].collect().toSet
-    val dist = withLimit("0") {
+    val (local, dist) = Branches.both {
       Closeness.run(e, seeds, maxHops = 4)
         .as[(String, Long, Long)].collect().toSet
     }
@@ -73,10 +58,9 @@ class GraphLocalSpec extends AnyFunSuite with Matchers {
       .map { case (a, b) => (a, b, (r.nextInt(20) + 1).toLong) }
       .toDF("src", "dst", "w")
     val seeds = Seq("N1", "N9").toDF("node")
-    val local = Sssp.run(e, seeds, rounds = 5)
-      .as[(String, Long)].collect().toMap
-    val dist = withLimit("0") {
-      Sssp.run(e, seeds, rounds = 5).as[(String, Long)].collect().toMap
+    val (local, dist) = Branches.both {
+      Sssp.run(e, seeds, rounds = 5)
+        .as[(String, Long)].collect().toMap
     }
     local shouldBe dist
   }
@@ -87,9 +71,7 @@ class GraphLocalSpec extends AnyFunSuite with Matchers {
       .map { case (a, b) => (a, b, r.nextInt(30).toLong) }
       .toDF("src", "dst", "day")
     val seeds = Seq("N2", "N4").toDF("node")
-    val local = TemporalReach.run(e, seeds, rounds = 4)
-      .as[(String, Long)].collect().toMap
-    val dist = withLimit("0") {
+    val (local, dist) = Branches.both {
       TemporalReach.run(e, seeds, rounds = 4)
         .as[(String, Long)].collect().toMap
     }

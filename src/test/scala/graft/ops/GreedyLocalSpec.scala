@@ -7,8 +7,8 @@ import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
 
 /** The r10 greedy local tails (GreedyLocal) must be INVISIBLE: forcing
-  * the distributed rounds (spark.graft.greedy.localRows=0) and the
-  * local path (default bound) on the same random inputs yields
+  * the distributed rounds (LocalTail forced distributed) and the
+  * local path (default budget) on the same random inputs yields
   * identical picks for Mmr.rerank and the max-coverage greedy —
   * including tie-heavy score landscapes and candidates with no sim
   * edge to any picked item (the inner-join exclusion).
@@ -16,17 +16,6 @@ import graft.TestSpark
 class GreedyLocalSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def withLimit[T](v: String)(body: => T): T = {
-    val key = "spark.graft.greedy.localRows"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, v)
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   test("MMR local tail == distributed greedy rounds") {
     val r = new scala.util.Random(41)
@@ -41,10 +30,9 @@ class GreedyLocalSpec extends AnyFunSuite with Matchers {
     } yield (q.toLong, a.toLong + 100, b.toLong + 100,
       (r.nextInt(4) * 500).toLong))
       .toDF("q_id", "a", "b", "s_fp")
-    val local = Mmr.rerank(cand, sims, k = 5)
-      .as[(Long, Long, Int)].collect().toSet
-    val dist = withLimit("0") {
-      Mmr.rerank(cand, sims, k = 5).as[(Long, Long, Int)].collect().toSet
+    val (local, dist) = Branches.both {
+      Mmr.rerank(cand, sims, k = 5)
+        .as[(Long, Long, Int)].collect().toSet
     }
     local shouldBe dist
   }
@@ -56,7 +44,7 @@ class GreedyLocalSpec extends AnyFunSuite with Matchers {
       .distinct
       .toDF("doc_id", "bigram")
     val k = 6
-    val local = GreedyLocal.maxCoverage(toks, k)
+    val local = GreedyLocal.maxCoverage(toks, toks.collect(), k)
       .as[(Int, Long, Long)].collect().toSet
     // distributed reference: the q_max_coverage loop shape, inlined
     val dist = {

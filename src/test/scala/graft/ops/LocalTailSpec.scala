@@ -7,25 +7,14 @@ import graft.TestSpark
 
 /** The r9 hybrid tails (driver-local union-find in
   * ConnectedComponents.run, driver-local Kruskal in Mst.forest) must be
-  * INVISIBLE: forcing the distributed path (spark.graft.cc.localEdges=0)
-  * and the local path (default bound) on the same inputs yields
+  * INVISIBLE: forcing the distributed path (LocalTail forced distributed)
+  * and the local path (default budget) on the same inputs yields
   * identical rows — including string node ids, whose min/order must
   * follow UTF8 binary order, not UTF-16.
   */
 class LocalTailSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def withLimit[T](v: String)(body: => T): T = {
-    val key = "spark.graft.cc.localEdges"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, v)
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   private def randomEdges(n: Int, seed: Int): Seq[(Long, Long)] = {
     val r = new scala.util.Random(seed)
@@ -34,10 +23,9 @@ class LocalTailSpec extends AnyFunSuite with Matchers {
 
   test("CC local tail == distributed fixpoint (long ids)") {
     val e = randomEdges(500, 7).toDF("src", "dst")
-    val local = ConnectedComponents.run(e)
-      .as[(Long, Long)].collect().toMap
-    val dist = withLimit("0") {
-      ConnectedComponents.run(e).as[(Long, Long)].collect().toMap
+    val (local, dist) = Branches.both {
+      ConnectedComponents.run(e)
+        .as[(Long, Long)].collect().toMap
     }
     local shouldBe dist
   }
@@ -45,10 +33,9 @@ class LocalTailSpec extends AnyFunSuite with Matchers {
   test("CC local tail == distributed fixpoint (string ids)") {
     val e = randomEdges(400, 11)
       .map { case (a, b) => (s"N$a", s"N$b") }.toDF("src", "dst")
-    val local = ConnectedComponents.run(e)
-      .as[(String, String)].collect().toMap
-    val dist = withLimit("0") {
-      ConnectedComponents.run(e).as[(String, String)].collect().toMap
+    val (local, dist) = Branches.both {
+      ConnectedComponents.run(e)
+        .as[(String, String)].collect().toMap
     }
     local shouldBe dist
   }
@@ -59,8 +46,7 @@ class LocalTailSpec extends AnyFunSuite with Matchers {
       .map(_ => (r.nextInt(80).toLong, r.nextInt(80).toLong,
         (r.nextInt(50) + 1).toLong))
       .toDF("a", "b", "w")
-    val local = Mst.forest(e).as[(Long, Long, Long)].collect().toSet
-    val dist = withLimit("0") {
+    val (local, dist) = Branches.both {
       Mst.forest(e).as[(Long, Long, Long)].collect().toSet
     }
     local shouldBe dist

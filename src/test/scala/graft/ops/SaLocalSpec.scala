@@ -1,14 +1,15 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
 
 /** The r10 suffix-array local tail (SaLocal) must be INVISIBLE:
-  * forcing the distributed doubling (spark.graft.sa.localChars=0) and
-  * the local path (default bound) on the same corpora yields identical
+  * forcing the distributed doubling (LocalTail forced distributed) and
+  * the local path (default budget) on the same corpora yields identical
   * (id, pos, sfx_rank) ranks and identical RepeatedSpans pair rows —
   * including duplicated documents (equal suffixes must share a dense
   * rank) and shared tails (prefix-sorts-first).
@@ -16,17 +17,6 @@ import graft.TestSpark
 class SaLocalSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def withLimit[T](v: String)(body: => T): T = {
-    val key = "spark.graft.sa.localChars"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, v)
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   private def corpus(seed: Int, n: Int) = {
     val r = new scala.util.Random(seed)
@@ -44,19 +34,16 @@ class SaLocalSpec extends AnyFunSuite with Matchers {
 
   test("local suffix ranks == distributed doubling ranks") {
     val docs = corpus(7, 30)
-    val local = SuffixArray.build(docs)
-      .as[(Long, Long, Long)].collect().toSet
-    val dist = withLimit("0") {
-      SuffixArray.build(docs).as[(Long, Long, Long)].collect().toSet
+    val (local, dist) = Branches.both {
+      SuffixArray.build(docs)
+        .as[(Long, Long, Long)].collect().toSet
     }
     local shouldBe dist
   }
 
   test("local neighbor-scan spans == distributed RepeatedSpans") {
     val docs = corpus(11, 40)
-    val local = RepeatedSpans.find(docs, minLen = 8, cap = 24)
-      .as[(Long, Long, Long, Long, Long, String)].collect().toSet
-    val dist = withLimit("0") {
+    val (local, dist) = Branches.both {
       RepeatedSpans.find(docs, minLen = 8, cap = 24)
         .as[(Long, Long, Long, Long, Long, String)].collect().toSet
     }
@@ -66,12 +53,27 @@ class SaLocalSpec extends AnyFunSuite with Matchers {
 
   test("SaDedup.clean identical through the local tail") {
     val docs = corpus(13, 25)
-    val local = SaDedup.clean(docs, minLen = 8, cap = 24)
-      .as[(Long, Long, Long, String)].collect().toSet
-    val dist = withLimit("0") {
+    val (local, dist) = Branches.both {
       SaDedup.clean(docs, minLen = 8, cap = 24)
         .as[(Long, Long, Long, String)].collect().toSet
     }
     local shouldBe dist
+  }
+
+  test("the gate charges Int arrays + output rows per character") {
+    // at a 3-8 GiB heap: a corpus of 2^23 + 1 characters (over the old
+    // fixed bound) is charged 116 B a character (28 B of arrays + an
+    // 88 B output row), well past the budget; one past Int indexing is
+    // never local; the largest sf0.1 corpus (376138 characters) stays
+    // local
+    assume(Runtime.getRuntime.maxMemory <= (8L << 30))
+    assume(Runtime.getRuntime.maxMemory >= (3L << 30))
+    val out = LocalTail.rowBytes(SaLocal.buildSchema(LongType))
+    val (fits, d) = LocalTail.scoped(None) {
+      Seq((1L << 23) + 1, Int.MaxValue.toLong, 376138L)
+        .map(n => LocalTail.fits(spark, "suffix_array", SaLocal.charge(n, out)))
+    }
+    fits shouldBe Seq(false, false, true)
+    d(1).bytes shouldBe Long.MaxValue
   }
 }

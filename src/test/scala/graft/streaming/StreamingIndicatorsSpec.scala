@@ -160,101 +160,6 @@ class StreamingIndicatorsSpec extends AnyFunSuite {
     assert(got.drop(12).forall(r => r.getAs[Any]("ema_10") != null))
   }
 
-  test("transformWithState variant matches the flatMapGroupsWithState output") {
-    implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[Candle]
-      val query = StreamingIndicators
-        .enrichStreamTWS(input.toDS())
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName("stream_tws")
-        .start()
-      input.addData(symA.take(12))
-      query.processAllAvailable()
-      input.addData(symA.drop(12))
-      query.processAllAvailable()
-      val got = spark.table("stream_tws").orderBy("local_time").collect()
-      query.stop()
-
-      val clean = symA.foldLeft(
-        (StreamingIndicators.emptyState, Vector.empty[graft.model.EnrichedCandle])) {
-        case ((st, acc), c) =>
-          val (n, e) = StreamingIndicators.step(st, c)
-          (n, acc :+ e)
-      }._2
-      assert(got.length == clean.length)
-      got.zip(clean).foreach { case (g, e) =>
-        assert(Option(g.getAs[Any]("ema_10")).map(_.asInstanceOf[Double]) == e.ema_10)
-        assert(Option(g.getAs[Any]("rsi_10")).map(_.asInstanceOf[Double]) == e.rsi_10)
-        assert(g.getAs[String]("signal") == e.signal)
-      }
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("transformWithState restart: RocksDB state survives stop/start") {
-    implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val base = java.nio.file.Files.createTempDirectory("graft_tws_ck").toString
-      val input = MemoryStream[Candle]
-      def startQuery() = StreamingIndicators
-        .enrichStreamTWS(input.toDS())
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ck")
-        .start()
-
-      val q1 = startQuery()
-      input.addData(symA.take(12))
-      q1.processAllAvailable()
-      q1.stop()
-
-      val q2 = startQuery()
-      input.addData(symA.drop(12))
-      q2.processAllAvailable()
-      q2.stop()
-
-      val got = spark.read.parquet(s"$base/out").orderBy("local_time").collect()
-      assert(got.length == symA.length)
-      // EMA defined from row 10 onward proves obs count survived restart
-      assert(got.drop(12).forall(_.getAs[Any]("ema_10") != null))
-      val clean = symA.foldLeft(
-        (StreamingIndicators.emptyState, Vector.empty[graft.model.EnrichedCandle])) {
-        case ((st, acc), c) =>
-          val (n, e) = StreamingIndicators.step(st, c)
-          (n, acc :+ e)
-      }._2
-      got.zip(clean).foreach { case (g, e) =>
-        assert(Option(g.getAs[Any]("ema_10")).map(_.asInstanceOf[Double]) == e.ema_10)
-      }
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("rows arriving unordered WITHIN a micro-batch are sorted before folding") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Candle]
