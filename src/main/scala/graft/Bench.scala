@@ -564,8 +564,8 @@ object Bench {
   }
 
   /** Replay the events table through the incremental streaming pipeline
-    * (dedup gate + flatMapGroupsWithState) in micro-batches; returns wall
-    * seconds for the whole replay.
+    * (one flatMapGroupsWithState: dedup + indicator fold) in micro-batches;
+    * returns wall seconds for the whole replay.
     */
   def streamReplay(
       spark: SparkSession,
@@ -598,11 +598,10 @@ object Bench {
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
     // After each data batch Spark runs an extra NO-DATA micro-batch to
-    // advance the watermark and evict state — for THIS pipeline that
-    // doubles the per-batch fixed cost (planning + state commit per
-    // stateful op) without changing a single output row: the dedup gate
-    // and the flatMapGroupsWithState fold both emit on arrival, never on
-    // watermark advance (watermark only bounds dedup-state retention).
+    // advance the watermark — for THIS pipeline that doubles the per-batch
+    // fixed cost (planning + the state commit) without changing a single
+    // output row: the fold emits on arrival, never on watermark advance
+    // (the watermark only filters late rows and bounds the seen set).
     // StreamBatchPropertySpec pins batch≡stream equality independently.
     // Do NOT copy this to the session/OHLC replays — their windows emit
     // ON watermark advance and need the no-data batches.

@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -18,10 +21,12 @@ import graft.model.{Candle, EnrichedCandle}
   *   - state per symbol = previous close, EMA accumulator, observation
   *     count, last-5 closes, last-10 defined gains/losses — a few hundred
   *     bytes regardless of history length;
-  *   - `withWatermark` + `dropDuplicates` replaces the reference's in-memory
-  *     `already_sent` set (consumer.py:27-28,199-205) with a bounded,
-  *     fault-tolerant dedup (the reference re-emits everything after
-  *     restart; we do not);
+  *   - the same state holds the symbol's seen event times above the
+  *     watermark, replacing the reference's in-memory `already_sent` set
+  *     (consumer.py:27-28,199-205) with a bounded, fault-tolerant dedup (the
+  *     reference re-emits everything after restart; we do not). Dedup and
+  *     fold are one stateful operator: one shuffle and one state-store
+  *     commit per micro-batch;
   *   - partitioned by symbol via `groupByKey` — scales horizontally with
   *     executors, unlike the single-process pandas loop.
   *
@@ -34,6 +39,9 @@ object StreamingIndicators {
     * gains (the first row of a key has null delta, hence no gain); pandas'
     * rolling(10, min_periods=10) over the gain column is null exactly while
     * the 10-row window still covers that first row, i.e. until obs >= 11.
+    * `seen` is the dedup set of [[pipeline]]: the symbol's folded
+    * `local_time`s above the watermark, in microseconds, ascending. `step`
+    * leaves it empty; `advanceGroup` owns it.
     */
   case class IndState(
       prevClose: Option[Double],
@@ -41,7 +49,8 @@ object StreamingIndicators {
       obs: Int,
       closes: Array[Double],
       gains: Array[Double],
-      losses: Array[Double])
+      losses: Array[Double],
+      seen: Array[Long] = Array.empty)
 
   private val alpha = 2.0 / 11.0
 
@@ -84,60 +93,76 @@ object StreamingIndicators {
   val emptyState: IndState =
     IndState(None, None, 0, Array.empty, Array.empty, Array.empty)
 
+  /** Event time in microseconds, as Spark stores it: rows in the same
+    * millisecond stay distinct, as they are for `dropDuplicates`.
+    */
+  private def micros(t: java.sql.Timestamp): Long = DateTimeUtils.fromJavaTimestamp(t)
+
   /** Total order on candles within a (symbol, batch) slice: time first,
     * then the payload, so equal-timestamp rows fold in a deterministic
     * order regardless of shuffle arrival.
     */
   private def candleSortKey(c: Candle) =
-    (c.local_time.getTime, c.close, c.open, c.high, c.low, c.volume)
+    (micros(c.local_time), c.close, c.open, c.high, c.low, c.volume)
 
-  private def advanceGroup(
+  /** Fold one symbol's micro-batch slice into its state. Rows within a
+    * micro-batch arrive unordered, so the slice is sorted first (cross-batch
+    * order is the source's responsibility). With `dedup`, a row whose time
+    * is already in `seen` is dropped, so the first delivery wins; among
+    * re-sends within one batch the smallest by `candleSortKey` wins. `seen`
+    * is then trimmed to times above the watermark, where the dedup state of
+    * `dropDuplicates` is evicted too; Spark's late-row filter drops anything
+    * older before it reaches here.
+    */
+  private def advanceGroup(dedup: Boolean)(
       key: String,
       rows: Iterator[Candle],
       state: GroupState[IndState]): Iterator[EnrichedCandle] = {
-    // rows within a micro-batch arrive unordered; sort this batch's slice.
-    // Tie-break on the payload so duplicate timestamps (possible when the
-    // caller skips the dedup gate) still fold deterministically.
-    // (cross-batch order is the source's responsibility; late rows are
-    // handled by the watermarked dedup upstream.)
-    val sorted = rows.toSeq.sortBy(candleSortKey)
     var st = state.getOption.getOrElse(emptyState)
-    val out = sorted.map { c =>
+    val seen = mutable.HashSet.from(st.seen)
+    val sorted = rows.toSeq.sortBy(candleSortKey)
+    val fresh = if (dedup) sorted.filter(c => seen.add(micros(c.local_time))) else sorted
+    val out = fresh.map { c =>
       val (next, enriched) = step(st, c)
       st = next
       enriched
+    }
+    if (dedup) {
+      val wm = state.getCurrentWatermarkMs() * 1000L
+      st = st.copy(seen = seen.iterator.filter(_ > wm).toArray.sorted)
     }
     state.update(st)
     out.iterator
   }
 
-  /** Candle stream -> enriched stream (append mode), incremental state. */
-  def enrichStream(candles: Dataset[Candle]): Dataset[EnrichedCandle] = {
+  /** Candle stream -> enriched stream (append mode), incremental state,
+    * no dedup and no watermark.
+    */
+  def enrichStream(candles: Dataset[Candle]): Dataset[EnrichedCandle] =
+    fold(candles, dedup = false)
+
+  /** Full pipeline: watermark -> one stateful operator that drops late rows
+    * and re-sends of a seen (symbol, local_time), then folds the rest.
+    * Emits exactly what `dropDuplicates("stock_symbol", "local_time")`
+    * followed by [[enrichStream]] emits under the same watermark.
+    */
+  def pipeline(candles: Dataset[Candle], watermark: String = "1 hour")
+      : Dataset[EnrichedCandle] =
+    fold(candles.withWatermark("local_time", watermark), dedup = true)
+
+  private def fold(candles: Dataset[Candle], dedup: Boolean): Dataset[EnrichedCandle] = {
     val spark = candles.sparkSession
     import spark.implicits._
+    // EventTimeTimeout (no timeout is ever set) is what makes Spark apply
+    // the late-row filter of `dropDuplicates` here: rows at or below the
+    // previous batch's watermark are dropped before the fold. It needs a
+    // watermark, which only `pipeline` sets.
+    val timeout = if (dedup) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
     candles
       .groupByKey(_.stock_symbol)
       .flatMapGroupsWithState[IndState, EnrichedCandle](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(advanceGroup)
+        OutputMode.Append, timeout)(advanceGroup(dedup))
   }
-
-  /** Watermarked dedup gate (replaces the reference's `already_sent` set,
-    * K6): at-most-one row per (symbol, local_time) within the watermark
-    * horizon, state evicted as the watermark advances.
-    */
-  def dedupGate(candles: Dataset[Candle], watermark: String): Dataset[Candle] = {
-    val spark = candles.sparkSession
-    import spark.implicits._
-    candles
-      .withWatermark("local_time", watermark)
-      .dropDuplicates("stock_symbol", "local_time")
-      .as[Candle]
-  }
-
-  /** Full pipeline: dedup gate -> incremental enrichment. */
-  def pipeline(candles: Dataset[Candle], watermark: String = "1 hour")
-      : Dataset[EnrichedCandle] =
-    enrichStream(dedupGate(candles, watermark))
 
   /** Persist the enriched stream into the day-partitioned store — the
     * replacement for the reference's row-at-a-time QuestDB sinks (K4/K5,

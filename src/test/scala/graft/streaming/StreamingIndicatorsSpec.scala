@@ -193,37 +193,166 @@ class StreamingIndicatorsSpec extends AnyFunSuite {
 
   test("dedup state is bounded: watermark advance evicts old keys") {
     // The reference's `already_sent` set grows forever (consumer.py:27-28).
-    // Our dedup keys live in the state store only within the watermark
-    // horizon; this asserts eviction actually happens via the state
-    // operator metrics.
+    // The pipeline's seen times live in the per-symbol state only above the
+    // watermark; this reads them back through the state-store data source.
     implicit val sqlCtx = spark.sqlContext
+    val ck = java.nio.file.Files.createTempDirectory("graft_evict").toString
     val input = MemoryStream[Candle]
     val query = StreamingIndicators
-      .dedupGate(input.toDS(), watermark = "10 minutes")
+      .pipeline(input.toDS(), watermark = "10 minutes")
       .writeStream
       .outputMode("append")
       .format("memory")
       .queryName("stream_evict")
+      .option("checkpointLocation", ck)
       .start()
 
     def candleAt(t: String) =
       Candle("AAA", Timestamp.valueOf(t), 1, 1, 1, 1, 1)
+    def seenTimes(): Int =
+      spark.read.format("statestore").load(ck)
+        .select(size(col("value.groupState.seen"))).head().getInt(0)
 
     // 50 keys at hour 10
     input.addData((0 until 50).map(i => candleAt(f"2024-01-01 10:00:$i%02d")))
     query.processAllAvailable()
-    val grow = query.lastProgress.stateOperators.head.numRowsTotal
-    assert(grow >= 50, s"expected >=50 state rows, got $grow")
+    val grow = seenTimes()
+    assert(grow == 50, s"expected 50 seen times, got $grow")
 
-    // jump event time to hour 13: watermark (12:50) passes all hour-10 keys
+    // jump event time to hour 13: the next batch's watermark (12:50)
+    // passes all hour-10 keys, and its fold trims them
     input.addData(Seq(candleAt("2024-01-01 13:00:00")))
     query.processAllAvailable()
-    // one more batch so eviction metrics settle
     input.addData(Seq(candleAt("2024-01-01 13:00:01")))
     query.processAllAvailable()
-    val after = query.lastProgress.stateOperators.head.numRowsTotal
+    val after = seenTimes()
     query.stop()
-    assert(after < 50, s"state not evicted: $after rows still held")
+    assert(after == 2, s"seen set not trimmed: $after times still held")
+  }
+
+  /** The composition `pipeline` replaced: a watermarked `dropDuplicates`
+    * operator, then the fold as its own stateful operator.
+    */
+  private def twoOperatorPipeline(candles: org.apache.spark.sql.Dataset[Candle],
+      watermark: String) =
+    StreamingIndicators.enrichStream(
+      candles.withWatermark("local_time", watermark)
+        .dropDuplicates("stock_symbol", "local_time"))
+
+  test("folded pipeline emits exactly the rows of watermark + dropDuplicates + enrichStream") {
+    def at(sym: String, t: String, close: Double) =
+      Candle(sym, Timestamp.valueOf(s"2024-01-01 $t"), close - 0.5, close + 1.0,
+        close - 1.0, close, 100.0 + close)
+    def minutes(sym: String, ms: Range, bias: Double) =
+      ms.map(m => at(sym, f"00:$m%02d:00", bias + m % 7 + m * 0.25))
+    // watermark 10 minutes; W(b) = max event time before batch b - 10 min
+    val batches = Seq(
+      // W = 0
+      minutes("AAA", 0 to 11, 10) ++ minutes("BBB", 0 to 11, 50) :+
+        at("BBB", "00:15:30", 60),
+      // late filter 0 (no-data batches off) or 00:05:30; eviction 00:05:30
+      Seq(at("AAA", "00:07:00", 99), at("AAA", "00:08:00", 98)) ++ // cross-batch re-sends, mutated
+        minutes("AAA", 12 to 25, 10) ++ minutes("BBB", 16 to 25, 50) ++
+        minutes("AAA", 20 to 20, 10) ++ // identical re-send in the batch
+        Seq(at("BBB", "00:04:30", 55), // between previous and current watermark
+          at("AAA", "00:26:00.0001", 20), at("AAA", "00:26:00.0004", 21)), // same ms
+      // late filter 00:05:30 (no-data off) or 00:16:00.0004; eviction 00:16:00.0004
+      Seq(at("AAA", "00:05:30", 97), // exactly at the previous batch's watermark
+        at("BBB", "00:05:30.000001", 96), // 1 us above it
+        at("BBB", "00:04:30", 95), // re-send of a row already below the watermark
+        at("AAA", "00:10:00", 94), // re-send two batches later, mutated
+        at("AAA", "00:12:30", 93)) ++ // between previous and current watermark
+        minutes("AAA", 27 to 35, 10) ++ minutes("BBB", 27 to 35, 50),
+      Seq(at("AAA", "00:12:30", 92), at("AAA", "00:20:00", 91),
+        at("AAA", "00:26:00.0001", 20)) ++ minutes("AAA", 36 to 40, 10))
+
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().toSeq.map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+        case t: Timestamp => s"${t.getTime}.${t.getNanos}"
+        case x => String.valueOf(x)
+      }.mkString("|")).sorted
+
+    for (noData <- Seq(true, false)) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noData.toString)
+      implicit val sqlCtx = s.sqlContext
+      import s.implicits._
+      val input = MemoryStream[Candle]
+      val queries = Seq(
+        StreamingIndicators.pipeline(input.toDS(), "10 minutes") -> "eq_fold",
+        twoOperatorPipeline(input.toDS(), "10 minutes") -> "eq_oracle"
+      ).map { case (ds, name) =>
+        ds.writeStream.outputMode("append").format("memory").queryName(name).start()
+      }
+      batches.foreach { b =>
+        input.addData(b)
+        queries.foreach(_.processAllAvailable())
+      }
+      val fold = rowsOf(s.table("eq_fold"))
+      val oracle = rowsOf(s.table("eq_oracle"))
+      val dropped = queries.head.recentProgress
+        .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+      queries.foreach(_.stop())
+
+      assert(fold == oracle, s"noDataMicroBatches=$noData:\n fold=$fold\n oracle=$oracle")
+      val times = s.table("eq_fold").as[graft.model.EnrichedCandle].collect()
+        .map(e => (e.stock_symbol, e.local_time.toString)).toSeq
+      assert(times.distinct.size == times.size, "a (symbol, time) was emitted twice")
+      assert(!times.contains(("AAA", "2024-01-01 00:05:30.0")))
+      assert(times.contains(("AAA", "2024-01-01 00:26:00.0001")) &&
+        times.contains(("AAA", "2024-01-01 00:26:00.0004")))
+      assert(dropped > 0, "no row went through the late filter")
+      if (!noData) {
+        assert(times.contains(("BBB", "2024-01-01 00:05:30.000001")))
+        assert(times.contains(("BBB", "2024-01-01 00:04:30.0")))
+        assert(times.contains(("AAA", "2024-01-01 00:12:30.0")))
+      }
+    }
+  }
+
+  test("re-sends with different payloads in one batch: the smallest by sort key wins") {
+    // dropDuplicates kept whichever copy reached it first; the fold sorts
+    // the batch by (time, close, open, high, low, volume) and keeps the first
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Candle]
+    val query = StreamingIndicators.pipeline(input.toDS(), watermark = "10 minutes")
+      .writeStream.outputMode("append").format("memory")
+      .queryName("stream_resend_payload").start()
+    val t = Timestamp.valueOf("2024-01-01 10:00:00")
+    input.addData(Seq(Candle("AAA", t, 1, 1, 1, 7, 1), Candle("AAA", t, 1, 1, 1, 3, 1),
+      Candle("AAA", t, 1, 1, 1, 5, 1)))
+    query.processAllAvailable()
+    val got = spark.table("stream_resend_payload").collect()
+    query.stop()
+    assert(got.map(_.getAs[Double]("close")).toSeq == Seq(3.0))
+  }
+
+  test("a checkpoint of the two-operator plan fails to restart instead of losing dedup") {
+    // The folded pipeline keeps its dedup in the indicator state; the
+    // previous plan kept it in a separate dropDuplicates operator. Restarting
+    // on such a checkpoint must fail, not run with an empty seen set.
+    implicit val sqlCtx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft_old_ck").toString
+    val input = MemoryStream[Candle]
+    def start(ds: org.apache.spark.sql.Dataset[graft.model.EnrichedCandle]) =
+      ds.writeStream.outputMode("append").format("parquet")
+        .option("path", s"$base/out").option("checkpointLocation", s"$base/ck").start()
+
+    val old = start(twoOperatorPipeline(input.toDS(), "10 minutes"))
+    input.addData(symA.take(6))
+    old.processAllAvailable()
+    old.stop()
+
+    val folded = start(StreamingIndicators.pipeline(input.toDS(), "10 minutes"))
+    input.addData(symA.slice(2, 8))
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      folded.processAllAvailable()
+    }
+    folded.stop()
+    assert(err.getMessage.contains("STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"),
+      err.getMessage)
+    assert(spark.read.parquet(s"$base/out").count() == 6)
   }
 
   test("windowed OHLC bars: watermarked tumbling aggregation, late rows dropped") {
