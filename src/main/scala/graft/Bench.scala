@@ -1,6 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.Properties
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SQLContext, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 /** Bench contract: one JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -9,25 +16,27 @@ import org.apache.spark.sql.SparkSession
   * the indicator pipeline (MemoryStream-fed, measured as wall seconds; the
   * replayed record rate is printed to stderr for BASELINE.md).
   * A failing entry is named on stderr, gets no time (`"status":"error"`
-  * in the timing artifact) and makes Bench exit 1 after its output.
+  * in the timing artifact) and makes Bench exit 1 after its output, as
+  * does a timing artifact that cannot be written.
+  *
+  * The timing artifact records, per entry, where its seconds went: the
+  * share spent building the DataFrame (`construct`, where eager sub-jobs
+  * run) and the Spark jobs, stages, task time and shuffle bytes it caused
+  * ([[Meter]]). `SPARK_GRAFT_ONLY=a,b,...` runs only the named entries:
+  * the isolated probe for one slow entry.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "graft.ops.LocalTail", org.apache.logging.log4j.Level.INFO)
+    val meter = new Meter
+    spark.sparkContext.addSparkListener(meter)
 
-    // Optional subset run (dev / scale-rehearsal tooling): a comma-
+    // Optional subset run (isolated probes, scale rehearsals): a comma-
     // separated SPARK_GRAFT_ONLY limits both the streaming replays and
     // the batch sweep to the named entries. The driver never sets it.
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
@@ -35,7 +44,7 @@ object Bench {
     def want(name: String): Boolean = only.forall(_.contains(name))
 
     // entry name -> error, for every run that threw
-    val failures = scala.collection.mutable.LinkedHashMap[String, String]()
+    val failures = mutable.LinkedHashMap[String, String]()
     def attempt[T](name: String)(body: => T): Option[T] =
       try Some(body)
       catch { case scala.util.control.NonFatal(e) =>
@@ -57,14 +66,14 @@ object Bench {
       SparkEntry.queries("q_agg_avg")(spark, sfDir).count()
     }
 
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def record(name: String)(run: => Double): Unit =
-      if (want(name)) attempt(name)(run).foreach(results(name) = _)
+    val results = mutable.LinkedHashMap[String, Timed]()
+    def record(name: String)(run: String => Timed): Unit =
+      if (want(name)) attempt(name)(run(name)).foreach(results(name) = _)
     // Warm (repeat-run) timings for entries re-run after their cold run —
     // the self-adjudication channel for session-age/codegen-cold noise:
     // a cold reading far above its own warm repeat is JVM state, not a
     // plan regression (the r4/r5/r6 tail clusters all had this signature).
-    val warmRuns = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val warmRuns = mutable.LinkedHashMap[String, Double]()
     // Streaming replays run FIRST (right after warm-up): their cost is
     // dominated by per-micro-batch planning/state-commit latency, which
     // measurably inflates with accumulated session/JVM state (isolated
@@ -73,37 +82,37 @@ object Bench {
     // a fresh session state reports the number the pipeline actually has;
     // the batch queries are insensitive to position (verified across
     // rounds) and keep their alphabetical order below.
-    record("stream_indicators")(streamReplay(spark, sfDir))
+    record("stream_indicators")(streamReplay(spark, sfDir, _, batches = 20))
     // same pipeline at bulk cadence (4 large batches): shows the per-batch
     // fixed cost amortizing away — the throughput number that scales
-    record("stream_indicators_bulk")(streamReplay(spark, sfDir, batches = 4))
+    record("stream_indicators_bulk")(streamReplay(spark, sfDir, _, batches = 4))
     // LLM-data streaming path: documents through dedup/quality/chunking
-    record("stream_docs")(docStreamReplay(spark, sfDir))
+    record("stream_docs")(docStreamReplay(spark, sfDir, _))
     // native session_window sessionization over the events replay
-    record("stream_sessions")(sessionStreamReplay(spark, sfDir))
+    record("stream_sessions")(sessionStreamReplay(spark, sfDir, _))
     // live Pareto-frontier maintenance over the part-table replay
-    record("stream_skyline")(skylineStreamReplay(spark, sfDir))
+    record("stream_skyline")(skylineStreamReplay(spark, sfDir, _))
     // stateless stream-static near-dup gate: incoming docs vs a static
     // corpus band index (the zero-state ingest-dedup path)
-    record("stream_cross_dedup")(crossDedupReplay(spark, sfDir))
+    record("stream_cross_dedup")(crossDedupReplay(spark, sfDir, _))
     // one-pass submodular maximization (SieveStreaming), 4 shards
-    record("stream_sieve")(sieveStreamReplay(spark, sfDir))
+    record("stream_sieve")(sieveStreamReplay(spark, sfDir, _))
     // stream-static substring-dedup gate: incoming docs' CDC chunk
     // fingerprints probed against the static corpus chunk index
-    record("stream_substr_dedup")(substrDedupReplay(spark, sfDir))
+    record("stream_substr_dedup")(substrDedupReplay(spark, sfDir, _))
     // residual-IVF-PQ ANN serving: streamed query batches answered by
     // ADC over residual codes + exact per-cell correction (the serving
     // leg of q_knn_ivfpq_res)
-    record("stream_ann_res")(annResReplay(spark, sfDir))
+    record("stream_ann_res")(annResReplay(spark, sfDir, _))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => want(kv._1)).foreach { case (name, fn) =>
-      record(name)(secs(fn(spark, sfDir).count()))
+      record(name)(timed(spark, _)(fn(spark, sfDir))(_.count())._2)
       // Immediate repeat for the non-trivial entries (>0.5 s cold): same
       // plan, codegen/classloading now warm. Cheap (warm << cold for the
       // noise-dominated cases, and sub-0.5 s entries are skipped), and it
       // lets a future verdict separate real regressions from cold-JVM
       // artifacts without a separate isolated-replay session.
-      if (results.get(name).exists(_ > 0.5))
+      if (results.get(name).exists(_.secs > 0.5))
         attempt(name)(secs(fn(spark, sfDir).count())) match {
           case Some(warm) => warmRuns(name) = warm
           case None => results.remove(name)
@@ -119,36 +128,44 @@ object Bench {
     }
     // end-to-end BATCH curation: exact dedup -> near-dup components ->
     // quality -> PII scrub -> chunk -> pack, one composed job
-    record("pipeline_curate")(secs(
+    record("pipeline_curate")(timed(spark, _)(
       graft.pipelines.CorpusPipeline
-        .curate(graft.model.Tables.documents(spark, sfDir)).count()))
+        .curate(graft.model.Tables.documents(spark, sfDir)))(_.count())._2)
     // store maintenance under small-file pressure: compact a sliver-heavy
     // day-partitioned store (the streaming-sink debris pattern) into
     // right-sized files
-    record("pipeline_compact")(compactReplay(spark, sfDir))
+    record("pipeline_compact")(compactReplay(spark, sfDir, _))
 
     val qs = results
-      .map { case (k, v) => "\"" + k + "\":" + v }
+      .map { case (k, v) => "\"" + k + "\":" + v.secs }
       .mkString("{", ",", "}")
-    val total = results.values.sum
+    val total = results.values.map(_.secs).sum
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
+    // stopping the context drains the listener bus, so the meter has
+    // every event of every entry before the artifact reads it
+    spark.stop()
     // Full per-entry timing artifact (the driver's BENCH_r*.json keeps only
     // a truncated tail): every entry's cold (first-run) seconds plus, for
-    // entries >0.5 s, the immediate warm repeat — committed per round as
-    // tools/bench_timings_r{N}.json so verdicts can machine-diff the whole
-    // registry and self-adjudicate cold-JVM tail clusters.
+    // entries >0.5 s, the immediate warm repeat, and the per-entry Spark
+    // work — committed per round as tools/bench_timings_r{N}.json so
+    // verdicts can machine-diff the whole registry.
     val timingsOut = sys.env.getOrElse(
       "SPARK_GRAFT_TIMINGS_OUT", "tools/bench_timings_latest.json")
-    try {
+    val written = try {
       // Locale.ROOT formatting: the f-interpolator uses the JVM default
       // locale, and a comma-decimal locale would emit invalid JSON
       def num(v: Double, digits: Int): String =
         String.format(java.util.Locale.ROOT, s"%.${digits}f",
           Double.box(v))
-      val ok = results.map { case (k, cold) =>
+      val ok = results.map { case (k, t) =>
         val warm = warmRuns.get(k).map(w => num(w, 4)).getOrElse("null")
-        s""""$k":{"status":"ok","cold":${num(cold, 4)},"warm":$warm}"""
+        val built = meter(k + ConstructTag)
+        val all = built + meter(k)
+        s""""$k":{"status":"ok","cold":${num(t.secs, 4)},"warm":$warm,""" +
+          s""""construct":${num(t.construct, 4)},"jobs":${all.jobIds.size},""" +
+          s""""construct_jobs":${built.jobIds.size},"stages":${all.stages},""" +
+          s""""task_ms":${all.taskMs},"shuffle_bytes":${all.shuffleBytes}}"""
       }
       val failed = failures.map { case (k, err) =>
         val msg = err.replaceAll("[\"\\\\\\p{Cntrl}]", " ")
@@ -161,12 +178,148 @@ object Bench {
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(p, body.getBytes("UTF-8"))
       System.err.println(s"[bench] full timing map -> $timingsOut")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] timing artifact write failed: $e")
+      true
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] timing artifact write FAILED: $e")
+      false
     }
-    spark.stop()
-    if (failures.nonEmpty) sys.exit(1)
+    if (failures.nonEmpty || !written) sys.exit(1)
   }
+
+  /** Job-local property naming the bench entry whose run started a job. */
+  val EntryKey = "graft.bench.entry"
+  /** Suffix of [[EntryKey]] while the entry builds its DataFrame. */
+  val ConstructTag = "/construct"
+  /** Replay chunking: rows per micro-batch = rows / Batches (or more). */
+  val Batches = 4
+  /** Shuffle (= state-store) partitions of every replay. State-store
+    * partition count is fixed at query start from shuffle.partitions;
+    * with a handful of keys, one per core (32 at c32) is pure per-batch
+    * commit overhead. 8 keeps headroom without the fan-out cost.
+    */
+  val StatePartitions = 8
+
+  /** Seconds of one timed run, and how many of them went to building its
+    * DataFrame (for a replay: its streaming DataFrame and writer).
+    */
+  final case class Timed(secs: Double, construct: Double)
+
+  /** The Spark work attributed to one tag. */
+  final case class Work(jobIds: Vector[Int] = Vector.empty, stages: Int = 0,
+      taskMs: Long = 0L, shuffleBytes: Long = 0L) {
+    def +(o: Work): Work = Work(jobIds ++ o.jobIds, stages + o.stages,
+      taskMs + o.taskMs, shuffleBytes + o.shuffleBytes)
+  }
+
+  /** Attributes every Spark job, and the stages it submits, to the tag in
+    * its [[EntryKey]] job-local property: jobs, completed stages, task
+    * (executor run) milliseconds and shuffle bytes written. Attribution is
+    * by property, not by time window, so an event delivered late still
+    * lands on the run that caused it; untagged jobs (warm-up, warm
+    * repeats, replay setup) are ignored. Read it after the listener bus
+    * has delivered its events (stopping the context drains it).
+    */
+  final class Meter extends SparkListener {
+    private val work = mutable.Map[String, Work]()
+    private val stageTags = mutable.Map[(Int, Int), String]()
+
+    private def tag(p: Properties): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty(EntryKey)))
+    private def add(t: String)(f: Work => Work): Unit =
+      work.synchronized(work(t) = f(work.getOrElse(t, Work())))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      tag(e.properties).foreach(add(_)(w => w.copy(jobIds = w.jobIds :+ e.jobId)))
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      tag(e.properties).foreach { t =>
+        stageTags.synchronized(
+          stageTags((e.stageInfo.stageId, e.stageInfo.attemptNumber())) = t)
+      }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val i = e.stageInfo
+      stageTags.synchronized(stageTags.remove((i.stageId, i.attemptNumber())))
+        .foreach(add(_) { w =>
+          val m = Option(i.taskMetrics)
+          w.copy(stages = w.stages + 1,
+            taskMs = w.taskMs + m.map(_.executorRunTime).getOrElse(0L),
+            shuffleBytes = w.shuffleBytes +
+              m.map(_.shuffleWriteMetrics.bytesWritten).getOrElse(0L))
+        })
+    }
+
+    def apply(tag: String): Work = work.synchronized(work.getOrElse(tag, Work()))
+  }
+
+  /** Run `body` with the [[EntryKey]] job-local property set to `tag`. */
+  private def tagged[T](spark: SparkSession, tag: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(EntryKey)
+    sc.setLocalProperty(EntryKey, tag)
+    try body finally sc.setLocalProperty(EntryKey, prev)
+  }
+
+  /** Time `build`, then `act` on what it built, as entry `entry`: the jobs
+    * `build` starts are tagged `entry` + [[ConstructTag]], those `act`
+    * starts `entry`.
+    */
+  private[graft] def timed[A, R](spark: SparkSession, entry: String)(
+      build: => A)(act: A => R): (R, Timed) = {
+    val t0 = System.nanoTime()
+    val built = tagged(spark, entry + ConstructTag)(build)
+    val t1 = System.nanoTime()
+    val r = tagged(spark, entry)(act(built))
+    val t2 = System.nanoTime()
+    (r, Timed((t2 - t0) / 1e9, (t1 - t0) / 1e9))
+  }
+
+  /** Feed `rows` through a stream in chunks of `rows / batches` (at least
+    * `minChunk`), each processed to completion, with the session confs
+    * `conf` and shuffle partitions = [[StatePartitions]] in force
+    * (restored afterwards, also on failure, so the batch sweep that
+    * follows sees the session unchanged). Timed from building the stream
+    * (`writer`) to computing `result` once every chunk is processed; the
+    * query is stopped after the timer, in every case.
+    */
+  private[graft] def feed[T: Encoder, R](spark: SparkSession, entry: String,
+      rows: Seq[T], minChunk: Int, batches: Int = Batches,
+      conf: Map[String, String] = Map.empty)(
+      writer: Dataset[T] => DataStreamWriter[_])(result: => R): (R, Timed) = {
+    implicit val sqlCtx: SQLContext = spark.sqlContext
+    val input = MemoryStream[T]
+    val set = conf + ("spark.sql.shuffle.partitions" -> StatePartitions.toString)
+    val prev = set.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    set.foreach { case (k, v) => spark.conf.set(k, v) }
+    var query: Option[StreamingQuery] = None
+    try timed(spark, entry)(writer(input.toDS())) { w =>
+      val q = w.start()
+      query = Some(q)
+      rows.grouped(math.max(minChunk, rows.length / batches)).foreach { chunk =>
+        input.addData(chunk)
+        q.processAllAvailable()
+      }
+      result
+    } finally {
+      query.foreach(_.stop())
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
+  /** [[feed]] into an append-mode memory sink named `entry`; `result`
+    * reads the sink's table. The sink holds every output row in the
+    * driver, so it is dropped afterwards, also on failure (a retry under
+    * the same name could not start otherwise).
+    */
+  private[graft] def replay[T: Encoder, R](spark: SparkSession, entry: String,
+      rows: Seq[T], minChunk: Int, batches: Int = Batches,
+      conf: Map[String, String] = Map.empty)(
+      operator: Dataset[T] => Dataset[_])(result: DataFrame => R): (R, Timed) =
+    try feed(spark, entry, rows, minChunk, batches, conf)(
+      operator(_).writeStream.outputMode("append").format("memory")
+        .queryName(entry))(result(spark.table(entry)))
+    finally spark.catalog.dropTempView(entry)
 
   /** Small-file compaction: seed a day-partitioned store with the sliver
     * debris a micro-batch sink leaves behind (64 writer tasks x every
@@ -175,7 +328,7 @@ object Bench {
     * setup, not part of the measured window; before/after file counts go
     * to stderr and the collapse is asserted.
     */
-  def compactReplay(spark: SparkSession, sfDir: String): Double = {
+  def compactReplay(spark: SparkSession, sfDir: String, entry: String): Timed = {
     import org.apache.spark.sql.functions._
     val root = java.nio.file.Files.createTempDirectory("graft_compact").toString
     val src = s"$root/src"
@@ -198,27 +351,25 @@ object Bench {
       n
     }
     val before = parquetFiles(src)
-    val t0 = System.nanoTime()
-    graft.sources.PartitionedStore.compactInto(spark, src, dst,
-      targetFileBytes = 8L * 1024 * 1024)
-    val secs = (System.nanoTime() - t0) / 1e9
+    val (_, t) = timed(spark, entry)(()) { _ =>
+      graft.sources.PartitionedStore.compactInto(spark, src, dst,
+        targetFileBytes = 8L * 1024 * 1024)
+    }
     val after = parquetFiles(dst)
     require(after < before,
       s"compaction must collapse files: $before -> $after")
     System.err.println(
-      f"[bench] pipeline_compact: $before files -> $after files in $secs%.2f s")
+      f"[bench] $entry: $before files -> $after files in ${t.secs}%.2f s")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    secs
+    t
   }
 
   /** Replay the documents table through the streaming doc pipeline
-    * (content-hash dedup -> quality gate -> chunking) in micro-batches;
-    * returns wall seconds (doc rate to stderr).
+    * (content-hash dedup -> quality gate -> chunking) in micro-batches
+    * (doc rate to stderr).
     */
-  def docStreamReplay(
-      spark: SparkSession, sfDir: String, batches: Int = 4): Double = {
+  def docStreamReplay(spark: SparkSession, sfDir: String, entry: String): Timed = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions._
     val docs = graft.model.Tables.documents(spark, sfDir)
       .select(
@@ -232,107 +383,75 @@ object Bench {
       // event-time order, like streamReplay: replaying out of order would
       // silently drop watermark-late rows and flatter the docs/s number
       .orderBy("ingest_ts")
-      .collect()
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[graft.streaming.DocStream.DocEvent]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val t0 = System.nanoTime()
-      val query = graft.streaming.DocStream.pipeline(input.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("bench_docs").start()
-      try {
-        docs.grouped(math.max(1000, docs.length / batches)).foreach { chunk =>
-          input.addData(chunk.toIndexedSeq)
-          query.processAllAvailable()
-        }
-        val n = spark.table("bench_docs").count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[bench] stream_docs: ${docs.length} docs -> $n chunks in $secs%.2f s = ${docs.length / secs}%.0f docs/s")
-        secs
-      } finally {
-        query.stop()
-        // the memory sink holds every output row in the driver: drop it
-        // (in finally, so a failed replay can be retried in-session and
-        // the rows cannot pressure the batch sweep that follows)
-        spark.catalog.dropTempView("bench_docs")
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      .collect().toSeq
+    val (n, t) = replay(spark, entry, docs, 1000)(
+      graft.streaming.DocStream.pipeline(_))(_.count())
+    System.err.println(
+      f"[bench] $entry: ${docs.length} docs -> $n chunks in ${t.secs}%.2f s = ${docs.length / t.secs}%.0f docs/s")
+    t
   }
 
   /** Replay the incoming tenth of the documents through the
     * stream-static [[graft.streaming.CrossDedupGate]] against the
-    * other nine tenths' pre-built band index; returns wall seconds
-    * (docs/s to stderr). No state store, no watermark — the measured
-    * cost is 4 hash joins per micro-batch plus the one-time index
-    * build (reported separately, since at scale it is a persisted
-    * table refreshed by a batch job, not per-stream work).
+    * other nine tenths' pre-built band index (docs/s to stderr). No
+    * state store, no watermark — the measured cost is 4 hash joins per
+    * micro-batch; the one-time index build is reported separately, since
+    * at scale it is a persisted table refreshed by a batch job, not
+    * per-stream work.
     */
-  def crossDedupReplay(
-      spark: SparkSession, sfDir: String, batches: Int = 4): Double = {
+  def crossDedupReplay(spark: SparkSession, sfDir: String, entry: String): Timed =
+    dedupGateReplay(spark, sfDir, entry, "gated",
+      graft.streaming.CrossDedupGate.corpusIndex(_),
+      graft.streaming.CrossDedupGate.gate(_, _))
+
+  /** Replay the incoming tenth of the documents through the
+    * stream-static [[graft.streaming.SubstrDedupGate]] against the
+    * other nine tenths' chunk-fingerprint index (docs/s to stderr), like
+    * [[crossDedupReplay]]'s band index.
+    */
+  def substrDedupReplay(spark: SparkSession, sfDir: String, entry: String): Timed =
+    dedupGateReplay(spark, sfDir, entry, "verdicts",
+      graft.streaming.SubstrDedupGate.corpusIndex(_),
+      graft.streaming.SubstrDedupGate.gate(_, _))
+
+  /** The two stream-static dedup gates share their replay: index the
+    * nine tenths of the documents whose id is not 0 mod 10 (persisted,
+    * build time to stderr), then stream the remaining tenth through
+    * `gate` against it, one doc per 100 ms of event time.
+    */
+  private def dedupGateReplay(spark: SparkSession, sfDir: String,
+      entry: String, noun: String, corpusIndex: DataFrame => DataFrame,
+      gate: (Dataset[graft.streaming.DocStream.DocEvent], DataFrame) => Dataset[_]): Timed = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions._
     val allDocs = graft.model.Tables.documents(spark, sfDir)
     val tIdx = System.nanoTime()
-    val index = graft.streaming.CrossDedupGate
-      .corpusIndex(allDocs.filter(pmod(col("doc_id"), lit(10)) =!= 0))
+    val index = corpusIndex(allDocs.filter(pmod(col("doc_id"), lit(10)) =!= 0))
       .persist()
     val idxRows = index.count()
-    System.err.println(f"[bench] stream_cross_dedup: index $idxRows rows" +
+    System.err.println(f"[bench] $entry: index $idxRows rows" +
       f" built in ${(System.nanoTime() - tIdx) / 1e9}%.2f s (one-time)")
-    val docs = allDocs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      .select(col("doc_id"),
-        expr("timestamp_millis(1704067200000 + doc_id * 100)").as("ingest_ts"),
-        col("lang"), col("text"))
-      .as[graft.streaming.DocStream.DocEvent]
-      .orderBy("ingest_ts")
-      .collect()
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[graft.streaming.DocStream.DocEvent]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try {
-      val t0 = System.nanoTime()
-      val query = graft.streaming.CrossDedupGate.gate(input.toDS(), index)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("bench_xdedup").start()
-      try {
-        docs.grouped(math.max(500, docs.length / batches)).foreach { chunk =>
-          input.addData(chunk.toIndexedSeq)
-          query.processAllAvailable()
-        }
-        val n = spark.table("bench_xdedup").count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[bench] stream_cross_dedup: ${docs.length} docs -> $n gated" +
-            f" in $secs%.2f s = ${docs.length / secs}%.0f docs/s")
-        secs
-      } finally {
-        query.stop()
-        spark.catalog.dropTempView("bench_xdedup")
-      }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      index.unpersist()
-    }
+      val docs = allDocs.filter(pmod(col("doc_id"), lit(10)) === 0)
+        .select(col("doc_id"),
+          expr("timestamp_millis(1704067200000 + doc_id * 100)").as("ingest_ts"),
+          col("lang"), col("text"))
+        .as[graft.streaming.DocStream.DocEvent]
+        .orderBy("ingest_ts")
+        .collect().toSeq
+      val (n, t) = replay(spark, entry, docs, 500)(gate(_, index))(_.count())
+      System.err.println(
+        f"[bench] $entry: ${docs.length} docs -> $n $noun" +
+          f" in ${t.secs}%.2f s = ${docs.length / t.secs}%.0f docs/s")
+      t
+    } finally index.unpersist()
   }
 
-  /** Replay the part table through the streaming Pareto-frontier
-    * changelog ([[graft.streaming.SkylineStream]]) in micro-batches;
-    * returns wall seconds (row rate to stderr). Arrival order is a
-    * deterministic hash shuffle — the adversarial case for frontier
-    * churn (sorted-by-price arrivals would evict almost nothing).
+  /** SieveStreaming max-coverage over the documents table, 4 shards —
+    * the one-pass submodular twin of q_max_coverage.
     */
-  /** SieveStreaming max-coverage over the documents table, 4 shards,
-    * 4 micro-batches — the one-pass submodular twin of q_max_coverage.
-    */
-  def sieveStreamReplay(
-      spark: SparkSession, sfDir: String, batches: Int = 4): Double = {
+  def sieveStreamReplay(spark: SparkSession, sfDir: String, entry: String): Timed = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions._
     val docs = graft.model.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).as[(Long, String)]
@@ -344,150 +463,60 @@ object Bench {
         graft.streaming.SieveStream.Doc((id % 4).toInt, id, bg)
       }
       .filter(_.bigrams.nonEmpty).sortBy(_.docId)
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[graft.streaming.SieveStream.Doc]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val t0 = System.nanoTime()
-      val query = graft.streaming.SieveStream.run(input.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("bench_sieve").start()
-      try {
-        docs.grouped(math.max(500, docs.length / batches)).foreach { chunk =>
-          input.addData(chunk.toIndexedSeq)
-          query.processAllAvailable()
-        }
-        val best = spark.table("bench_sieve")
-          .as[graft.streaming.SieveStream.Best].collect()
-          .groupBy(_.shard).map(_._2.maxBy(_.version).value).sum
-        val secs = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[bench] stream_sieve: ${docs.length} docs -> summed shard " +
-            f"coverage $best in $secs%.2f s = ${docs.length / secs}%.0f doc/s")
-        secs
-      } finally {
-        // drop in finally: a throw mid-replay must not leave the memory
-        // sink registered, or a same-session retry dies at queryName(...)
-        // .start() with view-already-exists
-        query.stop()
-        spark.catalog.dropTempView("bench_sieve")
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
-
-  /** Replay the incoming tenth of the documents through the
-    * stream-static [[graft.streaming.SubstrDedupGate]] against the
-    * other nine tenths' chunk-fingerprint index; returns wall seconds
-    * (docs/s to stderr). The one-time index build is reported
-    * separately (a persisted batch-refreshed table at scale), like
-    * [[crossDedupReplay]]'s band index.
-    */
-  def substrDedupReplay(
-      spark: SparkSession, sfDir: String, batches: Int = 4): Double = {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    val allDocs = graft.model.Tables.documents(spark, sfDir)
-    val tIdx = System.nanoTime()
-    val index = graft.streaming.SubstrDedupGate
-      .corpusIndex(allDocs.filter(pmod(col("doc_id"), lit(10)) =!= 0))
-      .persist()
-    val idxRows = index.count()
-    System.err.println(f"[bench] stream_substr_dedup: index $idxRows rows" +
-      f" built in ${(System.nanoTime() - tIdx) / 1e9}%.2f s (one-time)")
-    val docs = allDocs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      .select(col("doc_id"),
-        expr("timestamp_millis(1704067200000 + doc_id * 100)").as("ingest_ts"),
-        col("lang"), col("text"))
-      .as[graft.streaming.DocStream.DocEvent]
-      .orderBy("ingest_ts")
-      .collect()
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[graft.streaming.DocStream.DocEvent]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val t0 = System.nanoTime()
-      val query = graft.streaming.SubstrDedupGate.gate(input.toDS(), index)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("bench_substr").start()
-      try {
-        docs.grouped(math.max(500, docs.length / batches)).foreach { chunk =>
-          input.addData(chunk.toIndexedSeq)
-          query.processAllAvailable()
-        }
-        val n = spark.table("bench_substr").count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[bench] stream_substr_dedup: ${docs.length} docs -> $n " +
-            f"verdicts in $secs%.2f s = ${docs.length / secs}%.0f docs/s")
-        secs
-      } finally {
-        query.stop()
-        spark.catalog.dropTempView("bench_substr")
-      }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      index.unpersist()
+    val (best, t) = replay(spark, entry, docs, 500)(
+      graft.streaming.SieveStream.run(_)) {
+      _.as[graft.streaming.SieveStream.Best].collect()
+        .groupBy(_.shard).map(_._2.maxBy(_.version).value).sum
     }
+    System.err.println(
+      f"[bench] $entry: ${docs.length} docs -> summed shard " +
+        f"coverage $best in ${t.secs}%.2f s = ${docs.length / t.secs}%.0f doc/s")
+    t
   }
 
   /** Stream the first 64 corpus vectors as query batches through the
-    * residual-IVF-PQ serving path ([[graft.streaming.AnnServe.startRes]])
+    * residual-IVF-PQ serving path ([[graft.streaming.AnnServe.writerRes]])
     * and measure the per-batch answer cost; the one-time index build is
     * reported separately to stderr (at scale it is a persisted artifact,
     * not per-stream work). Queries/s to stderr.
     */
-  def annResReplay(
-      spark: SparkSession, sfDir: String, batches: Int = 4): Double = {
+  def annResReplay(spark: SparkSession, sfDir: String, entry: String): Timed = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions._
     val corpus = graft.model.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val tIdx = System.nanoTime()
     val served = graft.ops.IvfPq.buildServedResidual(corpus)
-    served.idx.cellCodes.count() // materialize the cached codes
-    System.err.println(f"[bench] stream_ann_res: residual index built in " +
-      f"${(System.nanoTime() - tIdx) / 1e9}%.2f s (one-time)")
-    val queryVecs = corpus.filter(col("vec_id") < 64).collect()
-      .map(r => graft.streaming.AnnServe.QueryVec(
-        r.getLong(0), r.getSeq[Float](1).toArray))
-      .sortBy(_.q_id)
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[graft.streaming.AnnServe.QueryVec]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try {
+      served.idx.cellCodes.count() // materialize the cached codes
+      System.err.println(f"[bench] $entry: residual index built in " +
+        f"${(System.nanoTime() - tIdx) / 1e9}%.2f s (one-time)")
+      val queryVecs = corpus.filter(col("vec_id") < 64).collect()
+        .map(r => graft.streaming.AnnServe.QueryVec(
+          r.getLong(0), r.getSeq[Float](1).toArray))
+        .sortBy(_.q_id).toSeq
       var answered = 0L
-      val t0 = System.nanoTime()
-      val query = graft.streaming.AnnServe.startRes(input.toDS(), served,
-        nprobe = 4, topK = 5, shortlist = 32) { (df, _) =>
-        answered += df.count()
-      }
-      try {
-        queryVecs.grouped(math.max(8, queryVecs.length / batches)).foreach { chunk =>
-          input.addData(chunk.toIndexedSeq)
-          query.processAllAvailable()
-        }
-        val secs = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[bench] stream_ann_res: ${queryVecs.length} queries -> " +
-            f"$answered neighbour rows in $secs%.2f s = " +
-            f"${queryVecs.length / secs}%.1f queries/s")
-        secs
-      } finally query.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      served.close()
-    }
+      val (_, t) = feed(spark, entry, queryVecs, 8)(
+        graft.streaming.AnnServe.writerRes(_, served,
+          nprobe = 4, topK = 5, shortlist = 32) { (df, _) =>
+          answered += df.count()
+        })(())
+      System.err.println(
+        f"[bench] $entry: ${queryVecs.length} queries -> " +
+          f"$answered neighbour rows in ${t.secs}%.2f s = " +
+          f"${queryVecs.length / t.secs}%.1f queries/s")
+      t
+    } finally served.close()
   }
 
-  def skylineStreamReplay(
-      spark: SparkSession, sfDir: String, batches: Int = 4): Double = {
+  /** Replay the part table through the streaming Pareto-frontier
+    * changelog ([[graft.streaming.SkylineStream]]) in micro-batches
+    * (row rate to stderr). Arrival order is a deterministic hash
+    * shuffle — the adversarial case for frontier churn (sorted-by-price
+    * arrivals would evict almost nothing).
+    */
+  def skylineStreamReplay(spark: SparkSession, sfDir: String, entry: String): Timed = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions._
     val pts = graft.model.Tables.part(spark, sfDir)
       .select(col("p_brand").as("brand"),
@@ -495,87 +524,42 @@ object Bench {
       .as[graft.streaming.SkylineStream.Pt]
       .collect()
       .sortBy(p => (p.brand.hashCode * 31 + p.size) ^
-        java.lang.Double.hashCode(p.price))
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[graft.streaming.SkylineStream.Pt]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val t0 = System.nanoTime()
-      val query = graft.streaming.SkylineStream.changelog(input.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("bench_skyline").start()
-      try {
-        pts.grouped(math.max(1000, pts.length / batches)).foreach { chunk =>
-          input.addData(chunk.toIndexedSeq)
-          query.processAllAvailable()
-        }
-        val n = spark.table("bench_skyline").count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[bench] stream_skyline: ${pts.length} rows -> $n changelog " +
-            f"entries in $secs%.2f s = ${pts.length / secs}%.0f rec/s")
-        secs
-      } finally {
-        query.stop()
-        spark.catalog.dropTempView("bench_skyline")
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        java.lang.Double.hashCode(p.price)).toSeq
+    val (n, t) = replay(spark, entry, pts, 1000)(
+      graft.streaming.SkylineStream.changelog(_))(_.count())
+    System.err.println(
+      f"[bench] $entry: ${pts.length} rows -> $n changelog " +
+        f"entries in ${t.secs}%.2f s = ${pts.length / t.secs}%.0f rec/s")
+    t
   }
 
   /** Replay the events table through the native session_window
-    * sessionizer ([[graft.streaming.SessionStream]]) in micro-batches;
-    * returns wall seconds (sessions/s to stderr).
+    * sessionizer ([[graft.streaming.SessionStream]]) in micro-batches
+    * (sessions/s to stderr).
     */
-  def sessionStreamReplay(
-      spark: SparkSession, sfDir: String, batches: Int = 4): Double = {
+  def sessionStreamReplay(spark: SparkSession, sfDir: String, entry: String): Timed = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions._
     val events = graft.model.Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))
       .as[graft.streaming.SessionStream.SessionEvent]
       .orderBy("ts") // event-time replay, same rationale as stream_docs
-      .collect()
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[graft.streaming.SessionStream.SessionEvent]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val t0 = System.nanoTime()
-      val query = graft.streaming.SessionStream.sessions(input.toDS().toDF())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("bench_sessions").start()
-      try {
-        events.grouped(math.max(1000, events.length / batches)).foreach { chunk =>
-          input.addData(chunk.toIndexedSeq)
-          query.processAllAvailable()
-        }
-        val n = spark.table("bench_sessions").count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[bench] stream_sessions: ${events.length} events -> $n closed sessions in $secs%.2f s = ${events.length / secs}%.0f rec/s")
-        secs
-      } finally {
-        query.stop()
-        spark.catalog.dropTempView("bench_sessions")
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      .collect().toSeq
+    val (n, t) = replay(spark, entry, events, 1000)(
+      ds => graft.streaming.SessionStream.sessions(ds.toDF()))(_.count())
+    System.err.println(
+      f"[bench] $entry: ${events.length} events -> $n closed sessions in ${t.secs}%.2f s = ${events.length / t.secs}%.0f rec/s")
+    t
   }
 
   /** Replay the events table through the incremental streaming pipeline
-    * (one flatMapGroupsWithState: dedup + indicator fold) in micro-batches;
-    * returns wall seconds for the whole replay.
+    * (one flatMapGroupsWithState: dedup + indicator fold) in `batches`
+    * micro-batches.
     */
-  def streamReplay(
-      spark: SparkSession,
-      sfDir: String,
-      batches: Int = 20,
-      statePartitions: Int = 8): Double = {
+  def streamReplay(spark: SparkSession, sfDir: String, entry: String,
+      batches: Int): Timed = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions._
-
     val candles = graft.model.Tables.events(spark, sfDir)
       .select(
         col("event_type").as("stock_symbol"),
@@ -587,16 +571,7 @@ object Bench {
         lit(1.0).as("volume"))
       .as[graft.model.Candle]
       .orderBy("local_time")
-      .collect()
-
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[graft.model.Candle]
-    val queryName = s"bench_stream_$batches"
-    // state-store partition count is fixed at query start from
-    // shuffle.partitions; with a handful of symbols, 32 partitions is pure
-    // per-batch commit overhead. 8 keeps headroom without the fan-out cost.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+      .collect().toSeq
     // After each data batch Spark runs an extra NO-DATA micro-batch to
     // advance the watermark — for THIS pipeline that doubles the per-batch
     // fixed cost (planning + the state commit) without changing a single
@@ -605,39 +580,12 @@ object Bench {
     // StreamBatchPropertySpec pins batch≡stream equality independently.
     // Do NOT copy this to the session/OHLC replays — their windows emit
     // ON watermark advance and need the no-data batches.
-    val prevNoData = spark.conf
-      .get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // restore in finally: an exception mid-replay must not leave the shared
-    // session at the reduced partition count for subsequent bench queries
-    try {
-      val t0 = System.nanoTime()
-      val query = graft.streaming.StreamingIndicators
-        .pipeline(input.toDS(), watermark = "1 hour")
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try {
-        val batchSize = math.max(1000, candles.length / batches)
-        candles.grouped(batchSize).foreach { chunk =>
-          input.addData(chunk.toIndexedSeq)
-          query.processAllAvailable()
-        }
-        val n = spark.table(queryName).count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[bench] stream_indicators ($batches batches): $n rows in $secs%.2f s = ${n / secs}%.0f rec/s")
-        secs
-      } finally {
-        query.stop()
-        spark.catalog.dropTempView(queryName)
-      }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-    }
+    val (n, t) = replay(spark, entry, candles, 1000, batches,
+      Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))(
+      graft.streaming.StreamingIndicators.pipeline(_, watermark = "1 hour"))(
+      _.count())
+    System.err.println(
+      f"[bench] $entry ($batches batches): $n rows in ${t.secs}%.2f s = ${n / t.secs}%.0f rec/s")
+    t
   }
 }

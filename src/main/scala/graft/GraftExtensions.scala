@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -82,4 +82,23 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.functions.JaroWinklerFp(exprs.head, exprs(1))
       }))
   }
+}
+
+object GraftExtensions {
+
+  /** The one session builder of the repo (`Bench`, `Verify` and the test
+    * session): `local[cores]`, one shuffle partition per core, UTC, AQE
+    * on, the custom functions through the injector above (the deployment
+    * path) and no UI.
+    */
+  def localSession(cores: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
 }

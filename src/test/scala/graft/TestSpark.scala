@@ -5,15 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // same deployment path as Verify/Bench: functions via the injector
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftExtensions.localSession(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
