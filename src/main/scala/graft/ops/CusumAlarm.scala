@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * reference level, alarm when either exceeds a threshold, restart
   * after alarm. In integer cents with integer allowance/threshold, so
   * every step is exact int64 and the fold is bit-identical at any
-  * parallelism (and to the streaming twin
-  * [[graft.streaming.CusumStream]]).
+  * parallelism.
   *
   * Recurrence (ref = first observation of the series, kappa the
   * allowance, h the alarm threshold, all cents):

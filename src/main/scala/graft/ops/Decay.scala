@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one broadcast equi-join on the day offset + one hash
   * agg — no shuffle beyond the aggregation, at any corpus size. The
-  * decayed sum is also MERGEABLE state (a later batch folds in with
-  * one rescale), which is what makes the streaming twin O(1)/key.
+  * decayed sum is also MERGEABLE state: a later batch folds in with
+  * one rescale.
   */
 object Decay {
 
@@ -39,9 +39,8 @@ object Decay {
     *
     * Quantization contract: v is pre-summed PER (key, days_ago) GROUP
     * and each day-sum is weighted/floored once — this is what makes
-    * the score reconstructible from day-granular mergeable state (the
-    * [[graft.streaming.DecayStream]] parity contract), and it
-    * minimizes floor loss vs per-row quantization.
+    * the score reconstructible from day-granular mergeable state, and
+    * it minimizes floor loss vs per-row quantization.
     */
   def decayedSum(
       obs: DataFrame, num: Long = 97L, den: Long = 100L,
@@ -59,22 +58,6 @@ object Decay {
       .agg(sum(col("n")).as("n_events"),
         sum(col("sv")).as("raw_sum"),
         sum(expr(s"(sv * w) div $scale")).as("decayed_fp"))
-  }
-
-  /** In-memory twin of [[decayedSum]] for one key's day sums — the
-    * fold [[graft.streaming.DecayStream]] runs on its state map.
-    */
-  def decayedOf(
-      dayRaw: Map[Long, Long], refDay: Long, num: Long = 97L,
-      den: Long = 100L, scale: Long = 1000000L): Long = {
-    var acc = 0L
-    dayRaw.foreach { case (day, sv) =>
-      var w = scale
-      var k = refDay - day
-      while (k > 0) { w = w * num / den; k -= 1 }
-      acc += sv * w / scale
-    }
-    acc
   }
 
   /** DuckDB twin over a `graft_decay_obs` (key, days_ago, v) relation. */

@@ -66,13 +66,8 @@ object Hll {
         col("zr")))
   }
 
-  /** The shared estimate chain over register aggregates (key, zeros,
-    * zr) — single-sourced for the batch path and the streaming twin
-    * ([[graft.streaming.HllStream]] emits the same aggregate columns
-    * from its per-key register state). Row-local expressions only, so
-    * it applies to streaming frames unchanged.
-    */
-  def finish(agg: DataFrame): DataFrame =
+  /** The estimate chain over register aggregates (key, zeros, zr). */
+  private def finish(agg: DataFrame): DataFrame =
     agg
       .withColumn("raw", expr(s"$alphaChain / (zr + zeros * $pow53)"))
       .withColumn("hll_fp",

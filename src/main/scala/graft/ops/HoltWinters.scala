@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * seasonals mean the first cycle learns the level before the seasonal
   * indices split out — the standard cold-start trade stated explicitly
   * rather than hidden behind a look-ahead initialization pass (which
-  * would break the O(1)-ingest streaming twin shape).
+  * would break the O(1)-per-row ingest shape).
   *
   * Scale shape: ONE shuffle on the series key, then an O(m)-state
   * ordered fold per group (`flatMapSortedGroups`) — m = 24 hourly slots,

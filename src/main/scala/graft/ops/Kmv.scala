@@ -7,9 +7,7 @@ import org.apache.spark.sql.functions._
   * 2002; the theta-sketch core): keep the K smallest distinct 60-bit
   * hashes; estimate (K−1)·2^60 / h_(K). Deterministic md5 hashing
   * makes the whole sketch oracle-checkable, and "K smallest of a
-  * union" is a lattice merge — order- and duplication-free, so the
-  * streaming twin ([[graft.streaming.KmvStream]]) is exactly the batch
-  * sketch after any replay.
+  * union" is a lattice merge — order- and duplication-free.
   */
 object Kmv {
 
@@ -20,29 +18,11 @@ object Kmv {
   val K = 64
 
   /** Estimate from (sk_size, kth_h) columns — THE estimate spelling,
-    * shared by the batch query and the streaming twin (and mirrored
-    * textually in the DuckDB oracle).
+    * mirrored textually in the DuckDB oracle.
     */
   def estExpr: Column =
     when(col("sk_size") < K, col("sk_size"))
       .otherwise(expr(
         s"CAST(floor((${K - 1}e0 * 1152921504606846976e0) / kth_h)" +
           " AS BIGINT)"))
-
-  /** Merge a sorted sketch with new observations: the K smallest
-    * DISTINCT values of the union. O((|sketch| + |batch|) log ·) —
-    * state stays exactly ≤ K longs per key.
-    */
-  def merge(sketch: Array[Long], obs: Iterator[Long]): Array[Long] = {
-    val set = scala.collection.mutable.SortedSet.empty[Long]
-    sketch.foreach(set += _)
-    obs.foreach { h =>
-      if (set.size < K) set += h
-      else if (h < set.max && !set.contains(h)) {
-        set -= set.max
-        set += h
-      }
-    }
-    set.take(K).toArray
-  }
 }

@@ -84,15 +84,6 @@ object Perceptron {
     w
   }
 
-  /** Train only: the final d-row weight vector (dim, w) — the model to
-    * broadcast into a serving path (see
-    * [[graft.streaming.PerceptronServe]]).
-    */
-  def train(docs: DataFrame, dims: Int = 64, rounds: Int = 3): DataFrame = {
-    require(dims >= 2 && rounds >= 1)
-    weights(featurize(docs, dims), dims, rounds)
-  }
-
   def trainPredict(
       docs: DataFrame, dims: Int = 64, rounds: Int = 3): DataFrame = {
     require(dims >= 2 && rounds >= 1)

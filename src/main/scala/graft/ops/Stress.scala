@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * (seed, node), so k seeds bound the blow-up at a constant factor.
   * Int64 headroom: σ and g are path COUNTS and can grow like
   * (avg deg)^depth — at depth 4 on a support-pruned graph they stay
-  * far under 2^63, and ANSI mode fails loudly (the [[graft.streaming.DriftStream]]
+  * far under 2^63, and ANSI mode fails loudly (the q_dist_drift
   * convention) rather than wrapping if a denser graph overflows;
   * reduce maxHops or prune harder then.
   */

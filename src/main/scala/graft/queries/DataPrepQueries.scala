@@ -536,8 +536,7 @@ object DataPrepQueries {
     //      mirror. The per-key winner travels as a partial-aggregable
     //      max(struct(seq, op, value)) — ONE hash agg, no window, no
     //      per-key row buffering; deletes win by sequence and then drop
-    //      out. Streaming twin: streaming.CdcStream (bit-exact parity
-    //      spec) ----
+    //      out ----
     QueryDef.sql(
       "q_cdc_apply",
       """WITH log AS (

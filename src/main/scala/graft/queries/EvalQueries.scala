@@ -82,6 +82,22 @@ object EvalQueries {
         when(col("label") === 0, 1L).otherwise(0L).as("y"))
   }
 
+  /** q_dist_drift's per-token contribution over columns (ca, cb, na,
+    * nb, v), textually mirrored by its DuckDB oracle:
+    * floor(ln((ca+1)(nb+v) / ((cb+1)(na+v))) * (ca+1) * 1e6 / (na+v)).
+    *
+    * Int64 headroom: the products (ca+1)*(nb+v) and (cb+1)*(na+v) must
+    * stay under 2^63, roughly (max(ca, cb) + 1) * (na + nb + v) < 2^63,
+    * so up to ~3e9 corpus tokens per side is always safe; ANSI mode makes
+    * a breach a loud overflow error. Larger corpora score a hash-sampled
+    * token stream (the q_sample_docs shape) or rescale both sides' counts
+    * by a common power of two (the ranking is scale-invariant up to the
+    * +1 smoothing).
+    */
+  private val klContrib: String =
+    """CAST(floor(ln(((ca + 1) * (nb + v)) * 1e0 / ((cb + 1) * (na + v)))
+      |  * (ca + 1) * 1e6 / (na + v)) AS BIGINT)""".stripMargin
+
   val all: Seq[QueryDef] = Seq(
 
     // ---- Recommendation-list diversity & coverage (Ziegler et al.
@@ -392,9 +408,8 @@ object EvalQueries {
         sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
       tc.crossJoin(broadcast(tot))
         .select(col("token"), col("ca"), col("cb"),
-          // single-sourced with the streaming scorer (DriftStream) —
           // textually identical double-op order to the DuckDB oracle
-          expr(graft.streaming.DriftStream.klContrib).as("contrib_fp"))
+          expr(klContrib).as("contrib_fp"))
         .orderBy(col("contrib_fp").desc, col("token"))
         .limit(30)
     }.intendsNestedLoop(

@@ -170,8 +170,8 @@ object SketchQueries {
     //      both engines ----
     QueryDef.sql(
       "q_kmv",
-      // capacity single-sourced from ops.Kmv.K (the streaming twin and
-      // estExpr branch on the same constant)
+      // capacity single-sourced from ops.Kmv.K (estExpr branches on the
+      // same constant)
       s"""WITH h AS (
          |  SELECT DISTINCT event_type,
          |    ${md5pDuck("CAST(user_id AS VARCHAR)")} AS h
@@ -209,7 +209,6 @@ object SketchQueries {
       sk.join(ex, "event_type")
         .select(col("event_type"), col("n_exact"), col("sk_size"),
           col("kth_h"),
-          // single-sourced with streaming.KmvStream
           graft.ops.Kmv.estExpr.as("est"))
         .orderBy(col("event_type"))
     },

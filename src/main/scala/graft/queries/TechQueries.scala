@@ -779,9 +779,7 @@ object TechQueries {
     //      gain-converged Kalman) and q_holt (level+trend, fixed
     //      gains) — posterior variance anneals R → P∞, so early rows
     //      track near 1:1 and the gain schedule is part of the output.
-    //      Exact int64 recurrence, oracle = recursive CTE; streaming
-    //      twin streaming.KalmanStream is bit-exact on in-order
-    //      replay ----
+    //      Exact int64 recurrence, oracle = recursive CTE ----
     QueryDef.sql(
       "q_kalman",
       s"""WITH RECURSIVE graft_series AS (
@@ -1126,8 +1124,7 @@ object TechQueries {
     // ---- Sequential CUSUM alarm ([[graft.ops.CusumAlarm]]): the ONLINE
     //      changepoint detector beside q_changepoint's retrospective
     //      argmax — two clamped one-sided deviation folds per symbol,
-    //      alarm + restart on threshold. Exact int64; streaming twin
-    //      `streaming.CusumStream` is bit-identical. Oracle replays the
+    //      alarm + restart on threshold. Exact int64. Oracle replays the
     //      recurrence as a recursive CTE (the q_holt pattern) ----
     QueryDef.sql(
       "q_cusum_alarm",

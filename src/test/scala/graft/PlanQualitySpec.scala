@@ -220,20 +220,20 @@ class PlanQualitySpec extends AnyFunSuite with Matchers {
     // frame (pattern match ranks the 10 TakeOrdered survivors) or over a
     // time-bounded series (q_pair_corr rolls over the JOINT HOURLY series
     // of one symbol pair — cardinality grows with wall-clock hours, not
-    // with data volume: ~9k rows/year at any scale factor)
-    val allowed = SparkEntry.allQueries
+    // with data volume: ~9k rows/year at any scale factor). The same
+    // pass fails a stale `intendsGlobalWindow`: one on a query that no
+    // longer plans such a window.
+    val annotated = SparkEntry.allQueries
       .filter(_.planIntent.globalWindow.isDefined).map(_.name).toSet
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) if !allowed(name) =>
-        val df = fn(spark, sfDir)
-        df.collect()
-        val globals = collectAll(df) {
-          case w: org.apache.spark.sql.execution.window.WindowExec
-              if w.partitionSpec.isEmpty => w
-        }
-        if (globals.nonEmpty) Some(name) else None
-      case _ => None
+    val plansGlobal = SparkEntry.queries.toSeq.sortBy(_._1).map {
+      case (name, fn) =>
+        name -> collectAll(fn(spark, sfDir)) {
+          case w: WindowExec if w.partitionSpec.isEmpty => w
+        }.nonEmpty
     }
+    val offenders = plansGlobal.collect { case (name, true) if !annotated(name) => name }
+    val stale = plansGlobal.collect { case (name, false) if annotated(name) => name }
     offenders shouldBe empty
+    stale shouldBe empty
   }
 }

@@ -92,4 +92,13 @@ class HllSpec extends AnyFunSuite with Matchers {
     Hll.estimate(merged).select($"hll_fp").as[Long].head() shouldBe
       Hll.estimate(whole).select($"hll_fp").as[Long].head()
   }
+
+  test("rho ladder equals the leading-zero count of the 52-bit witness") {
+    val ws = Seq(0L, 1L, 2L, 3L, 255L, 256L, (1L << 51) - 1, 1L << 51,
+      (1L << 52) - 1) ++ (0 until 60).map(i => (1L << 45) + i * 12345L)
+    val batch = ws.toDF("w")
+      .selectExpr(s"CAST(${Hll.rhoCase("w")} AS INT) AS r")
+      .as[Int].collect().toSeq
+    ws.map(w => 53 - (64 - java.lang.Long.numberOfLeadingZeros(w))) shouldBe batch
+  }
 }
