@@ -52,5 +52,7 @@ object Verify {
     println(f"[verify] done: ${nOk + nFail}%d queries ($nOk%d ok, " +
       f"$nFail%d failed), $nOracles%d oracles, $secs%.1f s")
     spark.stop()
+    // the queries that passed are written; a failed one still fails the run
+    if (nFail > 0) sys.exit(1)
   }
 }

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.graft.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 
 /** Recursive exponentially-weighted moving average as a native Catalyst
@@ -86,18 +85,13 @@ object EwmAvg {
     // resolves through the function registry: populated by GraftExtensions
     // (spark.sql.extensions=graft.GraftExtensions, the deployment path) or
     // by an explicit register(spark) in extension-less sessions. NOTE: a
-    // registry-free direct embedding (ewmAvgExpr(...).over(w)) analyzes
+    // registry-free direct embedding (an EwmAvg column .over(w)) analyzes
     // under the legacy fixed-point analyzer but is rejected by Spark 4.1's
     // single-pass resolver (WINDOW_FUNCTION_WITHOUT_OVER_CLAUSE), so the
     // registry route is the only one that works on both analyzers.
     org.apache.spark.sql.functions.call_function("ewm_avg", col,
       org.apache.spark.sql.functions.lit(span))
   }
-
-  /** Direct expression constructor (for tests / advanced composition). */
-  def ewmAvgExpr(col: Column, alpha: Double, minPeriods: Int): Column =
-    ExpressionUtils.column(
-      EwmAvg(ExpressionUtils.expression(col), alpha, minPeriods))
 
   /** Register `ewm_avg(expr, span)` for pure-SQL use:
     * `SELECT ewm_avg(close, 10) OVER (PARTITION BY sym ORDER BY t) ...`.

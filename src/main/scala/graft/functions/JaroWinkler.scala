@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.{ColumnBridge => CB}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -64,10 +62,6 @@ case class JaroWinklerFp(left: Expression, right: Expression)
 
 object JaroWinkler {
 
-  /** Column-API entry point. */
-  def jaroWinklerFp(a: Column, b: Column): Column =
-    CB.column(JaroWinklerFp(CB.expression(a), CB.expression(b)))
-
   /** Static entry point shared by interpreted eval and generated code. */
   def simFp(ua: UTF8String, ub: UTF8String): Long = {
     val a = ua.toString
@@ -121,14 +115,4 @@ object JaroWinkler {
       a.charAt(l) == b.charAt(l)) l += 1
     jaro + l * (1000000L - jaro) / 10L
   }
-
-  /** Register `jaro_winkler_fp(a, b)` for SQL use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler_fp",
-      { exprs =>
-        require(exprs.size == 2, "jaro_winkler_fp(a, b) takes 2 arguments")
-        JaroWinklerFp(exprs.head, exprs(1))
-      },
-      "built-in")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -183,14 +183,4 @@ object VecOps {
   /** LSH hyperplane projection for plane family (a, b). */
   def planeDot(v: Column, a: Int, b: Int): Column =
     CB.column(VecPlaneDot(CB.expression(v), a, b))
-
-  /** SQL surface: `vec_dot(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      { exprs =>
-        require(exprs.size == 2, "vec_dot(a, b) takes 2 arguments")
-        VecDot(exprs.head, exprs(1))
-      },
-      "built-in")
 }

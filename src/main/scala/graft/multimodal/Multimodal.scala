@@ -11,17 +11,11 @@ import org.apache.spark.sql.functions._
   * shuffle (the pipeline is embarrassingly parallel until the caller
   * aggregates).
   *
-  * Image payloads decode through the REAL [[ImageIoCodec]] (the JDK's
-  * javax.imageio: PNG/BMP/GIF/JPEG), RIFF/WAVE PCM audio through the
-  * REAL [[WavCodec]] (the JDK's javax.sound.sampled), and uncompressed
-  * YUV4MPEG2 video through the REAL [[Y4mCodec]] (pure byte-level
-  * parse), routed by payload magic bytes via [[SniffingCodec]].
-  * COMPRESSED video codecs are not available in this environment, so
-  * [[FakeCodec]] remains the clearly-marked deterministic stand-in
-  * there: it derives "pixels" from the payload bytes themselves.
-  * Everything around the codec seam — the schema, the binary
-  * column handling, the batch shape, the partitioning — is the real
-  * production plumbing either way.
+  * The library ships no media decoder: [[FakeCodec]] is the
+  * clearly-marked deterministic stand-in that derives "pixels" from the
+  * payload bytes themselves. Everything around it (the schema, the
+  * binary column handling, the batch shape, the partitioning) is the
+  * production plumbing.
   *
   * At 100 TB scale the design holds because media rows are processed
   * streaming per-partition (constant memory per row, no
@@ -40,10 +34,7 @@ object Multimodal {
       declared_h: Int,
       blob: Array[Byte])
 
-  /** Decoded representation produced by a codec: a grayscale "pixel" plane
-    * (images), a PCM-ish sample line (audio), or a frame-major plane
-    * (video) — all normalized to doubles in [0, 255].
-    */
+  /** A decoded payload: a grayscale "pixel" plane in [0, 255]. */
   final case class Decoded(w: Int, h: Int, pixels: Array[Double])
 
   final case class MediaFeatures(
@@ -54,185 +45,11 @@ object Multimodal {
       std_intensity: Double,
       thumb_4x4: Array[Float])
 
-  trait MediaCodec extends Serializable {
-    def decode(mediaType: String, blob: Array[Byte]): Decoded
-  }
-
-  /** REAL image codec: the JDK's javax.imageio registry (PNG, BMP, GIF,
-    * JPEG, WBMP — no external deps, works on any executor). Pixels are
-    * Rec.601 luma (0.299 R + 0.587 G + 0.114 B) in [0, 255]: integer
-    * channel reads and three correctly-rounded double ops per pixel, so
-    * the plane is deterministic across JVMs.
+  /** The decode stand-in for "decode to grayscale": the payload as
+    * unsigned bytes row-major in a W×H plane, W = ceil(sqrt(n)).
     */
-  object ImageIoCodec extends MediaCodec {
-    override def decode(mediaType: String, blob: Array[Byte]): Decoded = {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(blob))
-      require(img != null, s"payload is not a decodable image (${blob.length} bytes)")
-      val w = img.getWidth
-      val h = img.getHeight
-      val px = new Array[Double](w * h)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = img.getRGB(x, y)
-          px(y * w + x) = 0.299 * ((rgb >> 16) & 0xff) +
-            0.587 * ((rgb >> 8) & 0xff) + 0.114 * (rgb & 0xff)
-          x += 1
-        }
-        y += 1
-      }
-      Decoded(w, h, px)
-    }
-  }
-
-  /** REAL audio codec: RIFF/WAVE PCM via the JDK's javax.sound.sampled
-    * (no external deps, headless-safe). Supports the PCM encodings the
-    * JDK WAV reader itself supports (8-bit unsigned, 16-bit signed,
-    * either endianness, any channel count). Samples normalize to the
-    * codec contract's [0, 255] plane exactly:
-    *   8-bit  u -> u            (identity)
-    *   16-bit s -> (s + 32768) / 257.0   (0 -> 0, 65535 -> 255 exactly,
-    *                                      since 257 * 255 = 65535)
-    * Layout is channel-major: h = channels, w = frames, so a stereo clip
-    * decodes to two sample rows — the same plane shape every downstream
-    * op (resize / featurize) already consumes.
-    */
-  object WavCodec extends MediaCodec {
-    override def decode(mediaType: String, blob: Array[Byte]): Decoded = {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(blob))
-      try {
-        val fmt = ais.getFormat
-        val bits = fmt.getSampleSizeInBits
-        val ch = fmt.getChannels
-        val enc = fmt.getEncoding
-        val signed = enc == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
-        require(
-          signed || enc == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED,
-          s"non-PCM WAV encoding $enc")
-        require(bits == 8 || bits == 16, s"unsupported PCM width $bits")
-        val raw = ais.readAllBytes()
-        val bytesPerSample = bits / 8
-        val frames = raw.length / (bytesPerSample * ch)
-        val px = new Array[Double](frames * ch)
-        var i = 0
-        while (i < frames) {
-          var c = 0
-          while (c < ch) {
-            val off = (i * ch + c) * bytesPerSample
-            val u =
-              if (bits == 8) {
-                val v = raw(off) & 0xff
-                if (signed) ((raw(off): Int) + 128) else v
-              } else {
-                val (lo, hi) =
-                  if (fmt.isBigEndian) (raw(off + 1) & 0xff, raw(off))
-                  else (raw(off) & 0xff, raw(off + 1))
-                val s = (hi << 8) | lo // sign-extended via the Byte hi
-                (if (signed) s + 32768 else ((hi & 0xff) << 8) | lo)
-              }
-            px(c * frames + i) =
-              if (bits == 8) u.toDouble else u.toDouble / 257.0
-            c += 1
-          }
-          i += 1
-        }
-        Decoded(frames, ch, px)
-      } finally ais.close()
-    }
-  }
-
-  /** REAL video codec: YUV4MPEG2 (.y4m) — the uncompressed planar-YUV
-    * interchange format (mjpegtools / ffmpeg's `-f yuv4mpeg`), fully
-    * public and parseable with zero dependencies: an ASCII stream
-    * header (`YUV4MPEG2 W<w> H<h> ... C<colorspace>\n`) followed by
-    * `FRAME\n`-delimited raw planar frames. The decode extracts every
-    * frame's LUMA plane (bytes are already [0, 255]) and stacks them
-    * frame-major — `w` = frame width, `h` = height x n_frames — the
-    * same plane shape every downstream op (resize / featurize /
-    * frame-sample) already consumes; chroma planes are skipped by the
-    * colorspace-derived stride (420/422/444/mono). Pure byte reads, so
-    * the plane is bit-deterministic across JVMs.
-    */
-  /** Per-frame chroma(+alpha) byte count for the 8-bit Y4M colorspaces
-    * [[Y4mCodec]] decodes; `None` = unsupported (e.g. the 10/12-bit
-    * `420p10`-style tags, whose strides differ). Single source for both
-    * the codec's stride and [[SniffingCodec]]'s routing decision, so
-    * "what the router sends" and "what the codec parses" cannot drift:
-    * an unsupported colorspace routes to the stand-in instead of
-    * mis-striding or killing the job. Exact tag match on purpose — a
-    * prefix match would claim `420p10` with an 8-bit stride.
-    */
-  private[multimodal] def y4mChromaBytes(
-      cs: String, w: Int, h: Int): Option[Int] = cs match {
-    case "420jpeg" | "420mpeg2" | "420paldv" | "420" =>
-      Some(2 * ((w / 2) * (h / 2)))
-    case "422" => Some(2 * ((w / 2) * h))
-    case "444" => Some(2 * (w * h))
-    case "444alpha" => Some(3 * (w * h)) // Cb + Cr + alpha planes
-    case "mono" => Some(0)
-    case _ => None
-  }
-
-  object Y4mCodec extends MediaCodec {
-    override def decode(mediaType: String, blob: Array[Byte]): Decoded = {
-      val nlHeader = blob.indexOf('\n'.toByte)
-      require(nlHeader > 0, "truncated Y4M stream header")
-      val header = new String(blob, 0, nlHeader, "US-ASCII")
-      val tags = header.split(' ')
-      require(tags.head == "YUV4MPEG2", s"not a Y4M header: $header")
-      def tag(p: Char): Option[String] =
-        tags.tail.find(t => t.nonEmpty && t.head == p).map(_.tail)
-      val w = tag('W').map(_.toInt).getOrElse(
-        sys.error("Y4M header missing width"))
-      val h = tag('H').map(_.toInt).getOrElse(
-        sys.error("Y4M header missing height"))
-      require(w > 0 && h > 0, s"bad Y4M dimensions ${w}x$h")
-      val cs = tag('C').getOrElse("420jpeg") // spec default is 4:2:0
-      val lumaBytes = w * h
-      val chromaBytes = y4mChromaBytes(cs, w, h).getOrElse(
-        sys.error(s"unsupported Y4M colorspace C$cs"))
-      val frames = Array.newBuilder[Array[Double]]
-      var off = nlHeader + 1
-      while (off < blob.length) {
-        val nl = blob.indexOf('\n'.toByte, off)
-        require(nl >= 0, "truncated Y4M FRAME marker")
-        val marker = new String(blob, off, nl - off, "US-ASCII")
-        require(marker == "FRAME" || marker.startsWith("FRAME "),
-          s"expected FRAME marker, got '$marker'")
-        val y0 = nl + 1
-        require(y0 + lumaBytes + chromaBytes <= blob.length,
-          "truncated Y4M frame payload")
-        val px = new Array[Double](lumaBytes)
-        var i = 0
-        while (i < lumaBytes) { px(i) = (blob(y0 + i) & 0xff).toDouble; i += 1 }
-        frames += px
-        off = y0 + lumaBytes + chromaBytes
-      }
-      val fs = frames.result()
-      require(fs.nonEmpty, "Y4M stream has no frames")
-      Decoded(w, h * fs.length, Array.concat(fs: _*))
-    }
-  }
-
-  /** ======================== STUB BOUNDARY ========================
-    * COMPRESSED video codecs (ffmpeg behind JNI) are NOT available in
-    * this environment; [[FakeCodec]] is the clearly-marked deterministic
-    * stand-in for compressed video payloads, non-WAV audio containers,
-    * and WAV/Y4M variants outside the real codecs' support (24/32-bit
-    * or float PCM, 10/12-bit Y4M colorspaces — the router checks
-    * decodability, not just magic bytes, so such payloads degrade to
-    * the stand-in instead of failing the job). Image payloads
-    * ([[ImageIoCodec]]), 8/16-bit integer-PCM RIFF/WAVE audio
-    * ([[WavCodec]]), and 8-bit uncompressed YUV4MPEG2 video
-    * ([[Y4mCodec]]) have real decoders above.
-    */
-  object FakeCodec extends MediaCodec {
-    /** Interprets the payload as unsigned bytes row-major in a W×H plane,
-      * W = ceil(sqrt(n)) — a stand-in for "decode to grayscale".
-      */
-    override def decode(mediaType: String, blob: Array[Byte]): Decoded = {
+  object FakeCodec {
+    def decode(blob: Array[Byte]): Decoded = {
       val n = math.max(blob.length, 1)
       val w = math.ceil(math.sqrt(n.toDouble)).toInt
       val h = math.ceil(n.toDouble / w).toInt
@@ -242,89 +59,8 @@ object Multimodal {
       Decoded(w, h, px)
     }
   }
-  /* ====================== END STUB BOUNDARY ====================== */
 
-  /** Production router: sniffs the payload's magic bytes and hands real
-    * image containers (PNG / BMP / GIF / JPEG) to [[ImageIoCodec]] and
-    * RIFF/WAVE audio to [[WavCodec]]; everything else falls through to
-    * the declared stand-in. Content sniffing (not the `media_type`
-    * column) decides, so a mislabelled row can't crash a real decoder.
-    */
-  object SniffingCodec extends MediaCodec {
-    private def hasPrefix(blob: Array[Byte], sig: Int*): Boolean =
-      blob.length >= sig.length &&
-        sig.indices.forall(i => (blob(i) & 0xff) == sig(i))
-
-    def isImage(blob: Array[Byte]): Boolean =
-      hasPrefix(blob, 0x89, 'P', 'N', 'G') || // PNG
-        hasPrefix(blob, 'B', 'M') || // BMP
-        hasPrefix(blob, 'G', 'I', 'F', '8') || // GIF
-        hasPrefix(blob, 0xff, 0xd8, 0xff) // JPEG
-
-    /** RIFF container declaring a WAVE form ("RIFF" at 0, "WAVE" at 8)
-      * whose fmt chunk [[WavCodec]] can actually decode: integer PCM
-      * (format tag 1), 8- or 16-bit. Other legal WAV variants (24/32-bit,
-      * IEEE-float tag 3, ADPCM, extensible) route to the stand-in
-      * instead of crashing the decode job — the router's contract is
-      * "real codecs only get payloads they support"; a malformed or
-      * unsupported fmt chunk is a routing decision here, a loud failure
-      * only when [[WavCodec]] is called directly.
-      */
-    def isWav(blob: Array[Byte]): Boolean =
-      hasPrefix(blob, 'R', 'I', 'F', 'F') && blob.length >= 12 &&
-        blob(8) == 'W' && blob(9) == 'A' && blob(10) == 'V' &&
-        blob(11) == 'E' && wavFmtDecodable(blob)
-
-    /** Walk the RIFF chunk list for "fmt " and check (tag, bits). */
-    private def wavFmtDecodable(blob: Array[Byte]): Boolean = {
-      def u16(o: Int): Int = (blob(o) & 0xff) | ((blob(o + 1) & 0xff) << 8)
-      def u32(o: Int): Long = (u16(o).toLong | (u16(o + 2).toLong << 16))
-      var off = 12L
-      while (off + 8 <= blob.length) {
-        val o = off.toInt
-        val isFmt = blob(o) == 'f' && blob(o + 1) == 'm' &&
-          blob(o + 2) == 't' && blob(o + 3) == ' '
-        val sz = u32(o + 4)
-        if (isFmt) {
-          return off + 8 + 16 <= blob.length && sz >= 16 && {
-            val fmtTag = u16(o + 8)
-            val bits = u16(o + 8 + 14)
-            fmtTag == 1 && (bits == 8 || bits == 16)
-          }
-        }
-        off += 8 + sz + (sz & 1) // chunks are word-aligned
-      }
-      false
-    }
-
-    /** YUV4MPEG2 stream magic: the literal tag plus its mandatory
-      * space separator (a plain-text document could start with the bare
-      * word; the full `"YUV4MPEG2 "` prefix is the format's actual
-      * stream signature) — AND a parseable header whose colorspace
-      * [[Y4mCodec]] supports ([[y4mChromaBytes]]); 10/12-bit streams
-      * route to the stand-in instead of crashing the job.
-      */
-    def isY4m(blob: Array[Byte]): Boolean =
-      hasPrefix(blob, 'Y', 'U', 'V', '4', 'M', 'P', 'E', 'G', '2', ' ') && {
-        val nl = blob.indexOf('\n'.toByte)
-        nl > 0 && {
-          val cs = new String(blob, 0, nl, "US-ASCII").split(' ').tail
-            .find(t => t.nonEmpty && t.head == 'C').map(_.tail)
-            .getOrElse("420jpeg")
-          y4mChromaBytes(cs, 2, 2).isDefined
-        }
-      }
-
-    override def decode(mediaType: String, blob: Array[Byte]): Decoded =
-      if (isImage(blob)) ImageIoCodec.decode(mediaType, blob)
-      else if (isWav(blob)) WavCodec.decode(mediaType, blob)
-      else if (isY4m(blob)) Y4mCodec.decode(mediaType, blob)
-      else FakeCodec.decode(mediaType, blob)
-  }
-
-  /** Block-average resize to a fixed `tw`×`th` thumbnail — real logic (not
-    * part of the stub): works on any codec's output.
-    */
+  /** Block-average resize to a fixed `tw`×`th` thumbnail. */
   def resize(d: Decoded, tw: Int, th: Int): Array[Double] = {
     val out = new Array[Double](tw * th)
     var ty = 0
@@ -367,13 +103,12 @@ object Multimodal {
     * Constant memory per row; output is a narrow fixed-width Dataset.
     */
   def extractFeatures(
-      media: Dataset[MediaRecord],
-      codec: MediaCodec = FakeCodec): Dataset[MediaFeatures] = {
+      media: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
       it.map { rec =>
-        val d = codec.decode(rec.media_type, rec.blob)
+        val d = FakeCodec.decode(rec.blob)
         val n = d.pixels.length.toDouble
         val mean = d.pixels.sum / n
         val varr = d.pixels.map(p => (p - mean) * (p - mean)).sum / n
@@ -383,163 +118,6 @@ object Multimodal {
           mean, math.sqrt(varr), thumb)
       }
     }
-  }
-
-  /** 64-bit difference hash (dHash) of a decoded plane: block-average
-    * resize to a 9×8 luma grid, then bit (y*8 + x) = 1 iff
-    * cell(x, y) > cell(x+1, y) — the standard perceptual image
-    * fingerprint (row-wise brightness gradients survive rescaling,
-    * re-encoding, and small edits; Hamming distance measures visual
-    * change). Pure function of the decoded plane, so it is exactly as
-    * deterministic as the codec that produced it.
-    */
-  def dHash(d: Decoded): Long = {
-    val g = resize(d, 9, 8)
-    var bits = 0L
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        if (g(y * 9 + x) > g(y * 9 + x + 1)) bits |= 1L << (y * 8 + x)
-        x += 1
-      }
-      y += 1
-    }
-    bits
-  }
-
-  /** 63-bit audio fingerprint — the audio twin of [[dHash]], built from
-    * real (if minimal) spectral analysis, no external deps:
-    *
-    *   1. mono-mix the decoded PCM plane and center it at 0;
-    *   2. split into 22 contiguous windows;
-    *   3. per window, spectral energy at 4 fixed normalized frequencies
-    *      via the Goertzel recurrence (an exact single-bin DFT — the
-    *      standard FFT-free tone detector);
-    *   4. Haitsma–Kalker sign bits (ISMIR 2002): bit(w, b) = 1 iff the
-    *      band-energy difference E(w,b) − E(w,b+1) INCREASED vs the
-    *      previous window — 21 windows × 3 band pairs = 63 bits.
-    *
-    * The double-difference makes the bits invariant to global gain
-    * (energies scale by gain², signs survive) and to slow loudness
-    * drift, which is why this family of fingerprints survives
-    * re-encoding. `StrictMath` trig keeps the plane → bits map
-    * bit-identical across JVMs/platforms. Hamming distance over the
-    * fingerprints measures audible change; [[nearDupPairs]] works on
-    * them unchanged (same 4×16-bit banding).
-    */
-  def audioFingerprint(d: Decoded): Long = {
-    val n = d.w
-    val ch = d.h
-    val mono = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      var c = 0
-      var s = 0.0
-      while (c < ch) { s += d.pixels(c * n + i); c += 1 }
-      mono(i) = s / ch - 128.0
-      i += 1
-    }
-    val W = 22
-    val win = math.max(1, n / W)
-    val freqs = Array(0.04, 0.08, 0.16, 0.32) // cycles per sample
-    val e = Array.ofDim[Double](W, 4)
-    var w0 = 0
-    while (w0 < W) {
-      val st = math.min(n, w0 * win)
-      val en = math.min(n, st + win)
-      var b = 0
-      while (b < 4) {
-        val coef = 2.0 * StrictMath.cos(2.0 * math.Pi * freqs(b))
-        var s1 = 0.0
-        var s2 = 0.0
-        var j = st
-        while (j < en) {
-          val s0 = mono(j) + coef * s1 - s2
-          s2 = s1; s1 = s0
-          j += 1
-        }
-        e(w0)(b) = s1 * s1 + s2 * s2 - coef * s1 * s2
-        b += 1
-      }
-      w0 += 1
-    }
-    var bits = 0L
-    var k = 0
-    var w1 = 1
-    while (w1 < W) {
-      var b = 0
-      while (b < 3) {
-        val d2 = (e(w1)(b) - e(w1)(b + 1)) - (e(w1 - 1)(b) - e(w1 - 1)(b + 1))
-        if (d2 > 0) bits |= 1L << k
-        k += 1
-        b += 1
-      }
-      w1 += 1
-    }
-    bits
-  }
-
-  /** (doc_id, fp) per audio row — one streaming decode pass per
-    * partition, same shape as [[imageSignatures]]; feed the result to
-    * [[nearDupPairs]] for banded audio near-dup.
-    */
-  def audioSignatures(
-      media: Dataset[MediaRecord],
-      codec: MediaCodec = SniffingCodec): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.map(rec =>
-        (rec.doc_id, audioFingerprint(codec.decode(rec.media_type, rec.blob))))
-    }.toDF("doc_id", "dhash")
-  }
-
-  /** (doc_id, dhash) per media row — one streaming decode pass per
-    * partition, same shape as [[extractFeatures]].
-    */
-  def imageSignatures(
-      media: Dataset[MediaRecord],
-      codec: MediaCodec = SniffingCodec): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.map(rec => (rec.doc_id, dHash(codec.decode(rec.media_type, rec.blob))))
-    }.toDF("doc_id", "dhash")
-  }
-
-  /** Near-duplicate image pairs over 64-bit dHash signatures — the
-    * image twin of the SimHash text pipeline ([[graft.ops.NearDup]]):
-    * band the hash into 4×16-bit keys, take candidates from band-key
-    * equi-joins (pigeonhole: any pair within Hamming distance ≤ 3
-    * agrees exactly on ≥ 1 of the 4 bands, so recall is exact — never
-    * an all-pairs product), then popcount-verify. Output
-    * (id_a, id_b, dist) with id_a < id_b.
-    *
-    * Scale shape: the banded frame is 4 rows per image; candidates
-    * come only from same-band-key buckets (skewed buckets mean
-    * near-identical images — exactly the pairs wanted); the verify is
-    * one codegen'd `bit_count(a ^ b)` per candidate.
-    */
-  def nearDupPairs(sigs: DataFrame, maxDist: Int = 3): DataFrame = {
-    require(maxDist >= 0 && maxDist <= 3,
-      "4 bands guarantee exact recall only for maxDist <= 3")
-    val bands = sigs.select(
-      col("doc_id"), col("dhash"),
-      explode(expr("sequence(0, 3)")).as("band"))
-      .withColumn("bkey", expr("shiftright(dhash, band * 16) & 65535"))
-    val a = bands.select(col("band"), col("bkey"),
-      col("doc_id").as("id_a"), col("dhash").as("ha"))
-    val b = bands.select(col("band").as("band_b"), col("bkey").as("bkey_b"),
-      col("doc_id").as("id_b"), col("dhash").as("hb"))
-    a.join(b,
-        col("band") === col("band_b") && col("bkey") === col("bkey_b") &&
-          col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("ha"), col("hb"))
-      .distinct() // a pair can match on several bands
-      .withColumn("dist", expr(s"bit_count(ha ^ hb)"))
-      .filter(col("dist") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("dist").cast("int").as("dist"))
   }
 
   /** Frame sampling: every `strideBytes`-th window of `frameBytes` bytes,

@@ -159,22 +159,4 @@ object ConnectedComponents {
       .union(cur.select(col("dst").as("id"), col("dst").as("rep")))
       .groupBy("id").agg(min(col("rep")).as("rep"))
   }
-
-  /** Incremental variant: fold newly-discovered edges into an existing
-    * assignment (the `(id, rep)` output of a previous [[run]]) without
-    * recomputing from the full historical edge list. The previous stars
-    * re-enter as edges — already at the fixpoint shape — so the
-    * contraction converges in a round or two over |prev| + |delta|
-    * rows; the historical pair-generation (the expensive LSH part) is
-    * never repeated. Output: the updated full (id, rep) assignment,
-    * equal to a from-scratch run over the union of all edges ever seen.
-    */
-  def merge(
-      prev: DataFrame, newEdges: DataFrame,
-      src: String = "src", dst: String = "dst",
-      maxIter: Int = 25): DataFrame =
-    run(
-      prev.select(col("id").as("src"), col("rep").as("dst"))
-        .union(newEdges.select(col(src).as("src"), col(dst).as("dst"))),
-      maxIter = maxIter)
 }

@@ -27,6 +27,13 @@ object Hilbert {
     * the final alias is `hd0`. Each step consumes one bit (high to
     * low), accumulates s^2 * quadrant, and applies the
     * reflect-and-swap rotation.
+    *
+    * CAUTION (measured): DuckDB inlines lateral aliases TEXTUALLY, so
+    * this chained form explodes to a ~3^16-node expression tree there
+    * (minutes of planning); it is fine under Spark's analyzer (nested
+    * projections). The oracle therefore uses [[stepCtes]] — one CTE
+    * per step, whose materialization boundaries stop the blowup — and
+    * the per-step arithmetic strings stay shared via [[stepExprs]].
     */
   def lateralColsSeq(x: String, y: String): Seq[String] = {
     val init = Seq(
@@ -52,18 +59,6 @@ object Hilbert {
     }
     init ++ steps
   }
-
-  /** [[lateralColsSeq]] joined for embedding in a SQL SELECT list.
-    *
-    * CAUTION (measured): DuckDB inlines lateral aliases TEXTUALLY, so
-    * this chained form explodes to a ~3^16-node expression tree there
-    * (minutes of planning); it is fine under Spark's analyzer (nested
-    * projections). The oracle therefore uses [[stepCtes]] — one CTE
-    * per step, whose materialization boundaries stop the blowup — and
-    * the per-step arithmetic strings stay shared via [[stepExprs]].
-    */
-  def lateralCols(x: String, y: String): String =
-    lateralColsSeq(x, y).mkString(",\n")
 
   /** The i-th step's five output expressions over input columns
     * (hx, hy, hd) — the single arithmetic source both the lateral and

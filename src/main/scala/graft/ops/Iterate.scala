@@ -43,14 +43,11 @@ private[graft] object Iterate {
     * at toy scale it stops a 10-round loop from paying 32-task
     * scheduling overhead per stage on sub-64k-row frames — the
     * fixed per-round cost is what dominates iterative ops locally.
-    * Explicit override: `spark.graft.iter.partitions`.
     */
   def width(spark: org.apache.spark.sql.SparkSession, rows: Long,
       rowsPerTask: Long = 65536L): Int = {
     val nShuffle = spark.sessionState.conf.numShufflePartitions
-    spark.conf.getOption("spark.graft.iter.partitions").map(_.toInt)
-      .getOrElse(math.max(1L,
-        math.min(nShuffle.toLong, (rows + rowsPerTask - 1) / rowsPerTask)).toInt)
+    math.max(1L, math.min(nShuffle.toLong, (rows + rowsPerTask - 1) / rowsPerTask)).toInt
   }
 
   /** Run `body` with the session shuffle width scoped to

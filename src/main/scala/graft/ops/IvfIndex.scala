@@ -205,23 +205,4 @@ object IvfIndex {
       .withColumn("rank", row_number().over(wRank).cast("long"))
       .filter(col("rank") <= topK)
   }
-
-  /** A served index: materialized codebook + cached cell assignment.
-    * Build once, answer many query batches ([[graft.streaming.AnnServe]]);
-    * `close()` releases the cached assignment.
-    */
-  final case class ServedIndex(cb: DataFrame, assigned: DataFrame) {
-    def query(queries: DataFrame, nprobe: Int, topK: Int): DataFrame =
-      searchWith(assigned, cb, queries, nprobe, topK)
-    def close(): Unit = { assigned.unpersist(); () }
-  }
-
-  /** Build a served index over a corpus: deterministic codebook
-    * (materialized local relation) + cached nearest-cell assignment.
-    */
-  def buildIndex(corpus: DataFrame, k: Int, iters: Int = 2): ServedIndex = {
-    val cb = materialize(codebook(corpus, k, iters))
-    val assigned = assign(corpus, cb).cache()
-    ServedIndex(cb, assigned)
-  }
 }

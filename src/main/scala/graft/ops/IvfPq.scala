@@ -181,7 +181,7 @@ object IvfPq {
 
   /** Residual search for an external query frame ((q_id, q_emb); same
     * id-disjointness contract as [[searchWith]]) — the serving entry
-    * point ([[graft.streaming.AnnServe.startRes]]). Per batch: probes
+    * point ([[graft.streaming.AnnServe.writerRes]]). Per batch: probes
     * and ADC table broadcast as in the plain path, PLUS the exact
     * per-(query, probed-cell) correction scalar q·c — also bounded by
     * the probe set (nprobe rows/query), also broadcast.
@@ -280,65 +280,6 @@ object IvfPq {
     Pq.rerankExact(Pq.keepShortlist(scored, shortlist), raw, queries, topK)
   }
 
-  /** Incremental index maintenance: fold a batch of NEW vectors
-    * ((vec_id, embedding), ids disjoint from the corpus) into an existing
-    * index WITHOUT retraining either codebook — assign each new vector to
-    * its nearest existing coarse cell and encode it with the existing PQ
-    * codebooks. This is the production ingest path for a growing corpus:
-    * per batch it costs one broadcast-codebook pass over the batch (never
-    * the corpus), and the result is bit-identical to an index whose
-    * cells/codes were computed over the union corpus with the SAME
-    * codebooks (IvfPqSpec pins that parity).
-    *
-    * Codebooks do go stale as the data distribution drifts — recall
-    * degrades gracefully (cells get lopsided, ADC quantization error
-    * grows), it never breaks correctness of the re-rank. Rebuild cadence
-    * is an offline policy decision, exactly like any IVF system.
-    */
-  def append(idx: Index, newRaw: DataFrame, m: Int = Pq.M): Index = {
-    val newCells = IvfIndex.assign(newRaw, idx.coarse)
-      .select(col("vec_id"), col("cent_id"))
-    val newNorm = newRaw.select(col("vec_id"),
-      Pq.normalized(col("embedding")).as("embedding"))
-    val newCodes = Pq.encode(newNorm, idx.pqCb, m)
-    val newCellCodes = newCells.join(newCodes, "vec_id")
-      .select(col("vec_id"), col("cent_id"), col("sub_id"), col("code"))
-    Index(idx.coarse, idx.cells.unionByName(newCells), idx.pqCb,
-      idx.codes.unionByName(newCodes),
-      idx.cellCodes.unionByName(newCellCodes))
-  }
-
-  /** [[append]] for the RESIDUAL index: assign each new vector to its
-    * nearest existing coarse cell, subtract that cell's FROZEN mean,
-    * encode the residual with the existing residual codebooks — same
-    * O(batch) cost shape, same parity contract (bit-identical to
-    * same-codebook/same-means assignment over the union; IvfPqSpec).
-    * Cell means are index metadata and deliberately NOT updated by an
-    * append: q·x = q·(x−c) + q·c holds for ANY per-cell constant c, so
-    * a frozen mean keeps the search exact-correct — drift only moves
-    * quantization error back toward the global scale, which is the
-    * measured staleness curve (BASELINE.md r9: safe through ~30%
-    * drift-append; past that, rebuild — into the residual
-    * configuration, which is the rebuild that actually pays).
-    */
-  def appendResidual(
-      idx: ResIndex, newRaw: DataFrame, m: Int = Pq.M): ResIndex = {
-    val newCells = IvfIndex.assign(newRaw, idx.coarse)
-      .select(col("vec_id"), col("cent_id"))
-    val newNorm = newRaw.select(col("vec_id"),
-      Pq.normalized(col("embedding")).as("embedding"))
-    val newResid = newNorm.join(newCells, "vec_id")
-      .join(broadcast(idx.cmeans), "cent_id")
-      .select(col("vec_id"),
-        expr("zip_with(embedding, cent_mean, (a, b) -> a - b)")
-          .as("embedding"))
-    val newCodes = Pq.encode(newResid, idx.pqCb, m)
-    val newCellCodes = newCells.join(newCodes, "vec_id")
-      .select(col("vec_id"), col("cent_id"), col("sub_id"), col("code"))
-    ResIndex(idx.coarse, idx.cells.unionByName(newCells), idx.cmeans,
-      idx.pqCb, idx.cellCodes.unionByName(newCellCodes))
-  }
-
   /** Top-`topK` neighbours for the corpus rows matching `queryPred`. */
   def search(
       idx: Index,
@@ -353,38 +294,14 @@ object IvfPq {
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
       raw, m, nprobe, topK, shortlist)
 
-  /** A served IVF-PQ index: materialized codebooks + cached cells and
-    * codes. Build once, answer many query batches
-    * ([[graft.streaming.AnnServe.startPq]]); per batch a query reads the
-    * two broadcast codebooks and the probed cells' CODES — never the
-    * full-precision corpus beyond its shortlist. `close()` releases the
-    * cached frames.
-    */
-  final case class Served(idx: Index, raw: DataFrame, m: Int) {
-    def query(queries: DataFrame, nprobe: Int, topK: Int, shortlist: Int): DataFrame =
-      searchWith(idx, queries, raw, m, nprobe, topK, shortlist)
-    def close(): Unit = { idx.cellCodes.unpersist(); () }
-  }
-
-  /** Build a served index (the cell-keyed codes frame cached; codebooks
-    * local). Per-batch driver-side state is two broadcasts bounded by the
-    * batch: nprobe rows/query (probes) and m*k_sub rows/query (ADC table,
-    * ~4k rows/query at the defaults) — size batches so batch * 4k stays
-    * comfortably under the broadcast threshold (e.g. <= ~2k queries/batch
-    * at the defaults; above that, split the batch).
-    */
-  def buildServed(raw: DataFrame, m: Int = Pq.M): Served = {
-    val norm = raw.select(col("vec_id"), Pq.normalized(col("embedding")).as("embedding"))
-    val idx0 = build(raw, norm, m)
-    Served(idx0.copy(cellCodes = idx0.cellCodes.cache()), raw, m)
-  }
-
-  /** A served RESIDUAL IVF-PQ index ([[buildResidual]]) — the variant
-    * that holds its shortlist quality on clustered corpora. Same serving
-    * shape as [[Served]]; the residual correction term (the exact q·c
-    * scalar per (query, probed cell)) is recomputed per batch from the
-    * broadcast `cmeans` metadata, so serving state stays: two local
-    * codebooks + cells-count mean rows + the cached cell-keyed codes.
+  /** A served RESIDUAL IVF-PQ index ([[buildResidual]]): materialized
+    * codebooks + the cached cell-keyed codes. Build once, answer many
+    * query batches ([[graft.streaming.AnnServe.writerRes]]); per batch a
+    * query reads the broadcast codebooks and the probed cells' CODES —
+    * never the full-precision corpus beyond its shortlist. The residual
+    * correction term (the exact q·c scalar per (query, probed cell)) is
+    * recomputed per batch from the broadcast `cmeans` metadata.
+    * `close()` releases the cached codes.
     */
   final case class ServedRes(idx: ResIndex, raw: DataFrame, m: Int) {
     def query(queries: DataFrame, nprobe: Int, topK: Int, shortlist: Int): DataFrame =
@@ -394,8 +311,11 @@ object IvfPq {
 
   /** Build a served residual index (cell-keyed residual codes cached;
     * coarse codebook, PQ codebooks and cell means all local metadata).
-    * Batch-size guidance as [[buildServed]], plus nprobe correction rows
-    * per query — negligible next to the ADC table.
+    * Per-batch driver-side state is broadcasts bounded by the batch:
+    * nprobe rows/query (probes and their correction scalars) and m*k_sub
+    * rows/query (ADC table, ~4k rows/query at the defaults) — size
+    * batches so batch * 4k stays comfortably under the broadcast
+    * threshold (e.g. <= ~2k queries/batch at the defaults).
     */
   def buildServedResidual(raw: DataFrame, m: Int = Pq.M): ServedRes = {
     val norm = raw.select(col("vec_id"), Pq.normalized(col("embedding")).as("embedding"))

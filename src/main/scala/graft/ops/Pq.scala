@@ -76,17 +76,11 @@ object Pq {
         s"transform(sequence(0, $m - 1), s -> slice($vecCol, s * (size($vecCol) div $m) + 1, size($vecCol) div $m))"))
         .as(Seq("sub_id", "sub_emb")))
 
-  /** Squared L2 distance as three dot folds — same association as the
-    * oracle: ((a.a - 2*a.b) + b.b).
-    */
-  private def d2(a: Column, b: Column): Column =
-    VecOps.vecDot(a, a) - lit(2.0) * VecOps.vecDot(a, b) + VecOps.vecDot(b, b)
-
-  /** d2 with the two self-dots precomputed: ((aa - 2*a.b) + bb). The
-    * VALUE is bit-identical to [[d2]] (each dot is a deterministic fold),
-    * but the assignment hot loop pays ONE fold per candidate instead of
-    * three — aa is computed once per sub-vector on the stream side, bb
-    * once per codeword on the broadcast build side.
+  /** Squared L2 distance with the two self-dots precomputed — same
+    * association as the oracle: ((aa - 2*a.b) + bb), each dot a
+    * deterministic fold. The assignment hot loop pays ONE fold per
+    * candidate instead of three — aa is computed once per sub-vector on
+    * the stream side, bb once per codeword on the broadcast build side.
     */
   private def d2Cached(aa: Column, a: Column, b: Column, bb: Column): Column =
     aa - lit(2.0) * VecOps.vecDot(a, b) + bb

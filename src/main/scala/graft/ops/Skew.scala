@@ -36,8 +36,6 @@ object Skew {
 
   val sumAgg: String => SaltedAgg =
     c => SaltedAgg(c, sum, sum)
-  val countAgg: SaltedAgg =
-    SaltedAgg("count", _ => count(lit(1)), sum)
   val minAgg: String => SaltedAgg =
     c => SaltedAgg(c, min, min)
   val maxAgg: String => SaltedAgg =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) clustering for multi-dimensional scan locality.
@@ -9,9 +9,8 @@ import org.apache.spark.sql.functions._
   * quantity) can only prune file/row-group stats for the single sort
   * column under a linear layout; sorting by the interleaved-bit z-value
   * keeps BOTH dimensions' min/max ranges narrow per file, so either
-  * predicate skips data. This is layout work — pure Spark writes
-  * (`repartitionByRange` on the z-value + `sortWithinPartitions`), no
-  * custom committer.
+  * predicate skips data. `q_zorder` and `q_zorder3` compute that
+  * clustering key.
   *
   * The bit-spreading uses the standard magic-number Morton encoding
   * (public "Bit Twiddling Hacks" construction). It is emitted as a SQL
@@ -81,56 +80,4 @@ object ZOrder {
     when(mx === mn, lit(0L)).otherwise(
       least(lit(65535L),
         floor((c.cast("double") - mn) * lit(65536.0) / (mx - mn))))
-
-  /** Append `zval` from two numeric columns, normalizing each by its
-    * GLOBAL min/max (one grouped-stats pass broadcast back as a single
-    * row — the same two-pass shape as the min-max normalizer; no
-    * whole-partition window).
-    */
-  def withZValue(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val stats = df.agg(
-      min(col(xCol).cast("double")).as("__xmn"),
-      max(col(xCol).cast("double")).as("__xmx"),
-      min(col(yCol).cast("double")).as("__ymn"),
-      max(col(yCol).cast("double")).as("__ymx"))
-    df.crossJoin(broadcast(stats))
-      .withColumn("__xc", cell16(col(xCol), col("__xmn"), col("__xmx")))
-      .withColumn("__yc", cell16(col(yCol), col("__ymn"), col("__ymx")))
-      .withColumn("zval", expr(zvalueSql("__xc", "__yc")))
-      .drop("__xmn", "__xmx", "__ymn", "__ymx", "__xc", "__yc")
-  }
-
-  /** 3-D counterpart of [[withZValue]]: one grouped-stats pass for all
-    * three ranges, broadcast back, 21-bit cells, one 63-bit z-value.
-    */
-  def withZValue3(
-      df: DataFrame, xCol: String, yCol: String, zCol: String): DataFrame = {
-    val stats = df.agg(
-      min(col(xCol).cast("double")).as("__xmn"),
-      max(col(xCol).cast("double")).as("__xmx"),
-      min(col(yCol).cast("double")).as("__ymn"),
-      max(col(yCol).cast("double")).as("__ymx"),
-      min(col(zCol).cast("double")).as("__zmn"),
-      max(col(zCol).cast("double")).as("__zmx"))
-    df.crossJoin(broadcast(stats))
-      .withColumn("__xc", cell21(col(xCol), col("__xmn"), col("__xmx")))
-      .withColumn("__yc", cell21(col(yCol), col("__ymn"), col("__ymx")))
-      .withColumn("__zc", cell21(col(zCol), col("__zmn"), col("__zmx")))
-      .withColumn("zval", expr(zvalue3Sql("__xc", "__yc", "__zc")))
-      .drop("__xmn", "__xmx", "__ymn", "__ymx", "__zmn", "__zmx",
-        "__xc", "__yc", "__zc")
-  }
-
-  /** Write `df` parquet z-clustered on (xCol, yCol): range-partitioned
-    * by z-value into `files` output tasks, z-sorted within each, so
-    * parquet file/row-group min-max stats stay tight on BOTH columns.
-    */
-  def writeZOrdered(
-      df: DataFrame, xCol: String, yCol: String,
-      path: String, files: Int): Unit =
-    withZValue(df, xCol, yCol)
-      .repartitionByRange(files, col("zval"))
-      .sortWithinPartitions(col("zval"))
-      .drop("zval")
-      .write.mode("overwrite").parquet(path)
 }

@@ -27,8 +27,6 @@ import graft.ops.{ConnectedComponents, Curation, NearDup, SaDedup, Sharding, Tex
   */
 object CorpusPipeline {
 
-  final case class StageCount(stage: String, rows: Long)
-
   /** The per-stage document frames, in order (last = curated docs ready
     * for chunking). Exposed for accounting/tests; `curate` is the
     * end-to-end entry point.
@@ -114,20 +112,5 @@ object CorpusPipeline {
     Sharding
       .packBins(chunks, "chunk_key", "n_chunk_tokens", packShards, packBudget)
       .drop("chunk_key", "text")
-  }
-
-  /** `curate` plus per-stage document accounting (counts are one cheap
-    * aggregate per stage — at 100 TB run them on demand, not inline).
-    */
-  def curateWithCounts(
-      docs: DataFrame,
-      evalSet: Option[DataFrame] = None,
-      chunkSize: Int = 32,
-      chunkStride: Int = 24): (DataFrame, Seq[StageCount]) = {
-    val stages = docStages(docs, evalSet)
-    val out = curate(docs, evalSet, chunkSize, chunkStride)
-    val counts = stages.map { case (n, df) => StageCount(n, df.count()) } :+
-      StageCount("chunks", out.count())
-    (out, counts)
   }
 }

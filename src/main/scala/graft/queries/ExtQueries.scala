@@ -149,8 +149,6 @@ object ExtQueries {
     * variant stays as the small-corpus default.
     */
   private val SimBits = graft.ops.NearDup.SimBits
-  private val BandBits = graft.ops.NearDup.SimBandBits
-  private val NumBands = graft.ops.NearDup.SimBands
 
   /** 60-bit SimHash signature per doc (shared by q_simhash / q_simhash_pairs).
     * Per-token hash = the full 60-bit md5 prefix (no mod-P reduction — every
@@ -935,12 +933,11 @@ object ExtQueries {
       "broadcast side is the single-row per-dim stats frame"),
 
     // ---- z-order (Morton) cell + z-value of the (value, event_id)
-    //      plane: the clustering key behind ZOrder.writeZOrdered's
-    //      two-dimensional layout (ZOrderSpec pins the file-level
-    //      locality claim). The bit-spreading SQL string is shared
-    //      verbatim with the oracle — `<<`/`&`/`|` parse identically in
-    //      Spark SQL and DuckDB — and the normalization reuses the
-    //      broadcast single-row stats shape ----
+    //      plane: the clustering key of a two-dimensional layout. The
+    //      bit-spreading SQL string is shared verbatim with the oracle —
+    //      `<<`/`&`/`|` parse identically in Spark SQL and DuckDB — and
+    //      the normalization reuses the broadcast single-row stats
+    //      shape ----
     QueryDef.sql(
       "q_zorder",
       s"""WITH st AS (

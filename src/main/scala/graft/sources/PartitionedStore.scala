@@ -54,29 +54,6 @@ object PartitionedStore {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Persist as a BUCKETED catalog table: rows hash-clustered into
-    * `numBuckets` files per partition by `bucketCol`, files sorted within
-    * each bucket. Two tables bucketed the same way join/aggregate on the
-    * bucket column with NO shuffle on either side — at 100 TB this is the
-    * difference between a co-located merge join and re-shuffling the fact
-    * table for every join. (Bucketing needs the catalog: metadata lives in
-    * the session metastore, hence saveAsTable rather than a path write.)
-    */
-  def writeBucketed(
-      df: DataFrame,
-      tableName: String,
-      bucketCol: String,
-      numBuckets: Int = 64,
-      sortCols: Seq[String] = Nil): Unit = {
-    val writer = df.write
-      .mode("overwrite")
-      .bucketBy(numBuckets, bucketCol)
-    (if (sortCols.nonEmpty) writer.sortBy(sortCols.head, sortCols.tail: _*)
-     else writer)
-      .format("parquet")
-      .saveAsTable(tableName)
-  }
-
   /** Compact a store accumulated through many small appends (the
     * streaming-sink pattern: every micro-batch writes a file per
     * partition, and a day of 1-minute triggers leaves ~1440 slivers per

@@ -1,24 +1,24 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.ops.{IvfIndex, IvfPq}
+import graft.ops.IvfPq
 
 /** Streaming ANN lookup service: a stream of query vectors answered per
-  * micro-batch against a pre-built static IVF index
-  * ([[IvfIndex.buildIndex]]) — the serving half of the similarity-search
-  * story (the batch half is `q_knn_ivf`).
+  * micro-batch against a pre-built static residual IVF-PQ index
+  * ([[IvfPq.buildServedResidual]]) — the serving half of the
+  * similarity-search story (the batch half is `q_knn_ivfpq_res`).
   *
-  * Shape: `foreachBatch` + the BATCH search ([[IvfIndex.searchWith]]),
-  * because a top-k per query needs ranking windows and a corpus join,
-  * which append-mode streaming operators cannot express directly — and
-  * because each query is fully answerable within its own micro-batch, so
-  * no cross-batch state is needed at all. The index side is where the
-  * 100 TB scale lives: the codebook is a broadcast local relation and the
-  * cell assignment is computed ONCE and cached, so each query batch costs
-  * (batch x k) probe scoring plus a broadcast-probed join against only
-  * the probed cells' vectors.
+  * Shape: `foreachBatch` + the BATCH search
+  * ([[IvfPq.searchResidualWith]]), because a top-k per query needs
+  * ranking windows and a corpus join, which append-mode streaming
+  * operators cannot express directly — and because each query is fully
+  * answerable within its own micro-batch, so no cross-batch state is
+  * needed at all. The index side is where the 100 TB scale lives: the
+  * codebooks are broadcast local relations and the cell-keyed codes are
+  * computed ONCE and cached, so each query batch costs ADC scoring of the
+  * probed cells' codes plus a shortlist re-rank.
   *
   * Results are exactly the batch search's results for the same vectors —
   * spec-pinned (AnnServeSpec), not just claimed.
@@ -29,61 +29,12 @@ object AnnServe {
   final case class QueryVec(q_id: Long, q_emb: Array[Float])
 
   /** Attach the per-batch answerer to a query stream; `onResult` receives
-    * each batch's (q_id, c_id, cosine, rank) frame (write it to your
-    * sink — memory table, Kafka frame, JDBC — batch semantics apply).
-    */
-  def writer(
-      queries: Dataset[QueryVec],
-      index: IvfIndex.ServedIndex,
-      nprobe: Int,
-      topK: Int)(onResult: (DataFrame, Long) => Unit): DataStreamWriter[QueryVec] =
-    queries.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: Dataset[QueryVec], batchId: Long) =>
-        onResult(index.query(batch.toDF(), nprobe, topK), batchId)
-      }
-
-  /** Convenience: start the service with a no-frills callback sink. */
-  def start(
-      queries: Dataset[QueryVec],
-      index: IvfIndex.ServedIndex,
-      nprobe: Int,
-      topK: Int)(onResult: (DataFrame, Long) => Unit): StreamingQuery =
-    writer(queries, index, nprobe, topK)(onResult).start()
-
-  /** IVF-PQ-backed variant ([[IvfPq.buildServed]]): per batch the probed
-    * cells are scanned as 16-byte codes (ADC against a broadcast lookup
-    * table built from the batch's queries) and only the shortlist reads
-    * full-precision vectors — the per-batch cost that survives a 10^9-row
-    * corpus. Results carry (q_id, c_id, score_pq, cosine, rank).
-    */
-  def writerPq(
-      queries: Dataset[QueryVec],
-      served: IvfPq.Served,
-      nprobe: Int,
-      topK: Int,
-      shortlist: Int)(onResult: (DataFrame, Long) => Unit): DataStreamWriter[QueryVec] =
-    queries.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: Dataset[QueryVec], batchId: Long) =>
-        onResult(served.query(batch.toDF(), nprobe, topK, shortlist), batchId)
-      }
-
-  /** Start the IVF-PQ service with a no-frills callback sink. */
-  def startPq(
-      queries: Dataset[QueryVec],
-      served: IvfPq.Served,
-      nprobe: Int,
-      topK: Int,
-      shortlist: Int)(onResult: (DataFrame, Long) => Unit): StreamingQuery =
-    writerPq(queries, served, nprobe, topK, shortlist)(onResult).start()
-
-  /** Residual-IVF-PQ-backed variant ([[IvfPq.buildServedResidual]]):
-    * the serving leg of `q_knn_ivfpq_res` — per batch the probed cells'
-    * RESIDUAL codes are ADC-scored and corrected by the exact
-    * per-(query, probed-cell) q·c scalar (both broadcast, both bounded
-    * by the query batch), so shortlist quality survives clustered
-    * corpora at the same per-batch cost shape as [[writerPq]].
+    * each batch's (q_id, c_id, score_pq, cosine, rank) frame (write it to
+    * your sink — memory table, Kafka frame, JDBC — batch semantics
+    * apply). Per batch the probed cells' RESIDUAL codes are ADC-scored and
+    * corrected by the exact per-(query, probed-cell) q·c scalar (both
+    * broadcast, both bounded by the query batch), so shortlist quality
+    * survives clustered corpora.
     */
   def writerRes(
       queries: Dataset[QueryVec],
@@ -96,13 +47,4 @@ object AnnServe {
       .foreachBatch { (batch: Dataset[QueryVec], batchId: Long) =>
         onResult(served.query(batch.toDF(), nprobe, topK, shortlist), batchId)
       }
-
-  /** Start the residual IVF-PQ service with a no-frills callback sink. */
-  def startRes(
-      queries: Dataset[QueryVec],
-      served: IvfPq.ServedRes,
-      nprobe: Int,
-      topK: Int,
-      shortlist: Int)(onResult: (DataFrame, Long) => Unit): StreamingQuery =
-    writerRes(queries, served, nprobe, topK, shortlist)(onResult).start()
 }

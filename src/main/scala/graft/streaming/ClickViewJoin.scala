@@ -41,26 +41,11 @@ object ClickViewJoin {
     * click_id, click_ts), one row per view→click pair within 1 hour.
     */
   def pairs(views: DataFrame, clicks: DataFrame): DataFrame =
-    joined(views, clicks, "inner")
-
-  /** LEFT OUTER variant: every view emits — matched rows immediately,
-    * unmatched views as (click_id, click_ts) = null once the watermark
-    * proves no click can still arrive for their window (Spark holds the
-    * outer row until view_ts + 1h falls behind the click watermark —
-    * the outer-join state-timeout semantics the inner join never
-    * exercises). Downstream = the unconverted-impressions feed.
-    */
-  def leftPairs(views: DataFrame, clicks: DataFrame): DataFrame =
-    joined(views, clicks, "left_outer")
-
-  private def joined(
-      views: DataFrame, clicks: DataFrame, how: String): DataFrame =
     views.withWatermark("view_ts", "2 hours")
       .join(clicks.withWatermark("click_ts", "2 hours"),
         expr("user_id = click_user" +
           " AND view_ts <= click_ts" +
-          " AND click_ts < view_ts + INTERVAL 1 HOUR"),
-        how)
+          " AND click_ts < view_ts + INTERVAL 1 HOUR"))
       .select(col("user_id"), col("view_id"), col("view_ts"),
         col("click_id"), col("click_ts"))
 }

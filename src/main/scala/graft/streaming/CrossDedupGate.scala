@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * as the batch operator) are looked up in a STATIC corpus band index,
   * and the doc is flagged with its min-id corpus match (null = new).
   *
-  * Unlike [[DocStream.nearDupGate]] (stream vs its OWN history,
-  * transformWithState) this carries ZERO streaming state: the corpus
+  * The gate carries ZERO streaming state: the corpus
   * side is a static frame, so the whole gate is 4 append-mode
   * stream-static hash joins — no watermark, no state store, restart
   * cost nil. At 100 TB the index is a persisted table bucketed on

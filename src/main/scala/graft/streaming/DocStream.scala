@@ -46,17 +46,6 @@ object DocStream {
       .withColumn("verdict", TextPrep.verdict)
       .filter(col("verdict") === "keep")
 
-  /** PII scrub gate: replace `text` with its redacted form (emails,
-    * phones, IPv4 — [[graft.ops.Curation.piiScrub]], the batch
-    * q_pii_scrub expressions verbatim) and carry the per-type match
-    * counts for observability. Stateless per-row regex — composes
-    * anywhere in the stream without adding state or shuffle.
-    */
-  def scrubGate(docs: DataFrame): DataFrame =
-    graft.ops.Curation.piiScrub(docs)
-      .withColumn("text", col("redacted"))
-      .drop("redacted")
-
   /** Full pipeline: dedup -> quality -> chunk (size/stride of the batch
     * q_chunk_docs operator). Output: one row per training chunk.
     */
@@ -69,237 +58,4 @@ object DocStream {
       qualityGate(dedupGate(docs, watermark)), chunkSize, stride)
       .select("doc_id", "ingest_ts", "lang", "chunk_id", "chunk_text",
         "n_chunk_tokens")
-
-  // ------------------------------------------------- streaming NEAR-dup
-  /** One exploded band row of a document's row-local minhash signature. */
-  final case class BandKeyRow(
-      band_key: String, doc_id: Long, ingest_ts: java.sql.Timestamp)
-
-  /** Stage-1 output: did this doc's band collide with an earlier doc? */
-  final case class BandVote(
-      doc_id: Long, ingest_ts: java.sql.Timestamp, collided: Boolean)
-
-  /** Streaming near-dup verdict for one document. */
-  final case class NearDupVerdict(
-      doc_id: Long, ingest_ts: java.sql.Timestamp, is_near_dup: Boolean)
-
-  /** Stage 1: first-wins per band bucket. State = one boolean per seen
-    * band value (the inverted index of the stream so far); rows within a
-    * batch fold in (ingest_ts, doc_id) order so same-batch near-dups
-    * resolve deterministically (earlier doc wins). An optional TTL bounds
-    * the index: state = distinct band values seen within the retention
-    * horizon, not the full stream history (dedup-against-recent, the
-    * usual contract for an unbounded ingest feed).
-    */
-  class BandSeenProcessor(ttl: Option[java.time.Duration] = None)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, BandKeyRow, BandVote] {
-    @transient private var seen:
-        org.apache.spark.sql.streaming.ValueState[Boolean] = _
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean](
-        "seen", org.apache.spark.sql.Encoders.scalaBoolean,
-        ttl.map(org.apache.spark.sql.streaming.TTLConfig.apply)
-          .getOrElse(org.apache.spark.sql.streaming.TTLConfig.NONE))
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[BandKeyRow],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[BandVote] = {
-      val sorted = rows.toSeq.sortBy(r => (r.ingest_ts.getTime, r.doc_id))
-      var s = seen.exists() && seen.get()
-      val out = sorted.map { r =>
-        val v = BandVote(r.doc_id, r.ingest_ts, collided = s)
-        s = true
-        v
-      }
-      seen.update(true)
-      out.iterator
-    }
-  }
-
-  /** Stage 2: combine a doc's band votes (all arrive within the doc's own
-    * micro-batch, since the explode and stage 1 run in the same batch) —
-    * near-dup iff ANY band collided. Stateless per batch; keyed TWS is
-    * used only because a streaming frame cannot run a plain groupBy
-    * without watermark/window machinery this does not need.
-    */
-  class VoteCombineProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, BandVote, NearDupVerdict] {
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = ()
-    override def handleInputRows(
-        key: Long,
-        rows: Iterator[BandVote],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[NearDupVerdict] = {
-      val vs = rows.toSeq
-      Iterator.single(
-        NearDupVerdict(key, vs.head.ingest_ts, vs.exists(_.collided)))
-    }
-  }
-
-  /** Streaming MinHash near-dup gate: each arriving document is flagged
-    * iff any of its 4 minhash bands (row-local signature,
-    * [[graft.ops.NearDup.withRowMinhashBands]] — same values as the batch
-    * operator) was already produced by an earlier document. First
-    * arrival wins; state = one boolean per distinct band value seen
-    * (the streaming inverted index), bounded by `ttl` when given
-    * (dedup-against-recent) or retained forever when None. Requires the
-    * RocksDB state store provider (transformWithState).
-    *
-    * With `ttl` set the operators run in processing-time mode, and Spark
-    * schedules a batch EVERY trigger to advance TTL cleanup
-    * (`shouldRunAnotherBatch` is always true) — run the query with a
-    * paced trigger (e.g. `Trigger.ProcessingTime("10 seconds")`) or
-    * `Trigger.AvailableNow`, never the default 0 ms trigger, and don't
-    * wait on `processAllAvailable` (it never observes quiescence).
-    */
-  def nearDupGate(
-      docs: Dataset[DocEvent],
-      ttl: Option[java.time.Duration] = None): Dataset[NearDupVerdict] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val timeMode =
-      if (ttl.isDefined) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    val banded = graft.ops.NearDup
-      .withRowMinhashBands(docs.toDF(), "doc_id", "text")
-      .select(
-        col("doc_id"), col("ingest_ts"),
-        explode(expr(
-          "array(concat('0:', band_0), concat('1:', band_1), " +
-            "concat('2:', band_2), concat('3:', band_3))")).as("band_key"))
-      .as[BandKeyRow]
-    banded
-      .groupByKey(_.band_key)
-      .transformWithState(
-        new BandSeenProcessor(ttl),
-        timeMode,
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      .groupByKey(_.doc_id)
-      .transformWithState(
-        new VoteCombineProcessor,
-        timeMode,
-        org.apache.spark.sql.streaming.OutputMode.Append())
-  }
-
-  // --------------------------------------- streaming PARAGRAPH dedup
-  /** One exploded paragraph of a streamed document. */
-  final case class ParaRow(
-      para_hash: String, doc_id: Long, ingest_ts: Timestamp,
-      pos: Int, para: String)
-
-  /** Stage-1 verdict: was this paragraph's first global occurrence? */
-  final case class ParaVote(
-      doc_id: Long, ingest_ts: Timestamp, pos: Int, para: String,
-      kept: Boolean)
-
-  /** Reassembled per-document output — the [[graft.ops.ParaDedup]]
-    * row shape.
-    */
-  final case class ParaDocOut(
-      doc_id: Long, ingest_ts: Timestamp, n_paras: Long, n_kept: Long,
-      clean_text: String)
-
-  /** Stage 1: first-wins per paragraph. State = one boolean per distinct
-    * paragraph hash seen (TTL-bounded when given — dedup-against-recent,
-    * like [[BandSeenProcessor]]); rows within a batch fold in
-    * (ingest_ts, doc_id, pos) order so same-batch repeats resolve
-    * deterministically to the earliest occurrence.
-    */
-  class ParaSeenProcessor(ttl: Option[java.time.Duration] = None)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, ParaRow, ParaVote] {
-    @transient private var seen:
-        org.apache.spark.sql.streaming.ValueState[Boolean] = _
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean](
-        "seen", org.apache.spark.sql.Encoders.scalaBoolean,
-        ttl.map(org.apache.spark.sql.streaming.TTLConfig.apply)
-          .getOrElse(org.apache.spark.sql.streaming.TTLConfig.NONE))
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[ParaRow],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[ParaVote] = {
-      val sorted = rows.toSeq.sortBy(r => (r.ingest_ts.getTime, r.doc_id, r.pos))
-      var s = seen.exists() && seen.get()
-      val out = sorted.map { r =>
-        val v = ParaVote(r.doc_id, r.ingest_ts, r.pos, r.para, kept = !s)
-        s = true
-        v
-      }
-      seen.update(true)
-      out.iterator
-    }
-  }
-
-  /** Stage 2: reassemble a document from its paragraph votes (all arrive
-    * within the doc's own micro-batch — explode and stage 1 run in the
-    * same batch). Stateless per batch, like [[VoteCombineProcessor]].
-    */
-  class ParaAssembleProcessor(sep: String)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, ParaVote, ParaDocOut] {
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = ()
-    override def handleInputRows(
-        key: Long,
-        rows: Iterator[ParaVote],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[ParaDocOut] = {
-      val vs = rows.toSeq
-      val kept = vs.filter(_.kept).sortBy(_.pos)
-      Iterator.single(ParaDocOut(
-        key, vs.head.ingest_ts, vs.length.toLong, kept.length.toLong,
-        kept.map(_.para).mkString(sep)))
-    }
-  }
-
-  /** Streaming twin of [[graft.ops.ParaDedup.dedupParagraphs]]: every
-    * arriving document keeps only paragraphs never seen before on the
-    * stream (exact text, keyed by the 128-bit md5 — the hash-keyed
-    * variant the batch op's scale note describes), reassembled in
-    * position order. When documents arrive in (doc_id) order the output
-    * is row-identical to the batch operator (the parity spec pins it);
-    * state = one boolean per distinct paragraph within the TTL horizon.
-    * Same trigger caveats as [[nearDupGate]] when `ttl` is set.
-    */
-  def paraDedupGate(
-      docs: Dataset[DocEvent],
-      sep: String = "\n\n",
-      ttl: Option[java.time.Duration] = None): Dataset[ParaDocOut] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val timeMode =
-      if (ttl.isDefined) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    val paras = docs.toDF()
-      .select(
-        col("doc_id"), col("ingest_ts"),
-        posexplode(split(col("text"), java.util.regex.Pattern.quote(sep)))
-          .as(Seq("pos", "para")))
-      .select(md5(col("para")).as("para_hash"), col("doc_id"),
-        col("ingest_ts"), col("pos"), col("para"))
-      .as[ParaRow]
-    paras
-      .groupByKey(_.para_hash)
-      .transformWithState(
-        new ParaSeenProcessor(ttl),
-        timeMode,
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      .groupByKey(_.doc_id)
-      .transformWithState(
-        new ParaAssembleProcessor(sep),
-        timeMode,
-        org.apache.spark.sql.streaming.OutputMode.Append())
-  }
 }

@@ -195,113 +195,6 @@ object StreamingIndicators {
       col("stock_symbol").as("key"),
       to_json(struct(col("*"))).as("value"))
 
-  /** Watermarked tumbling-window OHLC resampling on the live stream — the
-    * streaming twin of the batch `q_ohlc_bars` operator. Late rows beyond
-    * the watermark are dropped; each bar is emitted once, when the
-    * watermark passes its end (append mode). `min_by`/`max_by` on event
-    * time give open/close without a per-window sort, so the whole thing is
-    * one shuffled streaming aggregation with bounded state (open windows
-    * only).
-    */
-  def windowedOhlc(
-      candles: Dataset[Candle],
-      barWidth: String = "1 hour",
-      watermark: String = "30 minutes"): DataFrame =
-    candles
-      .withWatermark("local_time", watermark)
-      .groupBy(
-        col("stock_symbol"),
-        window(col("local_time"), barWidth).as("bar"))
-      .agg(
-        // struct ordering keys make equal-timestamp ticks deterministic
-        // even when the caller skips the dedup gate
-        min_by(col("open"), struct(col("local_time"), col("open"))).as("open"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        max_by(col("close"), struct(col("local_time"), col("close"))).as("close"),
-        sum(col("volume")).as("volume"),
-        count(lit(1)).as("n_ticks"))
-      .select(
-        col("stock_symbol"), col("bar.start").as("bar_ts"),
-        col("open"), col("high"), col("low"), col("close"),
-        col("volume"), col("n_ticks"))
-
-  /** Watermarked streaming sessionization: activity sessions per key close
-    * after `gap` of event-time silence and emit once the watermark passes
-    * (append mode). The streaming twin of the batch gap-based q_sessions
-    * operator, on Spark's native `session_window` (state = open sessions
-    * only, merged incrementally — no per-event state accumulation).
-    */
-  def sessionize(
-      events: DataFrame,
-      keyCol: String = "stock_symbol",
-      timeCol: String = "local_time",
-      valueCol: String = "close",
-      gap: String = "30 minutes",
-      watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark(timeCol, watermark)
-      .groupBy(col(keyCol), session_window(col(timeCol), gap).as("sess"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        min(col(timeCol)).as("session_start"),
-        max(col(timeCol)).as("session_end"),
-        sum(col(valueCol)).as("sum_value"))
-      .select(
-        col(keyCol), col("sess.start").as("window_start"),
-        col("sess.end").as("window_end"), col("n_events"),
-        col("session_start"), col("session_end"), col("sum_value"))
-
-  /** Stream-stream interval join: each left-stream event matched to all
-    * right-stream events for the same key within `[t - lookback, t]` —
-    * trade-to-quote matching, order-to-fill correlation, etc. Watermarks
-    * on BOTH sides bound the join state (Spark evicts buffered rows once
-    * they can no longer match), so state stays proportional to the
-    * lookback window, not the stream history.
-    */
-  def intervalJoin(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String = "stock_symbol",
-      timeCol: String = "local_time",
-      lookback: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame = {
-    val l = left.withWatermark(timeCol, watermark).alias("l")
-    val r = right.withWatermark(timeCol, watermark).alias("r")
-    l.join(
-      r,
-      expr(
-        s"""l.$keyCol = r.$keyCol AND
-           |r.$timeCol BETWEEN l.$timeCol - INTERVAL $lookback AND l.$timeCol
-           |""".stripMargin))
-  }
-
-  /** LEFT OUTER variant of [[intervalJoin]]: every left row is emitted —
-    * matched rows as soon as the match arrives, UNMATCHED rows
-    * null-padded only once the watermark passes the end of their match
-    * interval (before that a matching right row could still arrive, so
-    * emitting early would be wrong; this deferred null emission is the
-    * part the inner join doesn't exercise). Same bounded state: both
-    * sides evict with the watermark.
-    */
-  def intervalJoinOuter(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String = "stock_symbol",
-      timeCol: String = "local_time",
-      lookback: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame = {
-    val l = left.withWatermark(timeCol, watermark).alias("l")
-    val r = right.withWatermark(timeCol, watermark).alias("r")
-    l.join(
-      r,
-      expr(
-        s"""l.$keyCol = r.$keyCol AND
-           |r.$timeCol BETWEEN l.$timeCol - INTERVAL $lookback AND l.$timeCol
-           |""".stripMargin),
-      "leftOuter")
-  }
-
   /** The reference's input decode (S3): Kafka value bytes -> Candle columns
     * (consumer.py:254-256 with the schema at consumer.py:235-243).
     */

@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+
+import graft.queries.QueryDef
 
 /** Physical-plan quality gates: these assert the *shape* that keeps each
   * operator viable at 100 TB — broadcast joins for small dims (no shuffle
@@ -24,28 +26,17 @@ class PlanQualitySpec extends AnyFunSuite with Matchers {
     df.queryExecution.executedPlan
   }
 
-  private def collectAll[T](df: DataFrame)(pf: PartialFunction[Any, T]): Seq[T] = {
-    val plan = executed(df)
-    val finalPlan = plan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    // collect recurses through AQE-wrapped subtrees via transformDown
-    val buf = scala.collection.mutable.ArrayBuffer.empty[T]
-    def walk(node: org.apache.spark.sql.execution.SparkPlan): Unit = {
-      if (pf.isDefinedAt(node)) buf += pf(node)
-      node match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
-          b.children.foreach(walk)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(q.plan)
-        case other => other.children.foreach(walk)
-      }
-    }
-    walk(finalPlan)
-    buf.toSeq
+  /** Every node of `plan`, through AQE wrappers, query stages and
+    * subqueries.
+    */
+  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case p => p +: (p.children ++ p.subqueries).flatMap(nodes)
   }
+
+  private def collectAll[T](df: DataFrame)(pf: PartialFunction[SparkPlan, T]): Seq[T] =
+    nodes(executed(df)).collect(pf)
 
   test("q5-shape join broadcasts every dimension (fact table never shuffled for the joins)") {
     val df = SparkEntry.queries("q5_local_supplier")(spark, sfDir)
@@ -100,36 +91,47 @@ class PlanQualitySpec extends AnyFunSuite with Matchers {
     * see the distributed plan (the one that runs at 100 TB) as well as
     * the local tail the fixture reaches. Built once for both gates.
     */
-  private lazy val plans: Seq[(String, Seq[String])] =
+  private lazy val plans: Seq[(String, Seq[SparkPlan])] =
     RegistryBuilds.of(sfDir).map { b =>
       val forced =
         if (!b.gated) Nil
         else Seq(graft.ops.LocalTail.scoped(
           Some(graft.ops.LocalTail.Distributed))(
-          SparkEntry.queries(b.name)(spark, sfDir)
-            .queryExecution.executedPlan.toString)._1)
+          SparkEntry.queries(b.name)(spark, sfDir).queryExecution.executedPlan)._1)
       b.name -> (b.plan +: forced)
     }
+
+  /** Entries that plan `shape` on some branch, and the stale intents:
+    * annotated entries that plan it on no branch. Intent lives ON the
+    * QueryDef (with a justification string), so a new query cannot
+    * silently skip a gate by editing a spec-local whitelist.
+    */
+  private def planned(annotated: QueryDef => Boolean)(shape: SparkPlan => Boolean)
+      : (Seq[String], Seq[String]) = {
+    val intended = SparkEntry.allQueries.filter(annotated).map(_.name).toSet
+    val shaped = plans.map { case (name, ps) => name -> ps.exists(p => nodes(p).exists(shape)) }
+    (shaped.collect { case (name, true) if !intended(name) => name },
+      shaped.collect { case (name, false) if intended(name) => name })
+  }
+
+  private lazy val nestedLoop = planned(_.planIntent.broadcastNestedLoop.isDefined) {
+    case _: BroadcastNestedLoopJoinExec => true
+    case _ => false
+  }
 
   test("NO query plans a cartesian product or accidental nested-loop join") {
     // broadcast cross joins against a tiny probe/centroid set (knn/ivf/
     // semdedup: k ~ sqrt(n) centroid rows) — or the single-row corpus
     // stats frame (tfidf's doc count, domain_mix's min-domain count) —
     // are the intended shape for these; everything else must be an
-    // equi join. Intent lives ON the QueryDef (with a justification
-    // string), so a new query cannot silently skip this gate by editing
-    // a spec-local whitelist — it has to declare its shape where the
-    // query is defined. Checked on both branches of gated entries.
-    val intendedNestedLoop = SparkEntry.allQueries
-      .filter(_.planIntent.broadcastNestedLoop.isDefined).map(_.name).toSet
-    val offenders = plans.collect {
-      case (name, ps) if ps.exists { plan =>
-          plan.contains("CartesianProduct") ||
-            (plan.contains("BroadcastNestedLoopJoin") &&
-              !intendedNestedLoop(name))
-        } => name
+    // equi join. No intent admits a cartesian product. Checked on both
+    // branches of gated entries.
+    val (cartesian, _) = planned(_ => false) {
+      case _: CartesianProductExec => true
+      case _ => false
     }
-    offenders shouldBe empty
+    cartesian shouldBe empty
+    nestedLoop._1 shouldBe empty
   }
 
   test("declared plan intent is not stale: every intent-annotated query still plans that shape") {
@@ -138,13 +140,7 @@ class PlanQualitySpec extends AnyFunSuite with Matchers {
     // be removed (keeps the QueryDef metadata honest over time). A gated
     // entry's intent holds if either branch plans the shape (q_diameter:
     // only its distributed double sweep cross-joins the 1-row seed).
-    val annotated = SparkEntry.allQueries
-      .filter(_.planIntent.broadcastNestedLoop.isDefined).map(_.name).toSet
-    val stale = plans.collect {
-      case (name, ps) if annotated(name) &&
-          !ps.exists(_.contains("BroadcastNestedLoopJoin")) => name
-    }
-    stale shouldBe empty
+    nestedLoop._2 shouldBe empty
   }
 
   test("per-key min/max normalization uses grouped agg + broadcast, never a whole-partition window") {
@@ -221,18 +217,12 @@ class PlanQualitySpec extends AnyFunSuite with Matchers {
     // time-bounded series (q_pair_corr rolls over the JOINT HOURLY series
     // of one symbol pair — cardinality grows with wall-clock hours, not
     // with data volume: ~9k rows/year at any scale factor). The same
-    // pass fails a stale `intendsGlobalWindow`: one on a query that no
-    // longer plans such a window.
-    val annotated = SparkEntry.allQueries
-      .filter(_.planIntent.globalWindow.isDefined).map(_.name).toSet
-    val plansGlobal = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        name -> collectAll(fn(spark, sfDir)) {
-          case w: WindowExec if w.partitionSpec.isEmpty => w
-        }.nonEmpty
+    // pass fails a stale `intendsGlobalWindow`: one on a query that plans
+    // such a window on neither branch.
+    val (offenders, stale) = planned(_.planIntent.globalWindow.isDefined) {
+      case w: WindowExec => w.partitionSpec.isEmpty
+      case _ => false
     }
-    val offenders = plansGlobal.collect { case (name, true) if !annotated(name) => name }
-    val stale = plansGlobal.collect { case (name, false) if annotated(name) => name }
     offenders shouldBe empty
     stale shouldBe empty
   }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+
 import graft.ops.LocalTail
 
 /** Every registry entry built once per fixture directory inside a
@@ -10,7 +12,7 @@ import graft.ops.LocalTail
   */
 object RegistryBuilds {
   final case class Build(
-      name: String, plan: String, decisions: Seq[LocalTail.Decision]) {
+      name: String, plan: SparkPlan, decisions: Seq[LocalTail.Decision]) {
     def gated: Boolean = decisions.nonEmpty
   }
 
@@ -20,7 +22,7 @@ object RegistryBuilds {
     built.getOrElseUpdate(sfDir,
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         val (plan, decisions) = LocalTail.scoped(None)(
-          fn(TestSpark.spark, sfDir).queryExecution.executedPlan.toString)
+          fn(TestSpark.spark, sfDir).queryExecution.executedPlan)
         Build(name, plan, decisions)
       })
   }

@@ -56,13 +56,8 @@ class JaroWinklerSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("column API and Winkler boost monotonicity in shared prefix") {
-    val df = Seq(
-      ("prefix-match-xx", "prefix-match-yy"),
-      ("xxprefix-match-", "yyprefix-match-")).toDF("a", "b")
-    val Array(withPrefix, noPrefix) = df
-      .select(JaroWinkler.jaroWinklerFp(col("a"), col("b")).as("s"))
-      .as[Long].collect()
-    withPrefix should be > noPrefix
+  test("Winkler boost is monotone in the shared prefix") {
+    sqlSim("prefix-match-xx", "prefix-match-yy") should be >
+      sqlSim("xxprefix-match-", "yyprefix-match-")
   }
 }

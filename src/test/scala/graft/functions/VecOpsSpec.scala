@@ -74,7 +74,6 @@ class VecOpsSpec extends AnyFunSuite with Matchers {
   }
 
   test("SQL registration: vec_dot usable from spark.sql") {
-    VecOps.register(spark)
     val s = spark
     import s.implicits._
     Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f))).toDF("a", "b")

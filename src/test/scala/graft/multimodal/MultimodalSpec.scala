@@ -10,12 +10,12 @@ class MultimodalSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
 
   test("FakeCodec decode is deterministic and shape-correct") {
-    val d = FakeCodec.decode("image", Array[Byte](0, 1, 2, 3, 4, 5, 6, 7, 8))
+    val d = FakeCodec.decode(Array[Byte](0, 1, 2, 3, 4, 5, 6, 7, 8))
     d.w shouldBe 3
     d.h shouldBe 3
     d.pixels shouldBe Array(0.0, 1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0)
     // signed bytes read as unsigned intensities
-    FakeCodec.decode("image", Array[Byte](-1)).pixels.head shouldBe 255.0
+    FakeCodec.decode(Array[Byte](-1)).pixels.head shouldBe 255.0
   }
 
   test("resize block-averages to the target grid") {
@@ -50,270 +50,6 @@ class MultimodalSpec extends AnyFunSuite with Matchers {
     val f2 = feats(1)
     f2.n_bytes shouldBe 0
     f2.mean_intensity shouldBe 0.0
-  }
-
-  private def encodeImage(format: String, w: Int, h: Int)(
-      pixel: (Int, Int) => Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, pixel(x, y))
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, format, bos) shouldBe true
-    bos.toByteArray
-  }
-
-  test("ImageIoCodec decodes a real PNG to the exact luma plane") {
-    // 2x1: pure red then pure white
-    val png = encodeImage("png", 2, 1)((x, _) => if (x == 0) 0xff0000 else 0xffffff)
-    val d = ImageIoCodec.decode("image", png)
-    d.w shouldBe 2
-    d.h shouldBe 1
-    d.pixels(0) shouldBe 0.299 * 255 +- 1e-12
-    d.pixels(1) shouldBe 255.0 +- 1e-12
-  }
-
-  /** Encode PCM samples to a real WAV container via the JDK writer —
-    * the same container the production WavCodec sniffs and decodes.
-    */
-  private def encodeWav(
-      bits: Int, channels: Int, bigEndian: Boolean)(
-      samples: Array[Int]): Array[Byte] = {
-    import javax.sound.sampled._
-    val signed = bits == 16 // JDK WAV writer: 8-bit unsigned, 16-bit signed
-    val fmt = new AudioFormat(8000f, bits, channels, signed, bigEndian)
-    val bytesPer = bits / 8
-    val raw = new Array[Byte](samples.length * bytesPer)
-    samples.indices.foreach { i =>
-      if (bits == 8) raw(i) = samples(i).toByte
-      else {
-        val s = samples(i)
-        val (b0, b1) =
-          if (bigEndian) (((s >> 8) & 0xff).toByte, (s & 0xff).toByte)
-          else ((s & 0xff).toByte, ((s >> 8) & 0xff).toByte)
-        raw(2 * i) = b0; raw(2 * i + 1) = b1
-      }
-    }
-    val ais = new AudioInputStream(
-      new java.io.ByteArrayInputStream(raw), fmt, samples.length / channels)
-    val bos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-    bos.toByteArray
-  }
-
-  test("WavCodec decodes real 16-bit PCM mono WAV to exact normalized samples") {
-    // endpoints and a few interior values: the (s + 32768) / 257.0 map is
-    // exact at the endpoints (257 * 255 = 65535)
-    val samples = Array(-32768, -1, 0, 1, 32767)
-    val wav = encodeWav(16, 1, bigEndian = false)(samples)
-    SniffingCodec.isWav(wav) shouldBe true
-    SniffingCodec.isImage(wav) shouldBe false
-    val d = SniffingCodec.decode("audio", wav) // production route
-    d.w shouldBe 5
-    d.h shouldBe 1
-    d.pixels shouldBe samples.map(s => (s + 32768) / 257.0)
-    d.pixels.head shouldBe 0.0
-    d.pixels.last shouldBe 255.0
-  }
-
-  test("WavCodec: 8-bit unsigned and stereo channel-major layout") {
-    // 8-bit unsigned: identity map to [0, 255]
-    val u8 = Array(0, 1, 128, 254, 255)
-    val d8 = WavCodec.decode("audio", encodeWav(8, 1, bigEndian = false)(u8))
-    d8.pixels shouldBe u8.map(_.toDouble)
-
-    // stereo 16-bit: interleaved L/R frames decode to h=2 channel rows
-    val interleaved = Array(-32768, 32767, 0, 0, 32767, -32768) // L,R x3
-    val ds = WavCodec.decode(
-      "audio", encodeWav(16, 2, bigEndian = false)(interleaved))
-    ds.w shouldBe 3
-    ds.h shouldBe 2
-    ds.pixels shouldBe Array(
-      0.0, 32768 / 257.0, 255.0, // channel 0 (L)
-      255.0, 32768 / 257.0, 0.0) // channel 1 (R)
-  }
-
-  test("real WAV payloads flow through the production mapPartitions path") {
-    import spark.implicits._
-    // 16 known samples: intensities k * 17 * 257 - 32768 -> k * 17 exactly
-    val samples = Array.tabulate(16)(k => k * 17 * 257 - 32768)
-    val wav = encodeWav(16, 1, bigEndian = false)(samples)
-    val media = Seq(
-      MediaRecord(1L, "audio", 16, 1, wav),
-      MediaRecord(2L, "audio", 4, 1, Array[Byte](10, 20, 30, 40))
-    ).toDS().repartition(2)
-    val feats = extractFeatures(media, SniffingCodec).collect().sortBy(_.doc_id)
-
-    val f1 = feats.head
-    f1.n_bytes shouldBe wav.length.toLong
-    val vals = (0 until 16).map(_ * 17.0)
-    f1.mean_intensity shouldBe (vals.sum / 16) +- 1e-9
-    // a 16x1 sample line block-averages into 4 columns of the 4x4 thumb,
-    // each row replicated (h=1 upscales by replication)
-    val rowAvgs = (0 until 4).map(c => (vals.slice(4 * c, 4 * c + 4).sum) / 4)
-    f1.thumb_4x4.map(_.toDouble) shouldBe Array.tabulate(16)(i => rowAvgs(i % 4))
-
-    // the non-WAV audio row still goes through the stub
-    feats(1).mean_intensity shouldBe 25.0 +- 1e-12
-  }
-
-  /** Assemble a YUV4MPEG2 stream: standard ASCII header, then per frame
-    * a FRAME marker + the luma plane + zero-filled chroma planes sized
-    * by the colorspace — the same container the production Y4mCodec
-    * sniffs and decodes.
-    */
-  private def encodeY4m(w: Int, h: Int, cs: Option[String],
-      frameParams: String = "")(lumas: Array[Array[Int]]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val csTag = cs.map(c => s" C$c").getOrElse("")
-    bos.write(s"YUV4MPEG2 W$w H$h F25:1 Ip A1:1$csTag\n".getBytes("US-ASCII"))
-    val chroma = cs.getOrElse("420jpeg") match {
-      case c if c.startsWith("420") => 2 * ((w / 2) * (h / 2))
-      case c if c.startsWith("422") => 2 * ((w / 2) * h)
-      case c if c.startsWith("444") => 2 * (w * h)
-      case c if c.startsWith("mono") => 0
-    }
-    lumas.foreach { luma =>
-      bos.write(s"FRAME$frameParams\n".getBytes("US-ASCII"))
-      luma.foreach(v => bos.write(v & 0xff))
-      (0 until chroma).foreach(_ => bos.write(0x80)) // neutral chroma
-    }
-    bos.toByteArray
-  }
-
-  test("Y4mCodec decodes a real 4:2:0 stream to exact stacked luma planes") {
-    // two 4x2 frames with known lumas; chroma planes (2x1 U + V per
-    // frame) must be skipped, not decoded
-    val f0 = Array(0, 16, 32, 48, 64, 80, 96, 112)
-    val f1 = Array(255, 254, 253, 252, 251, 250, 249, 248)
-    val y4m = encodeY4m(4, 2, Some("420jpeg"))(Array(f0, f1))
-    SniffingCodec.isY4m(y4m) shouldBe true
-    SniffingCodec.isImage(y4m) shouldBe false
-    SniffingCodec.isWav(y4m) shouldBe false
-    val d = SniffingCodec.decode("video", y4m) // production route
-    d.w shouldBe 4
-    d.h shouldBe 4 // 2 rows x 2 frames, frame-major
-    d.pixels shouldBe (f0 ++ f1).map(_.toDouble)
-  }
-
-  test("Y4mCodec: mono + default colorspace, FRAME params, malformed input") {
-    // Cmono: no chroma bytes at all between frames
-    val mono = encodeY4m(3, 1, Some("mono"))(Array(Array(1, 2, 3), Array(4, 5, 6)))
-    val dm = Y4mCodec.decode("video", mono)
-    (dm.w, dm.h) shouldBe ((3, 2))
-    dm.pixels shouldBe Array(1.0, 2, 3, 4, 5, 6)
-    // no C tag -> the spec's 420jpeg default; FRAME lines may carry params
-    val dflt = encodeY4m(2, 2, None, frameParams = " Xtag")(
-      Array(Array(9, 8, 7, 6)))
-    val dd = Y4mCodec.decode("video", dflt)
-    (dd.w, dd.h) shouldBe ((2, 2))
-    dd.pixels shouldBe Array(9.0, 8, 7, 6)
-    // truncated payload and bad marker fail loudly, not silently
-    an[Exception] should be thrownBy
-      Y4mCodec.decode("video", dflt.dropRight(3))
-    an[Exception] should be thrownBy Y4mCodec.decode("video",
-      "YUV4MPEG2 W2 H2\nBOGUS\n".getBytes("US-ASCII"))
-  }
-
-  test("router degrades unsupported WAV/Y4M variants to the stand-in " +
-    "instead of crashing the job") {
-    import javax.sound.sampled._
-    // IEEE-float 32-bit WAV: legal container, outside WavCodec support.
-    // The JDK writer can't emit float WAV, so splice the fmt chunk of a
-    // real 16-bit file to (tag=3, bits=32) — chunk layout is unchanged.
-    val wav = encodeWav(16, 1, bigEndian = false)(Array(0, 1, 2, 3))
-    val floatWav = wav.clone()
-    val fmtAt = {
-      var o = 12
-      while (!(floatWav(o) == 'f' && floatWav(o + 1) == 'm' &&
-        floatWav(o + 2) == 't' && floatWav(o + 3) == ' ')) o += 1
-      o
-    }
-    floatWav(fmtAt + 8) = 3 // wFormatTag = IEEE float (little-endian lo)
-    floatWav(fmtAt + 22) = 32 // wBitsPerSample
-    SniffingCodec.isWav(wav) shouldBe true
-    SniffingCodec.isWav(floatWav) shouldBe false
-    // production route must survive and return the deterministic stand-in
-    val df = SniffingCodec.decode("audio", floatWav)
-    df.pixels shouldBe FakeCodec.decode("audio", floatWav).pixels
-
-    // 10-bit Y4M colorspace: real tag ffmpeg emits, stride differs from
-    // 8-bit — must route to the stand-in, not mis-stride or crash
-    val p10 = "YUV4MPEG2 W2 H2 C420p10\nFRAME\n".getBytes("US-ASCII") ++
-      Array.fill[Byte](12)(1)
-    SniffingCodec.isY4m(p10) shouldBe false
-    val dv = SniffingCodec.decode("video", p10)
-    dv.pixels shouldBe FakeCodec.decode("video", p10).pixels
-    // ...while a direct Y4mCodec call on it still fails loudly
-    an[Exception] should be thrownBy Y4mCodec.decode("video", p10)
-    // supported colorspaces still route to the real codec (isY4m reads
-    // only the header line)
-    SniffingCodec.isY4m(
-      "YUV4MPEG2 W2 H2 C444alpha\n".getBytes("US-ASCII")) shouldBe true
-  }
-
-  test("real Y4M payloads flow through the production mapPartitions path") {
-    import spark.implicits._
-    // 2 frames of 4x4 with luma (frame*16 + idx): mean over the stacked
-    // 4x8 plane is exactly (0+..+31)/32 = 15.5
-    val lumas = Array.tabulate(2)(f => Array.tabulate(16)(i => f * 16 + i))
-    val y4m = encodeY4m(4, 4, Some("420jpeg"))(lumas)
-    val media = Seq(
-      MediaRecord(1L, "video", 4, 4, y4m),
-      MediaRecord(2L, "audio", 4, 1, Array[Byte](10, 20, 30, 40))
-    ).toDS().repartition(2)
-    val feats = extractFeatures(media, SniffingCodec).collect().sortBy(_.doc_id)
-    val f1 = feats.head
-    f1.n_bytes shouldBe y4m.length.toLong
-    f1.mean_intensity shouldBe 15.5 +- 1e-12
-    // thumb rows 0-1 average frame 0's rows, rows 2-3 frame 1's: the 4x8
-    // stacked plane block-averages pairs of rows
-    val plane = lumas.flatten.map(_.toDouble)
-    val expected = Array.tabulate(16) { i =>
-      val (tr, tc) = (i / 4, i % 4)
-      (plane((2 * tr) * 4 + tc) + plane((2 * tr + 1) * 4 + tc)) / 2
-    }
-    f1.thumb_4x4.map(_.toDouble) shouldBe expected
-    // the non-Y4M row still goes through the stub
-    feats(1).mean_intensity shouldBe 25.0 +- 1e-12
-  }
-
-  test("SniffingCodec routes by magic bytes: real containers to imageio, rest to the stub") {
-    val gray = encodeImage("bmp", 3, 2)((_, _) => 0x808080)
-    SniffingCodec.isImage(gray) shouldBe true
-    val d = SniffingCodec.decode("image", gray)
-    d.w shouldBe 3
-    d.h shouldBe 2
-    all(d.pixels) shouldBe 128.0 +- 1e-9
-    // non-container payloads keep the deterministic stand-in behavior
-    val raw = Array[Byte](0, 1, 2, 3)
-    SniffingCodec.isImage(raw) shouldBe false
-    val sniffed = SniffingCodec.decode("audio", raw)
-    val stub = FakeCodec.decode("audio", raw)
-    (sniffed.w, sniffed.h) shouldBe ((stub.w, stub.h))
-    sniffed.pixels shouldBe stub.pixels
-  }
-
-  test("real PNG payloads flow through the production mapPartitions path") {
-    import spark.implicits._
-    // 4x4 gradient PNG: intensity = (y*4+x) * 16, pure gray so luma = value
-    val png = encodeImage("png", 4, 4) { (x, y) =>
-      val v = (y * 4 + x) * 16; (v << 16) | (v << 8) | v
-    }
-    val media = Seq(
-      MediaRecord(1L, "image", 4, 4, png),
-      MediaRecord(2L, "audio", 4, 1, Array[Byte](10, 20, 30, 40))
-    ).toDS().repartition(2)
-    val feats = extractFeatures(media, SniffingCodec).collect().sortBy(_.doc_id)
-
-    val f1 = feats.head
-    f1.n_bytes shouldBe png.length.toLong
-    val vals = (0 until 16).map(_ * 16.0)
-    f1.mean_intensity shouldBe (vals.sum / 16) +- 1e-9
-    // decoded 4x4 resized to the 4x4 thumb is the identity
-    f1.thumb_4x4.map(_.toDouble) shouldBe vals.toArray
-
-    // the audio row went through the stub unchanged
-    feats(1).mean_intensity shouldBe 25.0 +- 1e-12
   }
 
   test("sampleFrames: stride windows, cap, and empty-payload guard") {
@@ -380,58 +116,5 @@ class MultimodalSpec extends AnyFunSuite with Matchers {
     m.schema("media_type").dataType.typeName shouldBe "string"
     val types = m.select("media_type").distinct().collect().map(_.getString(0))
     types.toSet.subsetOf(Set("image", "audio", "video")) shouldBe true
-  }
-
-  // deterministic 16x16 diagonal gradient; `tweak` flips one corner block
-  private def gradientPng(scale: Int = 1, tweak: Boolean = false): Array[Byte] =
-    encodeImage("png", 16 * scale, 16 * scale) { (x, y) =>
-      val gx = x / scale; val gy = y / scale
-      val v =
-        if (tweak && gx < 2 && gy < 2) 255
-        else math.min(255, (gx + gy) * 8)
-      (v << 16) | (v << 8) | v
-    }
-
-  test("dHash: scale-invariant on exact upscales, edit-sensitive") {
-    val base = dHash(ImageIoCodec.decode("image", gradientPng()))
-    // 2x nearest-neighbor upscale block-averages back to the same grid
-    val up = dHash(ImageIoCodec.decode("image", gradientPng(scale = 2)))
-    up shouldBe base
-    // one corner-block edit moves only a few gradient bits
-    val edited = dHash(ImageIoCodec.decode("image", gradientPng(tweak = true)))
-    val editDist = java.lang.Long.bitCount(base ^ edited)
-    editDist should be > 0
-    editDist should be <= 6
-    // an anti-diagonal gradient reverses most row gradients
-    val reversed = dHash(ImageIoCodec.decode("image",
-      encodeImage("png", 16, 16) { (x, y) =>
-        val v = math.min(255, ((15 - x) + y) * 8); (v << 16) | (v << 8) | v
-      }))
-    java.lang.Long.bitCount(base ^ reversed) should be >= 20
-  }
-
-  test("nearDupPairs: banded candidates find planted near-dups, never all-pairs") {
-    import spark.implicits._
-    val h0 = 0x0123456789abcdefL
-    val sigs = Seq(
-      (1L, h0),
-      (2L, h0 ^ (1L << 7)), // 1 bit off doc 1
-      (3L, h0 ^ 0x00f0f0f0f0f0f0f0L), // far from everything
-      (4L, h0 ^ (1L << 62) ^ (1L << 3)) // 2 bits off doc 1
-    ).toDF("doc_id", "dhash")
-    val got = nearDupPairs(sigs, maxDist = 3)
-      .orderBy("id_a", "id_b")
-      .as[(Long, Long, Int)].collect()
-    got shouldBe Array((1L, 2L, 1), (1L, 4L, 2), (2L, 4L, 3))
-    // pigeonhole recall: every 1-bit flip and a stride of 2-bit flips
-    // (bit pairs straddling band boundaries included) is always found
-    val flips = (0 until 64).map(i => h0 ^ (1L << i)) ++
-      (0 until 64).map(i => h0 ^ (1L << i) ^ (1L << ((i + 17) % 64)))
-    val many = (Seq((0L, h0)) ++ flips.zipWithIndex.map {
-      case (h, k) => ((k + 1).toLong, h)
-    }).toDF("doc_id", "dhash")
-    val found = nearDupPairs(many, maxDist = 2)
-      .filter(org.apache.spark.sql.functions.col("id_a") === 0L).count()
-    found shouldBe flips.length.toLong
   }
 }

@@ -51,23 +51,4 @@ class ConnectedComponentsSpec extends AnyFunSuite with Matchers {
       .filter(e => e._1 != e._2)
     for (parts <- Seq(1, 7, 32)) check(edges, parts)
   }
-
-  test("incremental merge equals a from-scratch run over all edges") {
-    val rnd = new scala.util.Random(7)
-    val all = Seq.fill(240)((rnd.nextInt(90).toLong, rnd.nextInt(90).toLong))
-      .filter(e => e._1 != e._2)
-    // delta edges BRIDGE previously-separate components (ids offset so
-    // the second half connects old clusters through new nodes)
-    val (first, second) = all.splitAt(160)
-    val bridge = Seq((0L, 200L), (200L, 45L), (89L, 201L))
-    val prev = ConnectedComponents.run(first.toDF("src", "dst"))
-    val merged = ConnectedComponents
-      .merge(prev, (second ++ bridge).toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    val scratch = ConnectedComponents
-      .run((first ++ second ++ bridge).toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    merged shouldBe scratch
-    merged shouldBe unionFind(first ++ second ++ bridge)
-  }
 }

@@ -47,7 +47,7 @@ class HilbertSpec extends AnyFunSuite with Matchers {
     df.createOrReplaceTempView("hilbert_pts")
     val got = spark.sql(
       s"""SELECT xc, yc, hval FROM (
-         |  SELECT xc, yc, ${Hilbert.lateralCols("xc", "yc")},
+         |  SELECT xc, yc, ${Hilbert.lateralColsSeq("xc", "yc").mkString(",\n")},
          |    hd0 AS hval
          |  FROM hilbert_pts)""".stripMargin)
       .as[(Long, Long, Long)].collect()

@@ -46,88 +46,6 @@ class IvfPqSpec extends AnyFunSuite with Matchers {
       .groupBy(_.getLong(0)).map { case (k, rs) => k -> rs.map(_.getLong(1)).toSet }
   }
 
-  test("append folds new vectors in without retraining: bit-identical to same-codebook full assignment") {
-    val all = clusteredCorpus()
-    val base = all.filter(col("vec_id") < 300)
-    val extra = all.filter(col("vec_id") >= 300)
-    def norm(df: DataFrame) = df.select(col("vec_id"),
-      Pq.normalized(col("embedding")).as("embedding"))
-
-    val idx0 = IvfPq.build(base, norm(base))
-    val appended = IvfPq.append(idx0, extra)
-
-    // reference: the SAME codebooks applied to the union corpus in one go
-    val refCells = IvfIndex.assign(all, idx0.coarse)
-      .select(col("vec_id"), col("cent_id"))
-    val refCodes = Pq.encode(norm(all), idx0.pqCb, Pq.M)
-    val ref = IvfPq.Index(idx0.coarse, refCells, idx0.pqCb, refCodes,
-      refCells.join(refCodes, "vec_id")
-        .select(col("vec_id"), col("cent_id"), col("sub_id"), col("code")))
-
-    def answers(idx: IvfPq.Index) =
-      IvfPq.search(idx, all, Pq.M, col("vec_id") < 10,
-        nprobe = 2, topK = 5, shortlist = 32)
-        .select("q_id", "c_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    answers(appended) shouldBe answers(ref)
-
-    // and the stale-codebook index still finds the true neighbours on a
-    // same-distribution batch (recall over the grown corpus)
-    val truth = bruteTop5(all.select(col("vec_id"), col("embedding").as("q_emb")))
-    val got = IvfPq.search(appended, all, Pq.M, col("vec_id") < 10,
-      nprobe = 2, topK = 5, shortlist = 32)
-      .select("q_id", "c_id").collect()
-      .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val qs = truth.keys.toSeq
-    val recall = qs.map(q => (truth(q) & got.getOrElse(q, Set.empty)).size / 5.0)
-      .sum / qs.size
-    recall should be >= 0.9
-  }
-
-  test("residual append: bit-identical to same-codebook/same-mean full assignment") {
-    val all = clusteredCorpus()
-    val base = all.filter(col("vec_id") < 300)
-    val extra = all.filter(col("vec_id") >= 300)
-    def norm(df: DataFrame) = df.select(col("vec_id"),
-      Pq.normalized(col("embedding")).as("embedding"))
-
-    val idx0 = IvfPq.buildResidual(base, norm(base))
-    val appended = IvfPq.appendResidual(idx0, extra)
-
-    // reference: frozen coarse cells, cell means AND residual codebooks
-    // applied to the union corpus in one go
-    val refCells = IvfIndex.assign(all, idx0.coarse)
-      .select(col("vec_id"), col("cent_id"))
-    val refResid = norm(all).join(refCells, "vec_id")
-      .join(broadcast(idx0.cmeans), "cent_id")
-      .select(col("vec_id"),
-        expr("zip_with(embedding, cent_mean, (a, b) -> a - b)")
-          .as("embedding"))
-    val refCodes = Pq.encode(refResid, idx0.pqCb, Pq.M)
-    val ref = IvfPq.ResIndex(idx0.coarse, refCells, idx0.cmeans, idx0.pqCb,
-      refCells.join(refCodes, "vec_id")
-        .select(col("vec_id"), col("cent_id"), col("sub_id"), col("code")))
-
-    def answers(idx: IvfPq.ResIndex) =
-      IvfPq.searchResidual(idx, all, Pq.M, col("vec_id") < 10,
-        nprobe = 2, topK = 5, shortlist = 32)
-        .select("q_id", "c_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    answers(appended) shouldBe answers(ref)
-
-    // the frozen-mean index still finds true neighbours for a
-    // same-distribution batch
-    val truth = bruteTop5(all.select(col("vec_id"), col("embedding").as("q_emb")))
-    val got = IvfPq.searchResidual(appended, all, Pq.M, col("vec_id") < 10,
-      nprobe = 2, topK = 5, shortlist = 32)
-      .select("q_id", "c_id").collect()
-      .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val qs = truth.keys.toSeq
-    val recall = qs.map(q => (truth(q) & got.getOrElse(q, Set.empty)).size / 5.0)
-      .sum / qs.size
-    recall should be >= 0.9
-  }
-
   test("residual search: exhaustive probe + full shortlist = exact brute force") {
     val raw = clusteredCorpus()
     val norm = raw.select(col("vec_id"),

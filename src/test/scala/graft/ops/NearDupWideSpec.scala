@@ -7,14 +7,32 @@ import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
 import graft.model.Tables
 
-/** Contracts of the 120-bit wide SimHash that the SQL oracle covers only
-  * end-to-end: the lo half is bit-identical to the 60-bit signature
-  * (shared per-token prefix hash), and the 4x30-bit banding loses NO pair
-  * versus an all-pairs hamming scan (the pigeonhole exactness claim).
+/** Contracts of the NearDup signatures that the SQL oracle covers only
+  * end-to-end: the row-local MinHash bands (the stream-static
+  * `CrossDedupGate` probe) equal the batch aggregation's bands, the lo
+  * half of the 120-bit wide SimHash is bit-identical to the 60-bit
+  * signature (shared per-token prefix hash), and the 4x30-bit banding
+  * loses NO pair versus an all-pairs hamming scan (the pigeonhole
+  * exactness claim).
   */
 class NearDupWideSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
+
+  test("row-local minhash bands equal the batch aggregation's bands") {
+    val docs = Tables.documents(spark, sfDir)
+    val batch = NearDup.minhashBands(docs).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+    val rowLocal = NearDup.withRowMinhashBands(docs)
+      .select(col("doc_id"),
+        posexplode(expr("array(band_0, band_1, band_2, band_3)"))
+          .as(Seq("band_id", "band_hash")))
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+      .filterNot(_._3.startsWith("uniq-")) // short docs: batch omits them
+      .toSet
+    assert(rowLocal == batch)
+  }
 
   test("wide signature lo half is bit-identical to the 60-bit simhash") {
     val docs = Tables.documents(spark, sfDir)

@@ -10,6 +10,7 @@ import graft.TestSpark
 
 class SkewSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
+  private val countAgg = Skew.SaltedAgg("count", _ => count(lit(1)), sum)
 
   private lazy val skewed = {
     val s = spark
@@ -32,7 +33,7 @@ class SkewSpec extends AnyFunSuite with Matchers {
       skewed, Seq("key"), salts = 8,
       Seq(
         "v" -> Skew.sumAgg("sum_v"),
-        "v" -> Skew.countAgg,
+        "v" -> countAgg,
         "v" -> Skew.minAgg("min_v"),
         "v" -> Skew.maxAgg("max_v")))
       .collect().map(r => r.getAs[String]("key") ->
@@ -84,7 +85,7 @@ class SkewSpec extends AnyFunSuite with Matchers {
 
     // and parity is preserved through the two-phase aggregate
     val got = Skew.saltedAgg(dupes, Seq("key"), salts = 8,
-      Seq("v" -> Skew.sumAgg("sum_v"), "v" -> Skew.countAgg)).collect()
+      Seq("v" -> Skew.sumAgg("sum_v"), "v" -> countAgg)).collect()
     got.length shouldBe 1
     got.head.getAs[Double]("sum_v") shouldBe 10000.0
     got.head.getAs[Long]("count") shouldBe 10000L

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -40,39 +38,5 @@ class ZOrderSpec extends AnyFunSuite with Matchers {
     got shouldBe rows.map { case (x, y, z) => naive(x, y, z) }.toArray
     // the all-ones point is the largest possible z-value: exactly 2^63-1
     naive(max, max, max) shouldBe Long.MaxValue
-  }
-
-  test("z-clustered files bound BOTH dimensions' spans; x-sorted files do not") {
-    // uniform 128x128 grid in [0,1]^2
-    val grid = (for { i <- 0 until 128; j <- 0 until 128 }
-      yield (i * 128L + j, i / 127.0, j / 127.0)).toSeq
-      .toDF("id", "x", "y")
-
-    def spans(path: String): Seq[(Double, Double)] = {
-      val dir = new java.io.File(path)
-      dir.listFiles().filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
-        val r = spark.read.parquet(f.getAbsolutePath)
-          .agg(max("x") - min("x"), max("y") - min("y")).head()
-        (r.getDouble(0), r.getDouble(1))
-      }
-    }
-
-    val zdir = Files.createTempDirectory("zorder").toString
-    val xdir = Files.createTempDirectory("xsort").toString
-    ZOrder.writeZOrdered(grid, "x", "y", zdir, files = 16)
-    grid.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
-      .write.mode("overwrite").parquet(xdir)
-
-    val zs = spans(zdir)
-    val xs = spans(xdir)
-    zs.size shouldBe 16
-    // a contiguous 1/16 of the z-curve stays inside a ~quarter-width box
-    // in BOTH dims (range-boundary sampling adds slack); the linear
-    // layout leaves y completely unbounded in every file
-    val (zxAvg, zyAvg) =
-      (zs.map(_._1).sum / zs.size, zs.map(_._2).sum / zs.size)
-    zxAvg should be < 0.5
-    zyAvg should be < 0.5
-    (xs.map(_._2).sum / xs.size) should be > 0.9
   }
 }

@@ -20,8 +20,9 @@ class CorpusPipelineSpec extends AnyFunSuite with Matchers {
   private lazy val docs = Tables.documents(spark, sfDir)
 
   test("stage accounting is monotone and exact-dedup matches distinct content") {
-    val (_, counts) = CorpusPipeline.curateWithCounts(docs)
-    val byStage = counts.map(c => c.stage -> c.rows).toMap
+    val byStage = CorpusPipeline.docStages(docs, None)
+      .map { case (stage, df) => stage -> df.count() }.toMap +
+      ("chunks" -> CorpusPipeline.curate(docs).count())
     val order = Seq("input", "exact_dedup", "near_dedup", "quality",
       "decontaminated")
     order.sliding(2).foreach { case Seq(a, b) =>

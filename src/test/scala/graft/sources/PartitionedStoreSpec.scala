@@ -70,35 +70,6 @@ class PartitionedStoreSpec extends AnyFunSuite with Matchers {
     fs.head.metadata("ReadSchema") should not include "local_time"
   }
 
-  test("bucketed tables join WITHOUT shuffling either side") {
-    val s = spark
-    import s.implicits._
-    val facts = (1 to 1000).map(i => (i.toLong % 50, i.toDouble))
-      .toDF("cust_id", "amount")
-    val dims = (0L until 50L).map(i => (i, s"name_$i")).toDF("cust_id", "name")
-    PartitionedStore.writeBucketed(facts, "b_facts", "cust_id", numBuckets = 8)
-    PartitionedStore.writeBucketed(dims, "b_dims", "cust_id", numBuckets = 8)
-    try {
-      // disable broadcast so the join would otherwise need a full shuffle
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("b_facts")
-        .join(spark.table("b_dims"), "cust_id")
-      joined.count() shouldBe 1000
-      val plan = joined.queryExecution.executedPlan.toString
-      withClue(plan) {
-        plan should include("SortMergeJoin")
-        // bucket layout satisfies the join's distribution: no exchange
-        plan should not include "Exchange hashpartitioning"
-      }
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS b_facts")
-      spark.sql("DROP TABLE IF EXISTS b_dims")
-    }
-  }
-
   test("append mode adds new days without rewriting old ones") {
     val s = spark
     import s.implicits._

@@ -57,55 +57,6 @@ class ClickViewJoinSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("left-outer join: unmatched views emit null after the watermark " +
-      "proves their window closed; final set equals batch left join") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-
-    val batch = {
-      import org.apache.spark.sql.functions._
-      val e = graft.model.Tables.events(spark, sfDir)
-        .select($"event_id", $"ts", $"user_id", $"event_type")
-      ClickViewJoin.leftPairs(
-          ClickViewJoin.views(e), ClickViewJoin.clicks(e))
-        .select($"user_id", $"view_id",
-          coalesce($"click_id", lit(-1L)).as("click_id"))
-        .as[(Long, Long, Long)].collect().toSet
-    }
-
-    val events = graft.model.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"event_type")
-      .as[CvjEv].collect().sortBy(_.ts.getTime)
-
-    val vIn = MemoryStream[CvjEv]
-    val cIn = MemoryStream[CvjEv]
-    val q = ClickViewJoin.leftPairs(
-        ClickViewJoin.views(vIn.toDF()), ClickViewJoin.clicks(cIn.toDF()))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("cvj_left").start()
-    try {
-      events.grouped(math.max(1, events.length / 3 + 1)).foreach { chunk =>
-        vIn.addData(chunk.toSeq)
-        cIn.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      // sentinel far in the future: advances both watermarks past every
-      // view's window, flushing the held unmatched outer rows
-      val flush = CvjEv(-1, java.sql.Timestamp.valueOf("2035-01-01 00:00:00"),
-        -1, "view")
-      vIn.addData(flush)
-      cIn.addData(flush.copy(event_id = -2, event_type = "click"))
-      q.processAllAvailable()
-      val streamed = spark.table("cvj_left")
-        .filter($"view_id" >= 0 && $"user_id" >= 0)
-        .select($"user_id", $"view_id",
-          org.apache.spark.sql.functions.coalesce($"click_id",
-            org.apache.spark.sql.functions.lit(-1L)).as("click_id"))
-        .as[(Long, Long, Long)].collect().toSet
-      assert(streamed == batch)
-    } finally q.stop()
-  }
-
   test("watermark evicts stale views: a click an epoch later finds none") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext

@@ -70,33 +70,4 @@ class DocStreamSpec extends AnyFunSuite {
     val verdicts = df.collect().map(_.getAs[String]("verdict")).toSeq
     assert(verdicts == Seq("too_short", "too_repetitive", "keep", "keep"))
   }
-
-  test("streaming PII scrub gate produces the batch piiScrub output exactly") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val events = Seq(
-      DocEvent(1, ts(0), "en", "mail jo@corp.example.org or +44 123-4567 now"),
-      DocEvent(2, ts(1), "en", "host 10.1.2.3 then 192.168.7.9 end"),
-      DocEvent(3, ts(2), "en", "nothing sensitive at all"))
-    val input = MemoryStream[DocEvent]
-    val query = DocStream.scrubGate(input.toDS().toDF())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("doc_scrub").start()
-    try {
-      input.addData(events)
-      query.processAllAvailable()
-      val stream = spark.table("doc_scrub")
-        .select("doc_id", "text", "n_emails", "n_phones", "n_ipv4")
-        .collect().map(_.toSeq).toSet
-      val batch = DocStream.scrubGate(events.toDF())
-        .select("doc_id", "text", "n_emails", "n_phones", "n_ipv4")
-        .collect().map(_.toSeq).toSet
-      assert(stream == batch)
-      val byId = spark.table("doc_scrub").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap
-      assert(byId(1L) == "mail <EMAIL> or <PHONE> now")
-      assert(byId(2L) == "host <IP> then <IP> end")
-      assert(byId(3L) == "nothing sensitive at all")
-    } finally query.stop()
-  }
 }

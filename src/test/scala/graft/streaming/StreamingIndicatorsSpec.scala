@@ -355,50 +355,6 @@ class StreamingIndicatorsSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$base/out").count() == 6)
   }
 
-  test("windowed OHLC bars: watermarked tumbling aggregation, late rows dropped") {
-    implicit val sqlCtx = spark.sqlContext
-    def candle(sym: String, t: String, o: Double, h: Double, l: Double,
-        c: Double, v: Double) =
-      Candle(sym, Timestamp.valueOf(t), o, h, l, c, v)
-    val input = MemoryStream[Candle]
-    val query = StreamingIndicators
-      .windowedOhlc(input.toDS(), barWidth = "1 hour", watermark = "30 minutes")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName("stream_ohlc")
-      .start()
-
-    // hour-10 bar for AAA: open=first by time, close=last by time
-    input.addData(Seq(
-      candle("AAA", "2024-01-01 10:05:00", 10, 12, 9, 11, 1),
-      candle("AAA", "2024-01-01 10:45:00", 11, 15, 10, 14, 2),
-      candle("AAA", "2024-01-01 10:20:00", 11, 13, 8, 12, 4)))
-    query.processAllAvailable()
-    // nothing emitted yet: watermark has not passed the window end
-    assert(spark.table("stream_ohlc").count() == 0)
-
-    // an hour-13 row pushes the watermark past 11:30 -> hour-10 bar closes
-    input.addData(Seq(candle("AAA", "2024-01-01 13:00:00", 20, 20, 20, 20, 1)))
-    query.processAllAvailable()
-    val bars = spark.table("stream_ohlc").collect()
-    assert(bars.length == 1)
-    val bar = bars.head
-    assert(bar.getAs[Timestamp]("bar_ts") == Timestamp.valueOf("2024-01-01 10:00:00"))
-    assert(bar.getAs[Double]("open") == 10.0) // 10:05 row
-    assert(bar.getAs[Double]("high") == 15.0)
-    assert(bar.getAs[Double]("low") == 8.0)
-    assert(bar.getAs[Double]("close") == 14.0) // 10:45 row
-    assert(bar.getAs[Double]("volume") == 7.0)
-    assert(bar.getAs[Long]("n_ticks") == 3L)
-
-    // a late hour-10 row behind the watermark is dropped, not re-aggregated
-    input.addData(Seq(candle("AAA", "2024-01-01 10:59:00", 99, 99, 99, 99, 99)))
-    query.processAllAvailable()
-    assert(spark.table("stream_ohlc").count() == 1)
-    query.stop()
-  }
-
   test("stream -> enriched -> day-partitioned store via foreachBatch") {
     implicit val sqlCtx = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft_sink").toString
@@ -421,201 +377,6 @@ class StreamingIndicatorsSpec extends AnyFunSuite {
     // enrichment columns survived the store round-trip
     assert(back.columns.contains("signal"))
     assert(back.filter(col("ema_10").isNotNull).count() > 0)
-  }
-
-  test("windowed OHLC equals the batch resampling formulation") {
-    implicit val sqlCtx = spark.sqlContext
-    // deterministic multi-hour series, unique timestamps per symbol
-    val candles = for {
-      sym <- Seq("AAA", "BBB")
-      h <- 9 to 12
-      m <- Seq(1, 17, 43)
-    } yield Candle(sym, Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00"),
-      h * 10.0 + m * 0.1, h * 10.0 + m * 0.1 + 1, h * 10.0 + m * 0.1 - 1,
-      h * 10.0 + m * 0.2, 1.0)
-
-    val input = MemoryStream[Candle]
-    val query = StreamingIndicators
-      .windowedOhlc(input.toDS(), barWidth = "1 hour", watermark = "1 minute")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName("stream_ohlc_eq")
-      .start()
-    input.addData(candles)
-    query.processAllAvailable()
-    // close all bars by advancing the watermark far ahead
-    input.addData(Seq(Candle("ZZZ",
-      Timestamp.valueOf("2024-01-02 00:00:00"), 1, 1, 1, 1, 1)))
-    query.processAllAvailable()
-    val streamed = spark.table("stream_ohlc_eq")
-      .filter(col("stock_symbol") =!= "ZZZ")
-      .collect()
-      .map(r => (r.getAs[String]("stock_symbol"), r.getAs[Timestamp]("bar_ts")) ->
-        (r.getAs[Double]("open"), r.getAs[Double]("high"),
-          r.getAs[Double]("low"), r.getAs[Double]("close"),
-          r.getAs[Long]("n_ticks")))
-      .toMap
-    query.stop()
-
-    // batch formulation (the q_ohlc_bars shape over the same rows)
-    val s = spark
-    import s.implicits._
-    val df = candles.toDF()
-    val bar = date_trunc("hour", col("local_time"))
-    val wa = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("stock_symbol"), bar).orderBy(col("local_time"))
-    val wd = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("stock_symbol"), bar).orderBy(col("local_time").desc)
-    val batch = df
-      .withColumn("bar_ts", bar)
-      .withColumn("rn_a", org.apache.spark.sql.functions.row_number().over(wa))
-      .withColumn("rn_d", org.apache.spark.sql.functions.row_number().over(wd))
-      .groupBy(col("stock_symbol"), col("bar_ts"))
-      .agg(
-        org.apache.spark.sql.functions.max(when(col("rn_a") === 1, col("open"))).as("open"),
-        org.apache.spark.sql.functions.max(col("high")).as("high"),
-        org.apache.spark.sql.functions.min(col("low")).as("low"),
-        org.apache.spark.sql.functions.max(when(col("rn_d") === 1, col("close"))).as("close"),
-        org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n_ticks"))
-      .collect()
-      .map(r => (r.getAs[String]("stock_symbol"), r.getAs[Timestamp]("bar_ts")) ->
-        (r.getAs[Double]("open"), r.getAs[Double]("high"),
-          r.getAs[Double]("low"), r.getAs[Double]("close"),
-          r.getAs[Long]("n_ticks")))
-      .toMap
-
-    assert(streamed == batch,
-      s"stream bars != batch bars:\n stream=$streamed\n batch=$batch")
-  }
-
-  test("streaming sessionization: gap split, session merge, watermark emit") {
-    implicit val sqlCtx = spark.sqlContext
-    def candle(t: String, v: Double) =
-      Candle("AAA", Timestamp.valueOf(t), v, v, v, v, 1)
-    val input = MemoryStream[Candle]
-    val query = StreamingIndicators
-      .sessionize(input.toDS().toDF(), gap = "30 minutes",
-        watermark = "30 minutes")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName("stream_sessions")
-      .start()
-
-    // session 1: 10:00-10:10 (3 events); session 2 starts 11:00 (>30m gap)
-    input.addData(Seq(
-      candle("2024-01-01 10:00:00", 1),
-      candle("2024-01-01 10:10:00", 2),
-      candle("2024-01-01 10:05:00", 3),
-      candle("2024-01-01 11:00:00", 10)))
-    query.processAllAvailable()
-    // push watermark far past session 1's close
-    input.addData(Seq(candle("2024-01-01 13:00:00", 99)))
-    query.processAllAvailable()
-    input.addData(Seq(candle("2024-01-01 15:00:00", 0)))
-    query.processAllAvailable()
-    val out = spark.table("stream_sessions").collect()
-      .sortBy(_.getAs[Timestamp]("window_start").getTime)
-    query.stop()
-
-    assert(out.length >= 2, s"expected >=2 closed sessions, got ${out.length}")
-    val s1 = out.head
-    assert(s1.getAs[Long]("n_events") == 3)
-    assert(s1.getAs[Timestamp]("session_start") == Timestamp.valueOf("2024-01-01 10:00:00"))
-    assert(s1.getAs[Timestamp]("session_end") == Timestamp.valueOf("2024-01-01 10:10:00"))
-    assert(s1.getAs[Double]("sum_value") == 6.0)
-    // session-window end = last event + gap
-    assert(s1.getAs[Timestamp]("window_end") == Timestamp.valueOf("2024-01-01 10:40:00"))
-    val s2 = out(1)
-    assert(s2.getAs[Long]("n_events") == 1)
-    assert(s2.getAs[Double]("sum_value") == 10.0)
-  }
-
-  test("stream-stream interval join: key + time-bounded matches only") {
-    implicit val sqlCtx = spark.sqlContext
-    val trades = MemoryStream[(String, Timestamp, Double)]
-    val quotes = MemoryStream[(String, Timestamp, Double)]
-    val tDf = trades.toDS().toDF("stock_symbol", "local_time", "price")
-    val qDf = quotes.toDS()
-      .toDF("stock_symbol", "local_time", "quote")
-      .withColumnRenamed("stock_symbol", "q_sym")
-      .withColumnRenamed("local_time", "q_time")
-    // rename key/time on the right to keep output columns unambiguous
-    val joined = StreamingIndicators.intervalJoin(
-      tDf,
-      qDf.withColumnRenamed("q_sym", "stock_symbol")
-        .withColumnRenamed("q_time", "local_time"),
-      lookback = "5 minutes")
-      .select(
-        col("l.stock_symbol"), col("l.local_time").as("trade_time"),
-        col("price"), col("r.local_time").as("quote_time"), col("quote"))
-
-    val query = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName("stream_ij")
-      .start()
-
-    def ts(s: String) = Timestamp.valueOf(s)
-    quotes.addData(Seq(
-      ("AAA", ts("2024-01-01 10:00:00"), 99.0), // within 5m of the trade
-      ("AAA", ts("2024-01-01 10:04:00"), 100.0), // within
-      ("AAA", ts("2024-01-01 09:54:00"), 98.0), // too old
-      ("AAA", ts("2024-01-01 10:06:00"), 101.0), // after the trade
-      ("BBB", ts("2024-01-01 10:03:00"), 55.0))) // wrong key
-    trades.addData(Seq(("AAA", ts("2024-01-01 10:05:00"), 100.5)))
-    query.processAllAvailable()
-    // advance both watermarks so results finalize
-    quotes.addData(Seq(("AAA", ts("2024-01-01 11:00:00"), 1.0)))
-    trades.addData(Seq(("ZZZ", ts("2024-01-01 11:00:00"), 1.0)))
-    query.processAllAvailable()
-
-    val got = spark.table("stream_ij")
-      .filter(col("price") === 100.5).collect()
-    query.stop()
-    assert(got.map(_.getAs[Double]("quote")).sorted.toSeq == Seq(99.0, 100.0))
-  }
-
-  test("left-outer interval join defers the null row until the watermark closes the interval") {
-    implicit val sqlCtx = spark.sqlContext
-    val trades = MemoryStream[(String, Timestamp, Double)]
-    val quotes = MemoryStream[(String, Timestamp, Double)]
-    val tDf = trades.toDS().toDF("stock_symbol", "local_time", "price")
-    val qDf = quotes.toDS().toDF("stock_symbol", "local_time", "quote")
-      .withColumnRenamed("stock_symbol", "q_sym")
-      .withColumnRenamed("local_time", "q_time")
-    val joined = StreamingIndicators.intervalJoinOuter(
-      tDf,
-      qDf.withColumnRenamed("q_sym", "stock_symbol")
-        .withColumnRenamed("q_time", "local_time"),
-      lookback = "5 minutes", watermark = "10 minutes")
-      .select(
-        col("l.stock_symbol"), col("l.local_time").as("trade_time"),
-        col("price"), col("quote"))
-    val query = joined.writeStream.outputMode("append")
-      .format("memory").queryName("stream_ijo").start()
-
-    def ts(s: String) = Timestamp.valueOf(s)
-    // a matched trade and an unmatched one, same batch
-    quotes.addData(Seq(("AAA", ts("2024-01-01 10:00:00"), 99.0)))
-    trades.addData(Seq(
-      ("AAA", ts("2024-01-01 10:02:00"), 100.5), // matches the quote
-      ("CCC", ts("2024-01-01 10:02:00"), 77.0))) // no quote ever
-    query.processAllAvailable()
-    // watermark has NOT passed the unmatched trade's interval: the null
-    // row must not have been emitted yet (a quote could still arrive)
-    val early = spark.table("stream_ijo").collect()
-    assert(early.map(_.getAs[Double]("price")).toSet == Set(100.5))
-    // advance event time well past the interval end on both sides
-    quotes.addData(Seq(("AAA", ts("2024-01-01 11:00:00"), 1.0)))
-    trades.addData(Seq(("ZZZ", ts("2024-01-01 11:00:00"), 1.0)))
-    query.processAllAvailable()
-    val late = spark.table("stream_ijo")
-      .filter(col("price") === 77.0).collect()
-    query.stop()
-    assert(late.length == 1 && late.head.isNullAt(late.head.fieldIndex("quote")),
-      "unmatched trade must emit exactly one null-padded row after the watermark")
   }
 
   test("kafka frame + json decode round-trip preserves the candle") {
