@@ -19,72 +19,70 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *     ([[graft.functions.EwmAvg]])
   *   - `vec_dot(a, b)` — codegen'd embedding dot product
   *     ([[graft.functions.VecDot]])
+  *   - `md5p60(str)` / `md5s60(str)`, `lcs_len(a, b)`,
+  *     `jaro_winkler_fp(a, b)`
   *
-  * The runtime `register(spark)` helpers on each function object remain for
-  * notebook/test use; both routes produce identical expressions.
+  * `GraftExtensions.register(spark)` installs the same builders in a
+  * session built without the extension, so both routes produce identical
+  * expressions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("ewm_avg"),
-      new ExpressionInfo(classOf[graft.functions.EwmAvg].getName, "ewm_avg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "ewm_avg(expr, span) takes 2 arguments")
-        val span = exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case Literal(v: Long, LongType)   => v.toInt
-          case other =>
-            throw new IllegalArgumentException(
-              s"ewm_avg span must be an integer literal, got $other")
-        }
-        graft.functions.EwmAvg(exprs.head, 2.0 / (span + 1.0), minPeriods = span)
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[graft.functions.VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "vec_dot(a, b) takes 2 arguments")
-        graft.functions.VecDot(exprs.head, exprs(1))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("md5p60"),
-      new ExpressionInfo(classOf[graft.functions.Md5Prefix60].getName, "md5p60"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 1, "md5p60(str) takes 1 argument")
-        graft.functions.Md5Prefix60(exprs.head)
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("md5s60"),
-      new ExpressionInfo(classOf[graft.functions.Md5Suffix60].getName, "md5s60"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 1, "md5s60(str) takes 1 argument")
-        graft.functions.Md5Suffix60(exprs.head)
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("lcs_len"),
-      new ExpressionInfo(classOf[graft.functions.LcsLen].getName, "lcs_len"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "lcs_len(a, b) takes 2 arguments")
-        graft.functions.LcsLen(exprs.head, exprs(1))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler_fp"),
-      new ExpressionInfo(
-        classOf[graft.functions.JaroWinklerFp].getName, "jaro_winkler_fp"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "jaro_winkler_fp(a, b) takes 2 arguments")
-        graft.functions.JaroWinklerFp(exprs.head, exprs(1))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.builders.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
 }
 
 object GraftExtensions {
+  import graft.functions._
+
+  /** (SQL name, expression class, builder): one builder per function,
+    * shared by the injector and [[register]].
+    */
+  private val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("ewm_avg", classOf[EwmAvg], { exprs =>
+      require(exprs.size == 2, "ewm_avg(expr, span) takes 2 arguments")
+      val span = exprs(1) match {
+        case Literal(v: Int, IntegerType) => v
+        case Literal(v: Long, LongType)   => v.toInt
+        case other =>
+          throw new IllegalArgumentException(
+            s"ewm_avg span must be an integer literal, got $other")
+      }
+      EwmAvg(exprs.head, 2.0 / (span + 1.0), minPeriods = span)
+    }),
+    ("vec_dot", classOf[VecDot], { exprs =>
+      require(exprs.size == 2, "vec_dot(a, b) takes 2 arguments")
+      VecDot(exprs.head, exprs(1))
+    }),
+    ("md5p60", classOf[Md5Prefix60], { exprs =>
+      require(exprs.size == 1, "md5p60(str) takes 1 argument")
+      Md5Prefix60(exprs.head)
+    }),
+    ("md5s60", classOf[Md5Suffix60], { exprs =>
+      require(exprs.size == 1, "md5s60(str) takes 1 argument")
+      Md5Suffix60(exprs.head)
+    }),
+    ("lcs_len", classOf[LcsLen], { exprs =>
+      require(exprs.size == 2, "lcs_len(a, b) takes 2 arguments")
+      LcsLen(exprs.head, exprs(1))
+    }),
+    ("jaro_winkler_fp", classOf[JaroWinklerFp], { exprs =>
+      require(exprs.size == 2, "jaro_winkler_fp(a, b) takes 2 arguments")
+      JaroWinklerFp(exprs.head, exprs(1))
+    }))
+
+  /** Register every function in a session built without
+    * `spark.sql.extensions` (`SparkEntry.entry`, specs): idempotent, and
+    * the expressions are the injector's.
+    */
+  def register(spark: SparkSession): Unit =
+    builders.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "built-in")
+    }
 
   /** The one session builder of the repo (`Bench`, `Verify` and the test
     * session): `local[cores]`, one shuffle partition per core, UTC, AQE

@@ -28,7 +28,7 @@ object SparkEntry {
     // spark.sql.extensions=graft.GraftExtensions, so register imperatively
     // here (idempotent; identical expression either way). Oracle/bench/test
     // runs get the functions from the extension injector instead.
-    graft.functions.EwmAvg.register(spark)
+    GraftExtensions.register(spark)
     FinanceQueries.enrichedEvents(spark, "/root/testdata/sf0.001")
   }
 

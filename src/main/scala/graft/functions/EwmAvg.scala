@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 
@@ -74,17 +73,18 @@ object EwmAvg {
 
   /** Column API: `ewm_avg($"close", span = 10).over(w)`.
     *
-    * Routed through the function registry (see [[register]]) because Spark
-    * 4.x's Column->Expression converter only accepts resolvable function
-    * nodes inside a window node; [[register]] must have been called on the
-    * session first (it is idempotent — `SparkEntry.entry` and the query
-    * layer do it eagerly).
+    * Routed through the function registry (see
+    * [[graft.GraftExtensions.register]]) because Spark 4.x's
+    * Column->Expression converter only accepts resolvable function nodes
+    * inside a window node; the session needs the extension or a
+    * `GraftExtensions.register` call first (it is idempotent —
+    * `SparkEntry.entry` does it eagerly).
     */
   def ewmAvg(col: Column, span: Int): Column = {
     require(span >= 1, s"span must be >= 1, got $span")
     // resolves through the function registry: populated by GraftExtensions
     // (spark.sql.extensions=graft.GraftExtensions, the deployment path) or
-    // by an explicit register(spark) in extension-less sessions. NOTE: a
+    // by GraftExtensions.register(spark) in extension-less sessions. NOTE: a
     // registry-free direct embedding (an EwmAvg column .over(w)) analyzes
     // under the legacy fixed-point analyzer but is rejected by Spark 4.1's
     // single-pass resolver (WINDOW_FUNCTION_WITHOUT_OVER_CLAUSE), so the
@@ -92,24 +92,4 @@ object EwmAvg {
     org.apache.spark.sql.functions.call_function("ewm_avg", col,
       org.apache.spark.sql.functions.lit(span))
   }
-
-  /** Register `ewm_avg(expr, span)` for pure-SQL use:
-    * `SELECT ewm_avg(close, 10) OVER (PARTITION BY sym ORDER BY t) ...`.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ewm_avg",
-      { exprs =>
-        require(exprs.size == 2, "ewm_avg(expr, span) takes 2 arguments")
-        val span = exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case Literal(v: Long, LongType)   => v.toInt
-          case other =>
-            throw new IllegalArgumentException(
-              s"ewm_avg span must be an integer literal, got $other")
-        }
-        EwmAvg(exprs.head, 2.0 / (span + 1.0), minPeriods = span)
-      },
-      "built-in"
-    )
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -98,26 +97,5 @@ object Md5Prefix60 {
     var i = 8
     while (i < 15) { v = (v << 8) | (bytes(i) & 0xffL); i += 1 }
     v
-  }
-
-  /** Register `md5p60(str)` for SQL use (needed inside lambda expressions
-    * like `transform(split(text, ' '), t -> md5p60(t))`, where a Column
-    * cannot capture the lambda variable).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5p60",
-      { exprs =>
-        require(exprs.size == 1, "md5p60(str) takes 1 argument")
-        Md5Prefix60(exprs.head)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5s60",
-      { exprs =>
-        require(exprs.size == 1, "md5s60(str) takes 1 argument")
-        Md5Suffix60(exprs.head)
-      },
-      "built-in")
   }
 }

@@ -55,8 +55,6 @@ import org.apache.spark.sql.functions._
   */
 object AlsRank1 {
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** Fit rank-1 factors on `ratings` (columns `user`, `item`, `r`; r a
     * positive integer, duplicates summed). Returns (side, id, f_fp):
     * side 'u' rows carry user factors, side 'i' item factors, each in
@@ -67,15 +65,15 @@ object AlsRank1 {
       r: String = "r", iters: Int = 3, scale: Long = 1000000L,
       reg: Long = 1000000L): DataFrame = {
     require(iters >= 1 && scale >= 1 && reg >= 1)
-    val rt0 = materialize(
+    val rt0 = Iterate.materialize(
       ratings.select(col(user).as("user"), col(item).as("item"),
           col(r).as("r"))
         .groupBy(col("user"), col("item"))
         .agg(sum(col("r")).as("r"))
         .filter(col("r") > 0))
     Iterate.withWidth(ratings.sparkSession, rt0.count()) { p =>
-      val rByItem = materialize(rt0.repartition(p, col("item")))
-      val rByUser = materialize(rt0.repartition(p, col("user")))
+      val rByItem = Iterate.materialize(rt0.repartition(p, col("item")))
+      val rByUser = Iterate.materialize(rt0.repartition(p, col("user")))
       // both pinned copies are materialized eagerly, so lineage no longer
       // reaches rt0 — release its checkpoint instead of pinning a third
       rt0.unpersist()
@@ -103,7 +101,7 @@ object AlsRank1 {
           fixed: DataFrame, inKey: String, outKey: String
       ): (DataFrame, DataFrame) = {
         val rt = if (inKey == "item") rByItem else rByUser
-        val raw = materialize(
+        val raw = Iterate.materialize(
           rt.join(fixed, rt(inKey) === fixed("id"))
             .groupBy(col(outKey).as("id"))
             .agg(sum(col("r") * col("f")).as("num"),
@@ -119,7 +117,7 @@ object AlsRank1 {
       val live = new Iterate.RawQueue(keep = 2)
       def track(raw: DataFrame): Unit = live.track(raw)
 
-      val v0 = materialize(
+      val v0 = Iterate.materialize(
         rByItem.select(col("item").as("id")).distinct()
           .select(col("id"), lit(scale).as("f")))
       track(v0)

@@ -33,8 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object Bfs {
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** (node, hop) for every node within `maxHops` directed hops of the
     * seed set (single-column frame of start nodes).
     */
@@ -51,9 +49,9 @@ object Bfs {
     val local = LocalTail.collect("bfs", raw)
     if (local.isDefined)
       return GraphLocal.bfs(local.get, seeds, maxHops)
-    val e0 = materialize(raw.distinct())
+    val e0 = Iterate.materialize(raw.distinct())
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
-    val e = materialize(e0.repartition(p, col("src")))
+    val e = Iterate.materialize(e0.repartition(p, col("src")))
     e0.unpersist()
     expand(e, seeds, maxHops)
     } // withWidth
@@ -64,7 +62,7 @@ object Bfs {
     */
   private[ops] def expand(
       e: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    var frontier = materialize(
+    var frontier = Iterate.materialize(
       seeds.toDF("node").distinct().withColumn("hop", lit(0)))
     // `visited` stays a LAZY union of the per-hop checkpoints (maxHops
     // is a small constant, so the plan is a flat union of leaves): the
@@ -78,7 +76,7 @@ object Bfs {
       // neighbors of the current frontier not seen before: the min-hop
       // property needs no argmin because expansion is level-synchronous —
       // a node reached now cannot have been reachable earlier
-      val next = materialize(
+      val next = Iterate.materialize(
         frontier.join(e, frontier("node") === e("src"))
           .select(col("dst").as("node")).distinct()
           .join(visited.select(col("node").as("v")),
@@ -127,9 +125,9 @@ object Bfs {
       else None
     if (local.isDefined)
       return GraphLocal.doubleSweep(local.get, maxHops, edges.sparkSession)
-    val e0 = materialize(raw.distinct())
+    val e0 = Iterate.materialize(raw.distinct())
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
-    val e = materialize(e0.repartition(p, col("src")))
+    val e = Iterate.materialize(e0.repartition(p, col("src")))
     e0.unpersist()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()

@@ -32,8 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Closeness {
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** (node, n_reached, harmonic_fp) for every seed (single-column frame
     * of start nodes), scanning to `maxHops` directed hops.
     */
@@ -49,11 +47,11 @@ object Closeness {
     val local = LocalTail.collect("closeness", raw)
     if (local.isDefined)
       return GraphLocal.closeness(local.get, seeds, maxHops)
-    val e0 = materialize(raw.distinct())
+    val e0 = Iterate.materialize(raw.distinct())
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
-    val e = materialize(e0.repartition(p, col("src")))
+    val e = Iterate.materialize(e0.repartition(p, col("src")))
     e0.unpersist()
-    var frontier = materialize(
+    var frontier = Iterate.materialize(
       seeds.toDF("seed").distinct()
         .select(col("seed"), col("seed").as("node"))
         .withColumn("hop", lit(0)))
@@ -61,14 +59,14 @@ object Closeness {
     for (t <- 1 to maxHops) {
       // per-seed level-synchronous expansion: a (seed, node) pair
       // reached now cannot have been reachable from that seed earlier
-      val next = materialize(
+      val next = Iterate.materialize(
         frontier.join(e, frontier("node") === e("src"))
           .select(col("seed"), col("dst").as("node")).distinct()
           .join(visited.select(col("seed").as("vs"), col("node").as("vn")),
             col("seed") === col("vs") && col("node") === col("vn"),
             "left_anti")
           .withColumn("hop", lit(t)))
-      val grown = materialize(visited.union(next))
+      val grown = Iterate.materialize(visited.union(next))
       frontier.unpersist(); visited.unpersist()
       frontier = next
       visited = grown

@@ -60,8 +60,6 @@ object ConnectedComponents {
       .distinct()
   }
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** (count, order-independent content hash) — equality across one
     * iteration is the fixpoint test. `bit_xor` over per-edge xxhash64 is
     * order-independent and overflow-free under ANSI mode (the edge frame
@@ -118,7 +116,7 @@ object ConnectedComponents {
   def run(
       edges: DataFrame, src: String = "src", dst: String = "dst",
       maxIter: Int = 25): DataFrame = {
-    var cur = materialize(
+    var cur = Iterate.materialize(
       edges.select(col(src).as("src"), col(dst).as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct())
@@ -139,7 +137,7 @@ object ConnectedComponents {
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      val next = materialize(smallStar(largeStar(cur)))
+      val next = Iterate.materialize(smallStar(largeStar(cur)))
       val nsig = signature(next)
       converged = nsig == sig
       sig = nsig

@@ -30,8 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Hits {
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** Hub/authority scores for every node of the directed edge frame
     * (self-loops dropped, duplicates collapsed). Output: (node, hub_fp,
     * auth_fp), integers in [0, scale] with max = scale in each column.
@@ -55,11 +53,11 @@ object Hits {
     // corpus-sized distinct shuffle (RankQueries.tradeEdgesDistinct)
     val sel = edges.select(col(src).as("src"), col(dst).as("dst"))
       .filter(col("src") =!= col("dst"))
-    val e0 = materialize(if (edgesDistinct) sel else sel.distinct())
+    val e0 = Iterate.materialize(if (edgesDistinct) sel else sel.distinct())
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
-    val eBySrc = materialize(e0.repartition(p, col("src")))
-    val eByDst = materialize(e0.repartition(p, col("dst")))
-    val nodes = materialize(
+    val eBySrc = Iterate.materialize(e0.repartition(p, col("src")))
+    val eByDst = Iterate.materialize(e0.repartition(p, col("dst")))
+    val nodes = Iterate.materialize(
       e0.select(col("src").as("node"))
         .union(e0.select(col("dst").as("node")))
         .distinct()
@@ -93,7 +91,7 @@ object Hits {
         scores: DataFrame, inKey: String, outKey: String
     ): (DataFrame, DataFrame) = {
       val e = if (inKey == "src") eBySrc else eByDst
-      val raw = materialize(
+      val raw = Iterate.materialize(
         e.join(scores, e(inKey) === scores("node"))
           .groupBy(col(outKey).as("node")).agg(sum(col("v")).as("v")))
       (raw, normalized(raw))
@@ -105,7 +103,7 @@ object Hits {
     val live = new Iterate.RawQueue(keep = 2)
     def track(raw: DataFrame): Unit = live.track(raw)
 
-    val hub0 = materialize(nodes.select(col("node"), lit(scale).as("v")))
+    val hub0 = Iterate.materialize(nodes.select(col("node"), lit(scale).as("v")))
     track(hub0)
     var hub: DataFrame = hub0
     var auth: DataFrame = hub0

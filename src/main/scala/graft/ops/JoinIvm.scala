@@ -28,8 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object JoinIvm {
 
-  private def mat(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** Maintain `V = SELECT viewKeys, count(*), sum(value) FROM A JOIN B
     * USING (key)` through `steps` of (ΔA, ΔB) delta batches (either
     * side may be an empty frame). `value` must be an integer-exact
@@ -48,19 +46,19 @@ object JoinIvm {
         .groupBy(viewKeys.map(col): _*)
         .agg(sum(col("n")).as("n"), sum(col("total")).as("total"))
 
-    var aAcc = mat(steps.head._1.limit(0))
-    var bAcc = mat(steps.head._2.limit(0))
+    var aAcc = Iterate.materialize(steps.head._1.limit(0))
+    var bAcc = Iterate.materialize(steps.head._2.limit(0))
     var view: Option[DataFrame] = None
     steps.foreach { case (dA0, dB0) =>
-      val dA = mat(dA0)
-      val dB = mat(dB0)
-      val bNew = mat(bAcc.unionByName(dB))
+      val dA = Iterate.materialize(dA0)
+      val dB = Iterate.materialize(dB0)
+      val bNew = Iterate.materialize(bAcc.unionByName(dB))
       // ΔA ⋈ (B_acc ∪ ΔB) ∪ A_acc ⋈ ΔB — each new joined row exactly once
       val deltaJoined = dA.join(bNew, key)
         .unionByName(aAcc.join(dB, key))
       val deltaView = summarize(deltaJoined)
-      view = Some(mat(view.fold(deltaView)(v => mergeViews(v, deltaView))))
-      aAcc = mat(aAcc.unionByName(dA))
+      view = Some(Iterate.materialize(view.fold(deltaView)(v => mergeViews(v, deltaView))))
+      aAcc = Iterate.materialize(aAcc.unionByName(dA))
       bAcc = bNew
     }
     view.get

@@ -23,14 +23,12 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** Surviving edges of the k-core after `rounds` peels of the
     * undirected (a, b) edge frame (one row per edge, a != b).
     */
   def coreEdges(edges: DataFrame, k: Int, rounds: Int = 8): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    var e = materialize(
+    var e = Iterate.materialize(
       edges.select(col("a"), col("b")).filter(col("a") =!= col("b")).distinct())
     // checkpoint every SECOND peel (and the last): two peels compose
     // into one job — same fixpoint, half the materialization overhead

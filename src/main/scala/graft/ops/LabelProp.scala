@@ -23,8 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object LabelProp {
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** Propagate `seeds` (node, label) over the DIRECTED edge frame for
     * `iters` synchronous rounds (pass both directions for an undirected
     * graph). Seed labels are clamped; non-seed nodes re-vote every
@@ -44,17 +42,17 @@ object LabelProp {
     // corpus-sized distinct shuffle (RankQueries.tradeEdgesDistinct)
     val sel = edges.select(col(src).as("src"), col(dst).as("dst"))
       .filter(col("src") =!= col("dst"))
-    val e0 = materialize(if (edgesDistinct) sel else sel.distinct())
+    val e0 = Iterate.materialize(if (edgesDistinct) sel else sel.distinct())
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
-    val e = materialize(e0.repartition(p, col("src")))
-    val nodes = materialize(
+    val e = Iterate.materialize(e0.repartition(p, col("src")))
+    val nodes = Iterate.materialize(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
         .distinct()
         .repartition(p, col("node")))
     e0.unpersist() // e + nodes materialized — drop the pre-repartition copy
     val sd = seeds.toDF("node", "seed_label")
-    var labels = materialize(
+    var labels = Iterate.materialize(
       nodes.join(sd, Seq("node"), "left")
         .select(col("node"), col("seed_label"),
           col("seed_label").as("label")))
@@ -69,7 +67,7 @@ object LabelProp {
         .groupBy(col("dst"))
         .agg(min(struct((-col("votes")).as("neg"), col("label"))).as("w"))
         .select(col("dst"), col("w.label").as("new_label"))
-      val next = materialize(
+      val next = Iterate.materialize(
         labels.join(best, labels("node") === best("dst"), "left")
           .select(col("node"), col("seed_label"),
             coalesce(col("seed_label"), col("new_label"), col("label"))

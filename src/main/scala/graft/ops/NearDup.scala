@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * `DataPrepQueries`/`ExtQueries` delegate here against the test tables).
   *
   * Requires the `md5p60` function (from `spark.sql.extensions =
-  * graft.GraftExtensions`, or `Md5Prefix60.register`).
+  * graft.GraftExtensions`, or `GraftExtensions.register`).
   *
   * Scale shape (unchanged from the audited queries): candidates come from
   * equality joins on band keys only — never an all-pairs product — and

@@ -42,8 +42,6 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** Rank every node of `edges` (directed, self-loops dropped,
     * duplicates collapsed). Output: (node, r_fp) with r_fp the integer
     * fixed-point rank after `iters` rounds; `r_fp / scale` ~ the
@@ -81,9 +79,9 @@ object PageRank {
     // distinctness, so the corpus-sized distinct shuffle is skipped
     val sel = edges.select(col(src).as("src"), col(dst).as("dst"))
       .filter(col("src") =!= col("dst"))
-    val e0 = materialize(if (edgesDistinct) sel else sel.distinct())
+    val e0 = Iterate.materialize(if (edgesDistinct) sel else sel.distinct())
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
-    val e = materialize(e0.repartition(p, col("src")))
+    val e = Iterate.materialize(e0.repartition(p, col("src")))
     // nodes carry their seed tag from the start: ONE checkpointed node
     // frame (uniform mode: every node is a "seed" with the plain base
     // share), then ONE aggregate job for both scalars (n, |S|)
@@ -97,7 +95,7 @@ object PageRank {
     // round for values that never change)
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val nodes = seeds match {
-      case Some(sd) => materialize(
+      case Some(sd) => Iterate.materialize(
         nodesRaw.join(
           sd.select(sd.columns.head).toDF("node").distinct()
             .withColumn("is_seed", lit(true)),
@@ -105,7 +103,7 @@ object PageRank {
           .join(outdeg, nodesRaw("node") === outdeg("src"), "left")
           .select(col("node"), coalesce(col("is_seed"), lit(false)).as("is_seed"),
             col("outdeg")))
-      case None => materialize(
+      case None => Iterate.materialize(
         nodesRaw
           .join(outdeg, nodesRaw("node") === outdeg("src"), "left")
           .select(col("node"), lit(true).as("is_seed"), col("outdeg")))
@@ -121,7 +119,7 @@ object PageRank {
       case None => (100L - dampNum) * scale / 100L
     }
 
-    var ranks = materialize(nodes.select(
+    var ranks = Iterate.materialize(nodes.select(
       col("node"), col("is_seed"), col("outdeg"), lit(scale).as("r")))
     // every=1: each round references `ranks` twice (dangling agg +
     // inflow join), so two lazily-composed rounds carry 4 copies of the

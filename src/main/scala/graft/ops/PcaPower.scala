@@ -49,8 +49,6 @@ import org.apache.spark.sql.functions._
   */
 object PcaPower {
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** Truncate-toward-zero division (identical in Spark and DuckDB for
     * any sign): sign(x) * (abs(x) div d), d > 0.
     */
@@ -121,7 +119,7 @@ object PcaPower {
     * checkpointed so the Gram pass and any later projection share a
     * single scan of the source).
     */
-  def stats(emb: DataFrame): Stats = statsFromQ(materialize(quantized(emb)))
+  def stats(emb: DataFrame): Stats = statsFromQ(Iterate.materialize(quantized(emb)))
 
   /** Fold a new corpus slice into existing statistics — the incremental
     * index-maintenance path (the [[IvfPq]] append / [[Rollup]] merge
@@ -220,7 +218,7 @@ object PcaPower {
   def project(emb: DataFrame, d: Int, iters: Int = 8): DataFrame = {
     // ONE checkpointed quantized frame feeds the Gram pass AND the
     // final projection — a single read of the source
-    val q = materialize(quantized(emb))
+    val q = Iterate.materialize(quantized(emb))
     val v = eigvecLocal(statsFromQ(q), d, iters)
     q.select(col("vec_id"), dotExpr(v).as("pc1_fp"))
   }
@@ -258,7 +256,7 @@ object PcaPower {
     */
   def projectTopK(emb: DataFrame, d: Int, k: Int, iters: Int = 8): DataFrame = {
     require(k >= 1 && k <= d)
-    var cur = materialize(quantized(emb)) // (vec_id, qarr, pc1.., qarr')
+    var cur = Iterate.materialize(quantized(emb)) // (vec_id, qarr, pc1.., qarr')
     for (c <- 1 to k) {
       val v = eigvecLocal(statsFromQ(cur), d, iters)
       // the projection IS the deflation coefficient — computed once,
@@ -268,7 +266,7 @@ object PcaPower {
         var vv = 0L
         v.foreach(x => vv += x * x) // d * 1e12 — far inside int64
         val prev = cur
-        cur = materialize(
+        cur = Iterate.materialize(
           cur.withColumn("qarr", residExpr(v, vv, s"pc${c}_fp")))
         prev.unpersist()
       }

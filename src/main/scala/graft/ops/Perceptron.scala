@@ -39,11 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object Perceptron {
 
-  /** Corpus-sized frames checkpoint in place (distributed); only the
-    * d-row weight vector is ever collected as a local relation.
-    */
-  private def materializeDist(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** Train `rounds` batch-perceptron rounds over `docs` (columns: id,
     * text, y in {+1,-1}) and score every document with the final
     * weights. Output: (id, y, margin_fp, pred) where `margin_fp` is the
@@ -52,7 +47,7 @@ object Perceptron {
     */
   /** Hashed token-count features (id, y, dim, cnt), checkpointed. */
   private def featurize(docs: DataFrame, dims: Int): DataFrame =
-    materializeDist(
+    Iterate.materialize(
       docs.select(col("id"), col("y"),
         explode(split(col("text"), " ")).as("tok"))
         .filter(col("tok") =!= "")

@@ -38,8 +38,6 @@ object RandomWalk {
     * node). Output: (walk_id, step, node) — `walk_id` is the seed node,
     * step 0 is the seed itself.
     */
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   def run(
       edges: DataFrame, seeds: DataFrame,
       steps: Int, src: String = "src", dst: String = "dst",
@@ -55,20 +53,20 @@ object RandomWalk {
     val sel = edges.select(col(src).as("src"), col(dst).as("dst"))
     // edgesDistinct (r10): caller-asserted distinctness skips the
     // corpus-sized distinct shuffle (RankQueries.tradeEdgesDistinct)
-    val e0 = materialize(if (edgesDistinct) sel else sel.distinct())
+    val e0 = Iterate.materialize(if (edgesDistinct) sel else sel.distinct())
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
-    val e = materialize(e0.repartition(p, col("src")))
+    val e = Iterate.materialize(e0.repartition(p, col("src")))
     e0.unpersist()
     val s0 = seeds.toDF("walk_id").distinct()
       .select(col("walk_id"), col("walk_id").as("node"))
-    var frontier = materialize(s0)
+    var frontier = Iterate.materialize(s0)
     var out = Seq(frontier.withColumn("step", lit(0)))
     for (t <- 1 to steps) {
       // argmin over the out-neighborhood: hash seeded by (node, step, dst).
       // Each step materializes so step t's job starts from step t-1's rows
       // rather than replaying the whole walk prefix (O(steps) per step =
       // O(steps^2) total without the checkpoint)
-      val next = materialize(frontier.join(e, frontier("node") === e("src"))
+      val next = Iterate.materialize(frontier.join(e, frontier("node") === e("src"))
         .select(col("walk_id"),
           struct(
             expr(s"md5p60(concat(node, '|', '$t', '|', dst))").as("h"),

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * engines; ordering and packing are SHARD-LOCAL (dataloaders consume
   * shards independently), so there is no global sort anywhere.
   *
-  * Requires `md5p60` (GraftExtensions / Md5Prefix60.register).
+  * Requires `md5p60` (GraftExtensions or `GraftExtensions.register`).
   */
 object Sharding {
 

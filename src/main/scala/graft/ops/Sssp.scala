@@ -40,8 +40,6 @@ import org.apache.spark.sql.functions._
   */
 object Sssp {
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** (node, dist) for every node within `rounds` relaxation rounds of
     * the seed set. `edges` must carry (src, dst, w) with w int64 >= 0;
     * `seeds` is a single-column frame of start nodes (dist 0, present
@@ -60,12 +58,12 @@ object Sssp {
     val local = LocalTail.collect("sssp", raw)
     if (local.isDefined)
       return GraphLocal.sssp(local.get, seeds, rounds)
-    val e0 = materialize(
+    val e0 = Iterate.materialize(
       raw.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
-      val e = materialize(e0.repartition(p, col("src")))
+      val e = Iterate.materialize(e0.repartition(p, col("src")))
       e0.unpersist()
-      var dist = materialize(
+      var dist = Iterate.materialize(
         seeds.toDF("node").distinct().withColumn("dist", lit(0L)))
       val cadence = new Iterate.Cadence(dist)
       for (t <- 1 to rounds) {

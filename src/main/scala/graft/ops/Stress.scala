@@ -36,30 +36,28 @@ import org.apache.spark.sql.functions._
   */
 object Stress {
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** (node, stress) summed over the seed sample; nodes never reached
     * (or with zero through-traffic) are absent. `edges` is an
     * UNDIRECTED (a, b) frame, one row per edge.
     */
   def run(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1)
-    val sym0 = materialize(
+    val sym0 = Iterate.materialize(
       edges.select(col("a").as("src"), col("b").as("dst"))
         .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
         .filter(col("src") =!= col("dst"))
         .distinct())
     Iterate.withWidth(edges.sparkSession, sym0.count()) { p =>
-    val e = materialize(sym0.repartition(p, col("src")))
+    val e = Iterate.materialize(sym0.repartition(p, col("src")))
     sym0.unpersist()
     // ---- forward: per-seed path counting ----
-    var frontier = materialize(
+    var frontier = Iterate.materialize(
       seeds.toDF("seed").distinct()
         .select(col("seed"), col("seed").as("node"),
           lit(0).as("hop"), lit(1L).as("sigma")))
     var visited = frontier
     for (t <- 1 to maxHops) {
-      val next = materialize(
+      val next = Iterate.materialize(
         frontier.join(e, frontier("node") === e("src"))
           .groupBy(col("seed"), col("dst").as("node"))
           .agg(sum(col("sigma")).as("sigma"))
@@ -74,13 +72,13 @@ object Stress {
       frontier = next
     }
     // ---- backward: continuation counts, deepest level up ----
-    var gPrev = materialize(
+    var gPrev = Iterate.materialize(
       visited.filter(col("hop") === maxHops)
         .select(col("seed"), col("node"), lit(1L).as("g")))
     var gAll = gPrev
     for (l <- (maxHops - 1) to 0 by -1) {
       val lvl = visited.filter(col("hop") === l).select("seed", "node")
-      val gl = materialize(
+      val gl = Iterate.materialize(
         lvl.join(e, lvl("node") === e("src"), "left")
           .join(gPrev.select(col("seed").as("gs"), col("node").as("gn"),
             col("g")),

@@ -31,8 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object TemporalReach {
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** (node, arr_day) for every node with a time-respecting path of at
     * most `rounds` edges from the seed set. `edges` must carry
     * (src, dst, day) with day int64; `seeds` a single-column frame.
@@ -51,11 +49,11 @@ object TemporalReach {
     val local = LocalTail.collect("temporal_reach", raw)
     if (local.isDefined)
       return GraphLocal.temporalReach(local.get, seeds, rounds, seedDay)
-    val e0 = materialize(raw.distinct())
+    val e0 = Iterate.materialize(raw.distinct())
     Iterate.withWidth(edges.sparkSession, e0.count()) { p =>
-      val e = materialize(e0.repartition(p, col("src")))
+      val e = Iterate.materialize(e0.repartition(p, col("src")))
       e0.unpersist()
-      var arr = materialize(
+      var arr = Iterate.materialize(
         seeds.toDF("node").distinct().withColumn("arr_day", lit(seedDay)))
       val cadence = new Iterate.Cadence(arr)
       for (t <- 1 to rounds) {

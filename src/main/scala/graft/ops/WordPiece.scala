@@ -39,13 +39,11 @@ object WordPiece {
   val MinCount = 50L
   private val K = 5 // 2^(K+1)-1 = 63 >= MaxLen jumps
 
-  private def materialize(df: DataFrame): DataFrame = Iterate.materialize(df)
-
   /** (word, n_occurrences, n_pieces, seg) for every distinct truncated
     * word of `docs` (doc_id, text); seg = pieces joined by '|'.
     */
   def run(docs: DataFrame): DataFrame = {
-    val words = materialize(docs
+    val words = Iterate.materialize(docs
       .select(explode(split(col("text"), " ")).as("tok"))
       .filter(col("tok") =!= "")
       .select(expr(s"substr(tok, 1, $MaxLen)").as("w"))
@@ -62,11 +60,11 @@ object WordPiece {
     val v1 = words
       .select(col("w"), explode(expr("sequence(1, length(w))")).as("p"))
       .select(expr("substr(w, p, 1)").as("g")).distinct()
-    val vocab = materialize(v24.union(v1).distinct())
+    val vocab = Iterate.materialize(v24.union(v1).distinct())
 
     // bestLen for every (word, position): one explode + one semi-join +
     // one argmax — position-independent, so no walk is needed to rank
-    val best = materialize(words
+    val best = Iterate.materialize(words
       .select(col("w"), explode(expr("sequence(1, length(w))")).as("p"))
       .select(col("w"), col("p"), explode(expr("array(1, 2, 3, 4)")).as("l"))
       .filter(expr("p + l - 1 <= length(w)"))
@@ -76,13 +74,13 @@ object WordPiece {
 
     // jump tables J_{2^k}; saturation: a jump past the end keeps its
     // landing position (no row to compose with)
-    var jumps = List(materialize(
+    var jumps = List(Iterate.materialize(
       best.select(col("w"), col("p"), (col("p") + col("bl")).as("np"))))
     for (_ <- 1 to K) {
       val j = jumps.head
       val b = j.select(col("w").as("bw"), col("p").as("bp"),
         col("np").as("bnp"))
-      jumps ::= materialize(
+      jumps ::= Iterate.materialize(
         j.join(b, col("w") === col("bw") && col("np") === col("bp"), "left")
           .select(col("w"), col("p"), coalesce(col("bnp"), col("np")).as("np")))
     }
@@ -91,7 +89,7 @@ object WordPiece {
     for (j <- jumps) {
       val jj = j.select(col("w").as("jw"), col("p").as("jp"),
         col("np").as("jnp"))
-      reach = materialize(
+      reach = Iterate.materialize(
         reach.union(
           reach.join(jj,
             col("w") === col("jw") && col("p") === col("jp"))

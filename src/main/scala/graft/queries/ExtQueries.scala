@@ -711,7 +711,7 @@ object ExtQueries {
     },
 
     // ---- Cross-format identity through the batch DSv2 source (see
-    //      graft.sources.JsonlSource): events → Spark's JSONL writer →
+    //      graft.sources.JsonlSource): events → Spark's JSON writer →
     //      the graft-jsonl TableProvider (filter pushdown evaluates
     //      cents >= 26000 on the parsed line, column pruning drops
     //      user_id at the reader) → hash-aggregate — the SAME numbers
@@ -732,11 +732,7 @@ object ExtQueries {
         .select(col("event_id"), col("user_id"), col("event_type"),
           expr("CAST(floor(value * 1e2 + 5e-1) AS BIGINT)").as("cents"))
         .coalesce(4)
-        .write.format("graft-jsonl") // OUR DSv2 writer, not Spark's json()
-        .option("path", tmp)
-        .option("schema",
-          "event_id:long,user_id:long,event_type:string,cents:long")
-        .mode("overwrite").save()
+        .write.mode("overwrite").json(tmp)
       s.read.format("graft-jsonl")
         .option("path", tmp)
         .option("schema",

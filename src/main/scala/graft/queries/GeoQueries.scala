@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Md5Prefix60
 import graft.model.Tables
 
 /** Spatial proximity operators via grid-cell blocking — the planar
@@ -58,7 +57,7 @@ object GeoQueries {
 
   /** Points with derived coords and cell ids (Spark side). */
   private def cells(s: SparkSession, d: String): DataFrame = {
-    Md5Prefix60.register(s)
+    graft.GraftExtensions.register(s)
     Tables.customer(s, d)
       .select(
         col("c_custkey").as("id"),

@@ -41,9 +41,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *    parallelism scales with the file count, the layout contract
   *    [[PartitionedStore]] maintains.
   *
+  * The source is read-only and batch-only: pushdown is what Spark's
+  * built-in `json` source lacks, everything else is Spark's. Files are
+  * written with `df.write.json(dir)` (the reader lists `*.json`, so
+  * Spark's `part-*.json` files load and `_SUCCESS`/`.crc` are skipped;
+  * the null fields Spark's writer drops read back as null), and a
+  * stream over such a directory is Spark's file stream,
+  * `spark.readStream.schema(s).json(dir)`.
+  *
   * `JsonlSourceSpec` pins all three (pruned build counts, source-side
   * skip counts, explain-visible pushdown); `q_jsonl_source` closes the
-  * loop end-to-end: events → Spark's JSONL writer → THIS source →
+  * loop end-to-end: events → Spark's JSON writer → THIS source →
   * aggregate, hash-matched against the DuckDB oracle on the original
   * parquet — a cross-format identity check.
   *
@@ -230,15 +238,11 @@ private[sources] trait JsonlFileStats
     }
 }
 
-class JsonlScan(
-    dir: String, full: StructType, required: StructType,
-    pushed: Array[JsonlPred]) extends Scan with Batch with JsonlFileStats {
+class JsonlScan(dir: String, required: StructType, pushed: Array[JsonlPred])
+    extends Scan with Batch with JsonlFileStats {
   override def statsDir: String = dir
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new JsonlMicroBatchStream(dir, required, pushed, checkpointLocation)
   override def planInputPartitions(): Array[InputPartition] =
     JsonlSource.listJsonFiles(dir)
       .map(p => JsonlInputPartition(p.toString): InputPartition)
@@ -247,131 +251,6 @@ class JsonlScan(
   override def description(): String =
     s"graft-jsonl $dir, ReadSchema: ${required.simpleString}, " +
       s"PushedFilters: [${pushed.map(p => s"${p.col} ${p.op} ${p.value}").mkString(", ")}]"
-}
-
-/** Streaming (micro-batch) read leg over the SAME per-file readers and
-  * pushdown state as the batch path. File-discovery offsets follow
-  * Spark's own FileStreamSource design: a persistent discovery log in
-  * the CHECKPOINT FILESYSTEM (one immutable `<i>.batch` file per
-  * discovery round, written through the Hadoop FileSystem API — so
-  * hdfs:/s3a:/file: checkpoints all work and restart from a different
-  * host/CWD replays exactly the logged prefix), offsets are just the
-  * batch index — O(1) offset JSON no matter how many files accumulate.
-  * New files are admitted in whole-file units (each micro-batch = the
-  * files discovered since the last), which is the right granularity
-  * for an append-only ingest directory ([[PartitionedStore]]'s layout
-  * contract).
-  */
-class JsonlMicroBatchStream(
-    dir: String, required: StructType, pushed: Array[JsonlPred],
-    checkpointLocation: String)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  private case class BatchIndexOffset(n: Int) extends Offset {
-    override def json(): String = s"""{"batchIndex":$n}"""
-  }
-
-  // The discovery log lives in the checkpoint's OWN filesystem —
-  // resolving the location through Hadoop handles any scheme (the
-  // raw string through java.nio.Paths would turn "file:/..." or
-  // "hdfs://..." into a bogus CWD-relative local directory, silently
-  // breaking exactly-once on restart). The filesystem is resolved with
-  // the SESSION's Hadoop conf, not a bare `new Configuration()`, so
-  // `spark.hadoop.*` settings (s3a credentials/endpoints, hdfs
-  // nameservices) reach the checkpoint FS.
-  private val logDir = new org.apache.hadoop.fs.Path(
-    checkpointLocation, "graft-jsonl-files")
-  private val fs = logDir.getFileSystem(
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration()))
-  fs.mkdirs(logDir)
-
-  private def batchFile(i: Int) =
-    new org.apache.hadoop.fs.Path(logDir, f"$i%010d.batch")
-  private def batchCount(): Int = {
-    val st = fs.listStatus(logDir)
-    st.count(_.getPath.getName.endsWith(".batch"))
-  }
-  private def readBatch(i: Int): Array[String] = {
-    val in = fs.open(batchFile(i))
-    try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toArray
-    finally in.close()
-  }
-  /** Write an immutable discovery-round file. Concurrent/zombie-driver
-    * protection: on HDFS the rename-to-existing-destination fails
-    * atomically, so a second driver on the same checkpoint loses
-    * cleanly. On LOCAL filesystems POSIX rename overwrites, so the
-    * guard is the (non-atomic, best-effort) exists() check below —
-    * file: checkpoints are a single-driver deployment by construction,
-    * and the window is two drivers sealing the SAME round in the same
-    * instant.
-    */
-  private def writeBatch(i: Int, files: Array[String]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(logDir, f".$i%010d.tmp")
-    // a crash between create and rename leaves a stale tmp; the name is
-    // deterministic and the writer is single (the restarted driver), so
-    // clear it rather than wedging every restart on FileAlreadyExists
-    fs.delete(tmp, false)
-    val out = fs.create(tmp, false)
-    try out.write(files.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(batchFile(i)) || !fs.rename(tmp, batchFile(i))) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(
-        s"graft-jsonl: discovery log ${batchFile(i)} already exists " +
-          "(concurrent stream on one checkpoint?)")
-    }
-  }
-
-  override def initialOffset(): Offset = BatchIndexOffset(0)
-  override def deserializeOffset(json: String): Offset = {
-    val n = (new ObjectMapper).readTree(json).get("batchIndex").asInt()
-    BatchIndexOffset(n)
-  }
-  // Seen-file state, replayed from the log ONCE at (re)start and then
-  // maintained in memory as rounds are sealed — per-trigger cost is one
-  // directory listing of the data dir, not a re-read of every .batch
-  // file ever written (which would grow O(total files discovered) for a
-  // long-lived stream; FileStreamSource compacts its log for the same
-  // reason). Driver-side, single logical writer, so memory and log
-  // cannot diverge.
-  private var seenCount: Int = -1
-  private val seenFiles = scala.collection.mutable.HashSet.empty[String]
-  private def replayLogOnce(): Unit = if (seenCount < 0) {
-    seenCount = batchCount()
-    (0 until seenCount).foreach(i => seenFiles ++= readBatch(i))
-  }
-
-  /** Discover files not yet logged; if any, seal them as the next
-    * discovery-round file. Driver-side, single logical writer.
-    */
-  override def latestOffset(): Offset = {
-    replayLogOnce()
-    val fresh = JsonlSource.listJsonFiles(dir)
-      .map(_.toString).filterNot(seenFiles)
-    if (fresh.isEmpty) BatchIndexOffset(seenCount)
-    else {
-      writeBatch(seenCount, fresh)
-      seenFiles ++= fresh
-      seenCount += 1
-      BatchIndexOffset(seenCount)
-    }
-  }
-  override def planInputPartitions(
-      start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[BatchIndexOffset].n
-    val e = end.asInstanceOf[BatchIndexOffset].n
-    (s until e).flatMap(readBatch).toArray
-      .map(p => JsonlInputPartition(p): InputPartition)
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new JsonlPartitionReaderFactory(required, pushed)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 class JsonlScanBuilder(dir: String, full: StructType)
@@ -456,7 +335,7 @@ class JsonlScanBuilder(dir: String, full: StructType)
   override def build(): Scan =
     if (aggPushed)
       new JsonlAggScan(dir, full, required, pushed, aggGroup, aggFuncs)
-    else new JsonlScan(dir, full, required, pushed)
+    else new JsonlScan(dir, required, pushed)
 }
 
 /** Scan variant with a pushed partial aggregation: one reader per file
@@ -576,165 +455,15 @@ class JsonlAggReaderFactory(
   }
 }
 
-/** Commit message carrying a committed TASK's staged file: the final
-  * move into place happens in the driver's job-level commit, so a
-  * failed job neither destroys pre-existing data (truncate is applied
-  * there too) nor leaves partial task output visible.
-  */
-case class JsonlCommitMsg(staged: String, finalName: String)
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-/** Per-task JSONL writer: writes to a JOB-scoped staged file; task
-  * commit closes it (flushed to the OS — like Spark's own file sinks,
-  * durability against power loss is the filesystem's job, not a
-  * per-task fsync) and reports the path — VISIBILITY is deferred to
-  * [[JsonlBatchWrite.commit]] (job-level atomicity; an aborted/
-  * speculated task just deletes its staged file, and job commit
-  * sweeps any zombie attempt's leftovers).
-  */
-class JsonlDataWriter(dir: String, jobId: String, partitionId: Int,
-    taskId: Long, schema: StructType)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  private val tmp = java.nio.file.Paths.get(
-    dir, s".part-$partitionId-$taskId.$jobId.staged")
-  private val out = java.nio.file.Files.newBufferedWriter(tmp)
-  override def write(row: InternalRow): Unit = {
-    val sb = new StringBuilder("{")
-    schema.fields.zipWithIndex.foreach { case (f, i) =>
-      if (i > 0) sb.append(", ")
-      sb.append('"').append(f.name).append("\": ")
-      if (row.isNullAt(i)) sb.append("null")
-      else f.dataType match {
-        case LongType => sb.append(row.getLong(i))
-        case _ =>
-          // minimal JSON string escape (quotes/backslash/control)
-          val v = row.getUTF8String(i).toString
-          sb.append('"')
-          v.foreach {
-            case '"' => sb.append("\\\"")
-            case '\\' => sb.append("\\\\")
-            case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-            case c => sb.append(c)
-          }
-          sb.append('"')
-      }
-    }
-    out.write(sb.append('}').toString)
-    out.newLine()
-  }
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    out.close()
-    // the final name carries the job id: task ids restart from small
-    // numbers in every application, so "part-P-T.json" could collide
-    // with a previous app's output in append mode — and a collision
-    // surfacing as Files.move failure inside the DRIVER's job commit
-    // has no retry. The (uuid) job id makes names globally unique.
-    JsonlCommitMsg(tmp.toString, s"part-$partitionId-$taskId-$jobId.json")
-  }
-  override def abort(): Unit = {
-    out.close()
-    java.nio.file.Files.deleteIfExists(tmp)
-  }
-  override def close(): Unit = ()
-}
-
-class JsonlBatchWrite(dir: String, jobId: String, schema: StructType,
-    truncate: Boolean)
-    extends org.apache.spark.sql.connector.write.BatchWrite {
-  override def createBatchWriterFactory(
-      info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DataWriterFactory = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val (dirS, jid, sch) = (dir, jobId, schema)
-    new org.apache.spark.sql.connector.write.DataWriterFactory {
-      override def createWriter(partitionId: Int, taskId: Long)
-          : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-        new JsonlDataWriter(dirS, jid, partitionId, taskId, sch)
-    }
-  }
-  /** Job-level commit: ONLY here do staged files become visible. A
-    * failure BEFORE commit() starts leaves pre-existing data untouched.
-    * The commit itself is not atomic (it is a sequence of file moves,
-    * the best a plain file sink can do), but it is RECOVERABLE: truncate
-    * moves old data aside to `<name>.<jobId>.trash` rather than deleting
-    * it, and only after every committed task's staged file has moved
-    * into place are the trash files dropped — a driver crash mid-commit
-    * leaves a mixed directory, with all pre-existing rows still on disk
-    * under `.trash` names for manual recovery.
-    */
-  override def commit(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
-      : Unit = {
-    val trashed: Seq[java.nio.file.Path] = if (truncate)
-      JsonlSource.listJsonFiles(dir).map { p =>
-        val t = p.resolveSibling(s"${p.getFileName}.$jobId.trash")
-        java.nio.file.Files.move(p, t)
-        t
-      }.toSeq
-    else Seq.empty
-    messages.foreach { case JsonlCommitMsg(staged, finalName) =>
-      java.nio.file.Files.move(java.nio.file.Paths.get(staged),
-        java.nio.file.Paths.get(dir, finalName))
-    }
-    trashed.foreach(java.nio.file.Files.deleteIfExists(_))
-    // sweep staged files from LOSING attempts of this job (zombie /
-    // speculated tasks whose abort() never ran — executor loss): the
-    // committed winners were just moved away, anything left with this
-    // job id is garbage that truncate-overwrite would never collect
-    // (listJsonFiles only sees .json).
-    dropStaged()
-  }
-  private def dropStaged(): Unit = {
-    val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    try s.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(s".$jobId.staged"))
-      .toArray.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally s.close()
-  }
-  /** Job-level abort: delete every staged file this job produced —
-    * both the task-committed ones (carried in messages) and any
-    * stragglers matching the job id.
-    */
-  override def abort(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
-      : Unit = {
-    messages.filter(_ != null).foreach { case JsonlCommitMsg(staged, _) =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(staged))
-    }
-    dropStaged()
-  }
-}
-
 class JsonlTable(dir: String, schema0: StructType)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
+    extends Table with SupportsRead {
   override def name(): String = s"graft-jsonl($dir)"
   override def schema(): StructType = schema0
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
+    util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
     new JsonlScanBuilder(dir, schema0)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder
-      with org.apache.spark.sql.connector.write.SupportsTruncate {
-      private var doTruncate = false
-      override def truncate()
-          : org.apache.spark.sql.connector.write.WriteBuilder = {
-        doTruncate = true; this
-      }
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.Write {
-          override def toBatch
-              : org.apache.spark.sql.connector.write.BatchWrite =
-            new JsonlBatchWrite(dir, info.queryId(), info.schema(),
-              doTruncate)
-        }
-    }
 }
 
 /** `spark.read.format("graft-jsonl").option("path", dir)

@@ -19,31 +19,32 @@ import org.apache.spark.sql.functions._
   *     Parquet min/max row-group stats make symbol-equality predicates
   *     (P3) skip row groups without a dedicated index;
   *   - writes append whole files (columnar, compressed), never
-  *     row-at-a-time; `maxRecordsPerFile` bounds file size so a 1000-
+  *     row-at-a-time; `MaxRecordsPerFile` bounds file size so a 1000-
   *     executor scan parallelizes evenly.
+  *
+  * Rows carry the reference's `stock_data` columns: `local_time` (the
+  * designated timestamp) and `stock_symbol`.
   */
 object PartitionedStore {
 
   val PartitionCol = "trade_date"
+  private val TimeCol = "local_time"
+  private val SymbolCol = "stock_symbol"
+  private val MaxRecordsPerFile = 5000000L
 
-  /** Append `df` to `path`, day-partitioned by `date(timeCol)`.
+  /** Append `df` to `path`, day-partitioned by `date(local_time)`.
     *
     * `repartition(partition, bucket-ish key)` before the write avoids the
     * small-files problem: each task writes to few partitions instead of
     * every task writing a sliver of every day.
     */
-  def write(
-      df: DataFrame,
-      path: String,
-      timeCol: String = "local_time",
-      symbolCol: String = "stock_symbol",
-      maxRecordsPerFile: Long = 5000000L): Unit = {
-    df.withColumn(PartitionCol, to_date(col(timeCol)))
-      .repartition(col(PartitionCol), col(symbolCol))
-      .sortWithinPartitions(col(symbolCol), col(timeCol))
+  def write(df: DataFrame, path: String): Unit = {
+    df.withColumn(PartitionCol, to_date(col(TimeCol)))
+      .repartition(col(PartitionCol), col(SymbolCol))
+      .sortWithinPartitions(col(SymbolCol), col(TimeCol))
       .write
       .mode("append")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", MaxRecordsPerFile)
       .partitionBy(PartitionCol)
       .parquet(path)
   }
@@ -69,16 +70,14 @@ object PartitionedStore {
       spark: SparkSession,
       src: String,
       dst: String,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      timeCol: String = "local_time",
-      symbolCol: String = "stock_symbol"): Unit = {
+      targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     val p = new org.apache.hadoop.fs.Path(src)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(p).getLength
     val files = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     read(spark, src)
-      .repartitionByRange(files, col(PartitionCol), col(symbolCol), col(timeCol))
-      .sortWithinPartitions(col(symbolCol), col(timeCol))
+      .repartitionByRange(files, col(PartitionCol), col(SymbolCol), col(TimeCol))
+      .sortWithinPartitions(col(SymbolCol), col(TimeCol))
       .write
       .mode("overwrite")
       .partitionBy(PartitionCol)
@@ -86,7 +85,7 @@ object PartitionedStore {
   }
 
   /** Time-range scan with explicit partition pruning: adds the
-    * `trade_date` bounds implied by a `timeCol` interval so the planner
+    * `trade_date` bounds implied by a `local_time` interval so the planner
     * prunes directories even when the caller filters on the (finer)
     * timestamp column.
     */
@@ -94,10 +93,9 @@ object PartitionedStore {
       spark: SparkSession,
       path: String,
       start: java.sql.Timestamp,
-      end: java.sql.Timestamp,
-      timeCol: String = "local_time"): DataFrame =
+      end: java.sql.Timestamp): DataFrame =
     read(spark, path)
       .filter(
         col(PartitionCol).between(to_date(lit(start)), to_date(lit(end))) &&
-          col(timeCol).between(lit(start), lit(end)))
+          col(TimeCol).between(lit(start), lit(end)))
 }

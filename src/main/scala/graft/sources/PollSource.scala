@@ -72,22 +72,20 @@ object PollSource {
     def fetch(since: Long, max: Int): Seq[String]
   }
 
-  /** Reflective poller construction: `(java.util.Map[String,String])`
-    * ctor preferred (gets all reader options, lower-cased keys), no-arg
-    * ctor as fallback.
+  /** Reflective poller construction through its
+    * `(java.util.Map[String,String])` constructor, which gets all reader
+    * options.
     */
   private[sources] def instantiate(
-      className: String, options: util.Map[String, String]): Poller = {
-    val cls = Class.forName(className)
-    val poller =
-      try cls.getConstructor(classOf[util.Map[String, String]])
-        .newInstance(options)
-      catch {
-        case _: NoSuchMethodException =>
-          cls.getConstructor().newInstance()
-      }
-    poller.asInstanceOf[Poller]
-  }
+      className: String, options: util.Map[String, String]): Poller =
+    try Class.forName(className)
+      .getConstructor(classOf[util.Map[String, String]])
+      .newInstance(options).asInstanceOf[Poller]
+    catch {
+      case _: NoSuchMethodException =>
+        throw new IllegalArgumentException(s"graft-poll: poller $className " +
+          "needs a public (java.util.Map[String, String]) constructor")
+    }
 }
 
 /** A [[PollSource.Poller]] over a line-delimited file that only ever

@@ -76,7 +76,7 @@ class EwmAvgSpec extends AnyFunSuite {
   }
 
   test("SQL registration: ewm_avg usable in spark.sql with OVER") {
-    EwmAvg.register(spark)
+    graft.GraftExtensions.register(spark)
     Seq(("a", 1, 10.0), ("a", 2, 20.0), ("a", 3, 30.0))
       .toDF("k", "t", "v").createOrReplaceTempView("ewm_probe")
     val got = spark.sql(

@@ -10,7 +10,7 @@ class Md5Prefix60Spec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
 
   test("md5p60 equals the conv(substring(md5)) SQL construction exactly") {
-    Md5Prefix60.register(spark)
+    graft.GraftExtensions.register(spark)
     val s = spark
     import s.implicits._
     val df = (Seq("", "a", "hello world", "Z" * 1000, "unicode é中")
@@ -25,7 +25,7 @@ class Md5Prefix60Spec extends AnyFunSuite with Matchers {
   }
 
   test("usable inside lambda expressions (the fingerprint shape)") {
-    Md5Prefix60.register(spark)
+    graft.GraftExtensions.register(spark)
     val s = spark
     import s.implicits._
     val got = Seq("a b c").toDF("text")
@@ -41,7 +41,7 @@ class Md5Prefix60Spec extends AnyFunSuite with Matchers {
   }
 
   test("md5s60 equals the conv(substring(md5, 16, 15)) SQL construction exactly") {
-    Md5Prefix60.register(spark)
+    graft.GraftExtensions.register(spark)
     val s = spark
     import s.implicits._
     val rows = (Seq("", "a", "hello world", "Z" * 1000, "unicode é中")
@@ -55,7 +55,7 @@ class Md5Prefix60Spec extends AnyFunSuite with Matchers {
   }
 
   test("null propagates") {
-    Md5Prefix60.register(spark)
+    graft.GraftExtensions.register(spark)
     val s = spark
     import s.implicits._
     Seq(Option.empty[String]).toDF("t")

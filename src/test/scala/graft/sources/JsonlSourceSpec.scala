@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -79,30 +77,27 @@ class JsonlSourceSpec extends AnyFunSuite with Matchers {
     plan should include("v < 200")
   }
 
-  test("write path: DSv2 writer round-trips through the reader, " +
-      "overwrite truncates") {
+  test("write path: files Spark's json writer wrote load through the reader") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_w").toString
-    val df = (0L until 50L).map(i => (i, s"s$i", i * 7))
+    val df = (0L until 50L)
+      .map(i => (i, if (i == 0L) None else Some(s"s$i"), i * 7))
       .toDF("id", "grp", "v")
-    df.repartition(3).write.format("graft-jsonl")
-      .option("path", dir).option("schema", "id:long,grp:string,v:long")
-      .mode("overwrite").save()
+    df.repartition(3).write.mode("overwrite").json(dir)
     val back = read(dir)
     back.count() shouldBe 50L
-    back.agg(org.apache.spark.sql.functions.sum("v")).head.getLong(0) shouldBe
-      (0L until 50L).map(_ * 7).sum
-    // overwrite truncates: a second smaller write leaves no stale rows
-    df.limit(10).write.format("graft-jsonl")
-      .option("path", dir).option("schema", "id:long,grp:string,v:long")
-      .mode("overwrite").save()
+    // one partition per part-*.json file; _SUCCESS and .crc are skipped
+    back.rdd.getNumPartitions shouldBe 3
+    back.agg(sum("v")).head.getLong(0) shouldBe (0L until 50L).map(_ * 7).sum
+    // Spark's writer drops null fields; the reader maps them back to null
+    back.filter(col("grp").isNull).select("id").head.getLong(0) shouldBe 0L
+    // overwrite replaces: a second smaller write leaves no stale rows
+    df.limit(10).write.mode("overwrite").json(dir)
     read(dir).count() shouldBe 10L
-    // escaping: quotes and control chars survive the round trip
+    // escaping: quote, backslash and newline survive the round trip
     val tricky = Seq((1L, "a\"b\\c\nd", 0L)).toDF("id", "grp", "v")
     val dir2 = java.nio.file.Files.createTempDirectory("graft_jsonl_e").toString
-    tricky.write.format("graft-jsonl")
-      .option("path", dir2).option("schema", "id:long,grp:string,v:long")
-      .mode("overwrite").save()
+    tricky.write.mode("overwrite").json(dir2)
     read(dir2).select("grp").head.getString(0) shouldBe "a\"b\\c\nd"
   }
 
@@ -205,82 +200,6 @@ class JsonlSourceSpec extends AnyFunSuite with Matchers {
     j.count() shouldBe 10000L
   }
 
-  test("streaming leg: micro-batches track new files, restart resumes " +
-      "from the checkpoint log, pushdown schema applies") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_s").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_jsonl_c").toString
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "a.json"),
-      """{"id": 1, "grp": "x", "v": 10}
-        |{"id": 2, "grp": "y", "v": 20}""".stripMargin.getBytes)
-    val stream = spark.readStream.format("graft-jsonl")
-      .option("path", dir)
-      .option("schema", "id:long,grp:string,v:long")
-      .load()
-      .select("id", "v")
-    // memory sink forbids checkpoint recovery; foreachBatch into a
-    // shared collector supports it and keeps the restart leg honest
-    JsonlStreamCollector.ids.clear()
-    def start() = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.collect().foreach(r => JsonlStreamCollector.ids.add(r.getLong(0)))
-        ()
-      }
-      .option("checkpointLocation", ckpt).start()
-    val q1 = start()
-    try {
-      q1.processAllAvailable()
-      JsonlStreamCollector.ids.asScala.toSet shouldBe Set(1L, 2L)
-      // a new file arrives -> exactly its rows appear in the next batch
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(dir, "b.json"),
-        """{"id": 3, "grp": "x", "v": 30}""".getBytes)
-      q1.processAllAvailable()
-      JsonlStreamCollector.ids.asScala.toSet shouldBe Set(1L, 2L, 3L)
-    } finally q1.stop()
-    // restart from the same checkpoint: only files logged AFTER the
-    // stop are delivered — no re-delivery of a/b
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "c.json"),
-      """{"id": 4, "grp": "z", "v": 40}""".getBytes)
-    JsonlStreamCollector.ids.clear()
-    val q2 = start()
-    try {
-      q2.processAllAvailable()
-      JsonlStreamCollector.ids.asScala.toSet shouldBe Set(4L)
-    } finally q2.stop()
-  }
-
-  test("job-level write atomicity: an aborted job leaves pre-existing " +
-      "data untouched and no staged files") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_a").toString
-    val pre = Seq((1L, "keep", 2L)).toDF("id", "grp", "v")
-    pre.write.format("graft-jsonl")
-      .option("path", dir).option("schema", "id:long,grp:string,v:long")
-      .mode("overwrite").save()
-    // a failing overwrite job: one row throws mid-write
-    val bad = spark.range(0, 10)
-      .map(i => { if (i == 7) throw new RuntimeException("boom"); (i, "x", i) })
-      .toDF("id", "grp", "v")
-    intercept[Exception] {
-      bad.coalesce(1).write.format("graft-jsonl")
-        .option("path", dir).option("schema", "id:long,grp:string,v:long")
-        .mode("overwrite").save()
-    }
-    // pre-existing data survives (truncate happens only at job commit)
-    val back = read(dir).collect()
-    back.map(_.getString(1)).toSeq shouldBe Seq("keep")
-    // no .staged litter
-    val leftovers = {
-      val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".staged")).toList
-      finally s.close()
-    }
-    leftovers shouldBe empty
-  }
-
   test("missing fields surface as nulls") {
     val dir = java.nio.file.Files.createTempDirectory("graft_jsonl2").toString
     java.nio.file.Files.write(
@@ -291,11 +210,4 @@ class JsonlSourceSpec extends AnyFunSuite with Matchers {
       .collect().map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2)))
     got.toSeq shouldBe Seq((1L, None, 5L), (2L, Some("x"), 6L))
   }
-}
-
-/** Driver-side collector for the streaming-leg spec (foreachBatch
-  * runs on the driver in local mode).
-  */
-object JsonlStreamCollector {
-  val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
 }

@@ -30,6 +30,12 @@ class RegistryPoller(options: java.util.Map[String, String])
     recs.slice(since.toInt, since.toInt + max).toSeq
 }
 
+/** A poller without the `(java.util.Map)` constructor the source needs. */
+class NoOptionsPoller extends PollSource.Poller {
+  override def end(): Long = 0L
+  override def fetch(since: Long, max: Int): Seq[String] = Seq.empty
+}
+
 class PollSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -131,6 +137,20 @@ class PollSourceSpec extends AnyFunSuite {
     assert(parts.map(p => (p.start, p.count)).toSeq ==
       Seq((0L, 3), (3L, 3), (6L, 1)))
     assert(stream.planInputPartitions(PollOffset(7), PollOffset(7)).isEmpty)
+  }
+
+  test("a poller without the (java.util.Map) constructor fails at query start") {
+    val failure = intercept[Exception] {
+      val query = spark.readStream.format("graft-poll")
+        .option("poller", classOf[NoOptionsPoller].getName).load()
+        .writeStream.format("memory").queryName("poll_no_ctor").start()
+      try query.awaitTermination(60000) finally query.stop()
+    }
+    val messages = Iterator.iterate[Throwable](failure)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).toList
+    assert(messages.exists(m => m != null &&
+      m.contains("needs a public (java.util.Map[String, String]) constructor")),
+      messages.mkString("\n"))
   }
 
   test("JsonlFeedPoller cursors over a growing line file") {
