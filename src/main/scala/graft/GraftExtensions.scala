@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
+import graft.streaming.LocalCheckpointFileManager
+
 /** Catalyst extension injector — the deployment path for the library's
   * custom expressions on a real cluster:
   *
@@ -87,7 +89,8 @@ object GraftExtensions {
   /** The one session builder of the repo (`Bench`, `Verify` and the test
     * session): `local[cores]`, one shuffle partition per core, UTC, AQE
     * on, the custom functions through the injector above (the deployment
-    * path) and no UI.
+    * path), checkpoint files written without forks
+    * ([[graft.streaming.LocalCheckpointFileManager]]) and no UI.
     */
   def localSession(cores: Int): SparkSession =
     SparkSession.builder()
@@ -97,6 +100,7 @@ object GraftExtensions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .config(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 }

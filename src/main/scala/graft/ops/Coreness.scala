@@ -49,7 +49,7 @@ object Coreness {
       // unchanged vector and later rounds are no-ops; every round
       // materializes so the probe reads checkpointed data
       def sig(df: DataFrame): Long =
-        df.agg(sum(col("c"))).head.getLong(0)
+        df.agg(sum(col("c"))).head().getLong(0)
       var prev = sig(c)
       var done = false
       val cad = new Iterate.Cadence(c, every = 1)

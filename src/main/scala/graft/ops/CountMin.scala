@@ -51,7 +51,7 @@ object CountMin {
   def estimates(
       sketch: DataFrame, keys: DataFrame, keyCol: String,
       d: Int, w: Int): DataFrame = {
-    val gcols = keys.columns.map(col)
+    val gcols = keys.columns.toSeq.map(col)
     keys
       .withColumn("i", explode(sequence(lit(0), lit(d - 1))))
       .withColumn("bucket",

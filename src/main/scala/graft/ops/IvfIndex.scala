@@ -119,9 +119,9 @@ object IvfIndex {
       // exchanges, no n*k candidate rows, bit-identical scores/tie-break
       emb.withColumn("cent_id",
         graft.functions.AnnAssign.ivfCell(col("embedding"), book))
-        .select(emb.columns.map(col) :+ col("cent_id"): _*)
+        .select(emb.columns.toSeq.map(col) :+ col("cent_id"): _*)
     case None =>
-      val carry = emb.columns.filter(_ != "vec_id")
+      val carry = emb.columns.toSeq.filter(_ != "vec_id")
       // the n*k candidate fan-out runs at the SCAN's parallelism — spread
       // a single-split source first (no-op on any real multi-file corpus)
       withNorm(Iterate.spread(emb), "embedding", "e_nrm")
@@ -133,7 +133,7 @@ object IvfIndex {
           .as("m"))
         .select(col("vec_id") +: col("m.cent_id").as("cent_id") +:
           carry.map(c => col(s"m.$c").as(c)): _*)
-        .select(emb.columns.map(col) :+ col("cent_id"): _*)
+        .select(emb.columns.toSeq.map(col) :+ col("cent_id"): _*)
   }
 
   /** The collected [[graft.functions.AnnAssign.CentBook]] of a codebook

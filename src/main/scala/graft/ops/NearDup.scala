@@ -114,7 +114,7 @@ object NearDup {
       expr(s"CASE WHEN __hs IS NOT NULL THEN concat_ws('-', $cs) " +
         s"ELSE concat('uniq-', $id, '-', $k) END").as(s"band_$k")
     }
-    withMins.select(df.columns.map(col) ++ bandCols: _*)
+    withMins.select(df.columns.toSeq.map(col) ++ bandCols: _*)
   }
 
   // -------------------------------------------------------------- simhash

@@ -41,7 +41,7 @@ object Rollup {
   /** Fold one or more delta summaries into a snapshot summary. */
   def merge(snapshot: DataFrame, deltas: DataFrame*): DataFrame =
     deltas.foldLeft(snapshot)(_ unionByName _)
-      .groupBy(snapshot.columns.filterNot(Set("n", "s6", "mn", "mx")).map(col): _*)
+      .groupBy(snapshot.columns.toSeq.filterNot(Set("n", "s6", "mn", "mx")).map(col): _*)
       .agg(
         sum(col("n")).as("n"),
         sum(col("s6")).as("s6"),
@@ -51,7 +51,7 @@ object Rollup {
   /** Read-time view: derive the user-facing columns from the state. */
   def finish(summary: DataFrame): DataFrame =
     summary.select(
-      summary.columns.filterNot(Set("n", "s6", "mn", "mx")).map(col) ++ Seq(
+      summary.columns.toSeq.filterNot(Set("n", "s6", "mn", "mx")).map(col) ++ Seq(
         col("n"),
         (col("s6").cast("double") / lit(1e6)).as("sum_value"),
         (col("s6").cast("double") / lit(1e6) / col("n")).as("avg_value"),

@@ -56,7 +56,7 @@ object Skew {
     require(salts > 0)
     val salted = df.withColumn(
       "__salt",
-      pmod(hash((df.columns.map(col) :+ spark_partition_id()): _*), lit(salts)))
+      pmod(hash((df.columns.toSeq.map(col) :+ spark_partition_id()): _*), lit(salts)))
     val phase1 = salted
       .groupBy((keys :+ "__salt").map(col): _*)
       .agg(
@@ -113,7 +113,7 @@ object Skew {
       .join(broadcast(hot), fact(key) === col("__hot_key"), "left")
       .withColumn("__salt",
         when(col("__hot_key").isNull, lit(0)).otherwise(
-          pmod(hash((fact.columns.map(fact(_)) :+ spark_partition_id()): _*),
+          pmod(hash((fact.columns.toSeq.map(fact(_)) :+ spark_partition_id()): _*),
             lit(salts))))
       .drop("__hot_key")
     val dSalted = dim

@@ -65,7 +65,7 @@ object TextPrep {
     * exact integer math; per-row explode, no shuffle.
     */
   def chunkDocs(df: DataFrame, size: Int, stride: Int): DataFrame = {
-    val keep = df.columns.map(col)
+    val keep = df.columns.toSeq.map(col)
     df
       .withColumn("__toks", split(col("text"), " "))
       .withColumn("__n", org.apache.spark.sql.functions.size(col("__toks")))

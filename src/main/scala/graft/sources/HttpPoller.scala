@@ -4,6 +4,7 @@ import java.io.IOException
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
+import java.util.concurrent.ConcurrentHashMap
 
 /** Production HTTP adapter for [[PollSource]] — the live-endpoint leg of
   * the reference's poll-loop service (/root/reference/services/
@@ -53,18 +54,13 @@ class HttpPoller(options: java.util.Map[String, String])
       .orElse(Option(options.get("httpRetries")))
       .map(_.toInt).getOrElse(2)
 
-  // HttpClient is not serializable; rebuild lazily on each JVM side.
-  @transient private lazy val client: HttpClient = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofMillis(timeoutMs))
-    .build()
-
   private def get(query: String): String = {
     val req = HttpRequest.newBuilder(URI.create(s"$url?$query"))
       .timeout(Duration.ofMillis(timeoutMs)).GET().build()
     var attempt = 0
     while (true) {
       val resp =
-        try client.send(req, HttpResponse.BodyHandlers.ofString())
+        try HttpPoller.client(timeoutMs).send(req, HttpResponse.BodyHandlers.ofString())
         catch {
           // transport-level blip (connect refused/timed out): retry here
           case e: IOException if attempt < retries =>
@@ -97,4 +93,17 @@ class HttpPoller(options: java.util.Map[String, String])
     val trimmed = if (body.endsWith("\n")) body.dropRight(1) else body
     if (trimmed.isEmpty) Seq.empty else trimmed.split("\n", -1).toSeq
   }
+}
+
+object HttpPoller {
+  private val clients = new ConcurrentHashMap[java.lang.Long, HttpClient]()
+
+  /** One client (one selector thread and connection pool) per connect
+    * timeout in a JVM, shared by every deserialized poller: `HttpClient`
+    * is thread-safe but not serializable, and a client per task copy
+    * leaves a selector thread per copy.
+    */
+  private def client(connectTimeoutMs: Long): HttpClient =
+    clients.computeIfAbsent(connectTimeoutMs,
+      t => HttpClient.newBuilder().connectTimeout(Duration.ofMillis(t)).build())
 }

@@ -154,12 +154,16 @@ class PollMicroBatchStream(
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(maxPerPoll)
 
+  /** The frontier the last [[latestOffset]] probe saw. */
+  @volatile private var probed: Option[Long] = None
+
   /** One endpoint-frontier probe per trigger, capped by the read limit —
     * the "poll" of the poll loop.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[PollOffset].n
     val e = poller.end()
+    probed = Some(e)
     val capped = limit match {
       case r: ReadMaxRows => math.min(e, s + r.maxRows())
       case _: ReadAllAvailable => e
@@ -172,7 +176,10 @@ class PollMicroBatchStream(
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) should be called instead of this")
 
-  override def reportLatestOffset(): Offset = PollOffset(poller.end())
+  /** Spark asks this right after [[latestOffset]] in the same trigger: the
+    * frontier that call probed, so a trigger is one request to the endpoint.
+    */
+  override def reportLatestOffset(): Offset = PollOffset(probed.getOrElse(poller.end()))
 
   override def planInputPartitions(
       start: Offset, end: Offset): Array[InputPartition] = {

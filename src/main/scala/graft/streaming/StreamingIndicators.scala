@@ -170,12 +170,17 @@ object StreamingIndicators {
     * streaming sink (not foreachBatch + blind append, which is only
     * at-least-once on micro-batch replay): the sink's file manifest
     * commits atomically with the checkpoint epoch, so replayed batches
-    * never double-write. Returns the started query.
+    * never double-write. Checkpoint files go through
+    * [[LocalCheckpointFileManager]] unless the session names its own
+    * manager. Returns the started query.
     */
   def sinkToStore(
       enriched: Dataset[EnrichedCandle],
       storePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    val conf = enriched.sparkSession.conf
+    if (conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+      conf.set(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
     enriched
       .withColumn(graft.sources.PartitionedStore.PartitionCol,
         to_date(col("local_time")))
@@ -186,6 +191,7 @@ object StreamingIndicators {
       .option("checkpointLocation", checkpoint)
       .partitionBy(graft.sources.PartitionedStore.PartitionCol)
       .start()
+  }
 
   /** Kafka-sink projection: key = symbol, value = JSON of all 17 fields —
     * the reference's output_topic record shape (consumer.py:211-219).

@@ -139,6 +139,29 @@ class PollSourceSpec extends AnyFunSuite {
     assert(stream.planInputPartitions(PollOffset(7), PollOffset(7)).isEmpty)
   }
 
+  test("one endpoint probe per trigger: reportLatestOffset reuses latestOffset's frontier") {
+    var probes = 0
+    val recs = ArrayBuffer("r0", "r1", "r2")
+    val poller = new PollSource.Poller {
+      override def end(): Long = { probes += 1; recs.size.toLong }
+      override def fetch(since: Long, max: Int): Seq[String] = Seq.empty
+    }
+    val stream = new PollMicroBatchStream(poller, maxPerPoll = 2, numPartitions = 1,
+      startFromLatest = false)
+    // before any trigger there is no probed frontier: it probes
+    assert(stream.reportLatestOffset() == PollOffset(3) && probes == 1)
+    var start: org.apache.spark.sql.connector.read.streaming.Offset = stream.initialOffset()
+    for (trigger <- 1 to 3) {
+      // Spark's order within a trigger: latestOffset, then reportLatestOffset
+      val frontier = recs.size.toLong
+      val next = stream.latestOffset(start, stream.getDefaultReadLimit)
+      recs += s"late$trigger" // the endpoint grows between the two calls
+      assert(stream.reportLatestOffset() == PollOffset(frontier))
+      assert(probes == 1 + trigger, s"trigger $trigger probed the endpoint ${probes - trigger} times")
+      start = next
+    }
+  }
+
   test("a poller without the (java.util.Map) constructor fails at query start") {
     val failure = intercept[Exception] {
       val query = spark.readStream.format("graft-poll")

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -158,6 +160,42 @@ class StreamingIndicatorsSpec extends AnyFunSuite {
     // rows after the restart boundary must have warm state (ema defined
     // from row 10 onward — only possible if obs count survived restart)
     assert(got.drop(12).forall(r => r.getAs[Any]("ema_10") != null))
+  }
+
+  test("restart on a checkpoint Spark's default manager wrote: bit-identical rows, no re-emission") {
+    val s = spark.newSession()
+    implicit val sqlCtx = s.sqlContext
+    import s.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_ck_mgr")
+    val input = MemoryStream[Candle]
+    def run(manager: Class[_], rows: Seq[Candle]): Unit = {
+      s.conf.set(LocalCheckpointFileManager.ConfKey, manager.getName)
+      val q = StreamingIndicators.pipeline(input.toDS(), watermark = "10 minutes")
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", s"$base/out").option("checkpointLocation", s"$base/ck").start()
+      input.addData(rows)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def crcs(dir: String) = java.nio.file.Files.list(base.resolve(dir)).iterator.asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".crc")).toSet
+
+    run(classOf[org.apache.spark.sql.execution.streaming.checkpointing
+      .FileContextBasedCheckpointFileManager], symA.take(12))
+    val spark1 = crcs("ck/offsets")
+    assert(spark1.nonEmpty, "the first run did not write through Hadoop's checksummed filesystem")
+    run(classOf[LocalCheckpointFileManager], symA.drop(12))
+    assert(crcs("ck/offsets") == spark1, "the restart wrote through Hadoop's filesystem")
+
+    def bits(r: org.apache.spark.sql.Row) = r.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+      case x => String.valueOf(x)
+    }.mkString("|")
+    val got = s.read.parquet(s"$base/out").orderBy("local_time").collect().map(bits)
+    val clean = symA.foldLeft((StreamingIndicators.emptyState, Vector.empty[graft.model.EnrichedCandle])) {
+      case ((st, acc), c) => val (n, e) = StreamingIndicators.step(st, c); (n, acc :+ e)
+    }._2
+    val want = clean.toDF().collect().map(bits)
+    assert(got.toSeq == want.toSeq)
   }
 
   test("rows arriving unordered WITHIN a micro-batch are sorted before folding") {
