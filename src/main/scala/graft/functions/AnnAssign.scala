@@ -8,36 +8,36 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.{ColumnBridge => CB}
 import org.apache.spark.sql.types._
 
-/** Row-local ANN codebook assignment (r10, guide §2.1 "remove the
-  * shuffle outright" / §3 join choice).
+/** Row-local ANN codebook assignment: the one assignment path of
+  * `IvfIndex.assign`, `Pq.assignSub`/`Pq.encode` and the IVF-PQ
+  * cell-keyed codes.
   *
   * Both k-means codebooks of the ANN tier are INDEX METADATA that the
-  * engine already collects to the driver (`IvfIndex.materialize` — k ~
-  * sqrt(n) coarse rows, m×min(256, sqrt(n)) PQ rows). The r9 assignment
-  * shape still round-tripped that metadata through a broadcast JOIN: the
-  * corpus row fanned out to n×k (or n×m×k_sub) candidate rows that a
-  * partial-aggregated `min(struct(...))` collapsed again — one exchange
-  * plus the whole fan-out's row-materialization cost per assignment
+  * engine collects to the driver (k ~ sqrt(n) coarse rows,
+  * m×min(256, sqrt(n)) PQ rows). A broadcast JOIN of that metadata would
+  * fan each corpus row out to n×k (or n×m×k_sub) candidate rows for a
+  * partial-aggregated `min(struct(...))` to collapse again — one
+  * exchange plus the fan-out's row-materialization cost per assignment
   * pass, multiplied by the Lloyd iterations.
   *
-  * These expressions run the identical argmin/argmax as a tight
-  * codegen'd loop over the collected codebook instead: ZERO exchanges,
-  * zero candidate rows, the codebook travels once per stage inside the
-  * task binary (the same payload the broadcast shipped). Arithmetic is
-  * bit-identical by construction — the same `VecDot` left-fold per
+  * These expressions run the identical argmin/argmax as a per-row loop
+  * over the collected codebook instead: ZERO exchanges, zero candidate
+  * rows, the codebook travels once per stage inside the task binary.
+  * All three are `CodegenFallback` today: whole-stage codegen calls
+  * their interpreted `eval` per row. Arithmetic is bit-identical to the
+  * join shape by construction — the same `VecDot` left-fold per
   * candidate, the same `aa - 2.0*dot + bb` / `dot/(na*nb) * -1.0`
   * association, candidates visited in ascending cent_id with a strict
   * `Double.compare(x, best) < 0` update, which is exactly the
   * `min(struct(key, cent_id, ...))` ordering (ties keep the lowest
   * cent_id; Double.compare gives min-struct's -0.0 < 0.0 and NaN-last
-  * semantics). `AnnAssignSpec` pins equality against the broadcast-join
-  * shape on random fixtures; the DuckDB oracles re-verify end to end.
+  * semantics). `AnnAssignSpec` pins equality against a broadcast-join
+  * reference on random fixtures; the DuckDB oracles re-verify end to
+  * end.
   *
-  * Scale: the loop is O(k·d) per row — the same work the broadcast hash
-  * join's probe side did, minus the join/aggregate machinery. The
-  * codebook reference is bounded by the existing materialize() contract
-  * (index metadata, broadcast-order), so nothing here grows with the
-  * corpus.
+  * Scale: the loop is O(k·d) per row — the same work a broadcast hash
+  * join's probe side would do, minus the join/aggregate machinery. The
+  * codebook is index metadata, so nothing here grows with the corpus.
   */
 object AnnAssign {
 

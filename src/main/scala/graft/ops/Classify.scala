@@ -14,9 +14,10 @@ import graft.queries.Num
   *
   * Scale shape: centroids are ONE posexplode aggregation (labels x dim
   * groups — index-metadata-sized) and assignment is [[IvfIndex.assign]]'s
-  * broadcast argmax, so the corpus is never shuffled; the kNN vote joins
-  * the (queries x k) neighbour frame BROADCAST against the corpus-sized
-  * label scan, then aggregates queries-sized frames only.
+  * row-local argmax over the collected centroids, so the corpus is never
+  * shuffled; the kNN vote joins the (queries x k) neighbour frame
+  * BROADCAST against the corpus-sized label scan, then aggregates
+  * queries-sized frames only.
   *
   * Determinism: centroid means are [[Num]] fixed-point exact
   * (summation-order independent), assignment ties break (cosine DESC,
@@ -42,8 +43,7 @@ object Classify {
     * (vec_id, true_label, pred_label). Ties -> lowest label.
     */
   def nearestCentroid(emb: DataFrame): DataFrame = {
-    val cb = IvfIndex.materialize(centroids(emb))
-    IvfIndex.assign(emb, cb)
+    IvfIndex.assign(emb, centroids(emb))
       .select(col("vec_id"), col("label").as("true_label"),
         col("cent_id").cast("int").as("pred_label"))
   }

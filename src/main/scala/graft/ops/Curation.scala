@@ -221,7 +221,7 @@ object Curation {
     */
   def semDedup(emb: DataFrame, k: Int, tau: Double, iters: Int = 2): DataFrame = {
     import graft.functions.VecOps
-    val cb = IvfIndex.materialize(IvfIndex.codebook(emb, k, iters))
+    val cb = IvfIndex.codebook(emb, k, iters)
     val assigned = IvfIndex.assign(emb, cb)
       .select(col("vec_id"), col("embedding"), col("cent_id"))
     val partners = assigned

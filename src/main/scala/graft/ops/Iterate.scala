@@ -21,20 +21,6 @@ private[graft] object Iterate {
       df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
 
-  /** Ensure a frame that feeds heavy row-local fan-out (broadcast-join
-    * candidate generation, wide explodes) has at least half the
-    * session's shuffle parallelism: a NO-OP whenever the source already
-    * yields enough splits (any real multi-file corpus); a single small
-    * parquet file is one unsplittable row group = one scan task, which
-    * would otherwise serialize the whole downstream pipeline behind it
-    * regardless of core count.
-    */
-  def spread(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (df.rdd.getNumPartitions >= math.max(1, p / 2)) df
-    else df.repartition(p)
-  }
-
   /** Partition width for the frames that cycle inside an iteration:
     * enough partitions to keep ~`rowsPerTask` rows of the LARGEST
     * looping relation per task, never more than the session's shuffle

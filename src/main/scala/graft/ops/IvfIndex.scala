@@ -25,14 +25,14 @@ import graft.queries.Num
   *     centroids;
   *   - empty cells drop out of the update on both engines identically.
   *
-  * Scale: the codebook is index metadata (k ~ sqrt(n) rows) — it travels
-  * by broadcast; assignment is one broadcast pass over the corpus (no
-  * shuffle of the vectors); the update shuffles (cent_id, pos) partial
-  * sums only (k * dim groups). Search shuffles nothing on the corpus
-  * side: probes broadcast, candidates stream. At n = 10^9 and
-  * k = 31623, a cell holds ~31k vectors, so nprobe=8 scans ~250k
-  * candidates per query vs 10^9 brute — while codebook build is
-  * iters * (one scan + one k*dim-group aggregate).
+  * Scale: the codebook is index metadata (k ~ sqrt(n) rows) — it is
+  * collected and ships in the stage's task binary, so assignment is one
+  * pass over the corpus (no shuffle of the vectors); the update
+  * shuffles (cent_id, pos) partial sums only (k * dim groups). Search
+  * shuffles nothing on the corpus side: probes broadcast, candidates
+  * stream. At n = 10^9 and k = 31623, a cell holds ~31k vectors, so
+  * nprobe=8 scans ~250k candidates per query vs 10^9 brute — while
+  * codebook build is iters * (one scan + one k*dim-group aggregate).
   */
 object IvfIndex {
 
@@ -52,16 +52,16 @@ object IvfIndex {
       .orderBy(col("hk"), col("vec_id"))
       .limit(k)
     val wk = Window.orderBy(col("hk"), col("vec_id"))
-    // materialized from round 0 (r10): every Lloyd assignment then takes
-    // the row-local fused path below — the seed collect is k rows the
-    // first assign's broadcast would have collected anyway
+    // materialized from round 0, so the returned codebook is always a
+    // local relation — the seed collect is the k rows the first assign
+    // would collect anyway
     var cb: DataFrame = materialize(seeds
       .withColumn("cent_id", row_number().over(wk).cast("long") - 1)
       .select(col("cent_id"), col("embedding").as("cent_emb")))
     for (_ <- 0 until iters) {
       val a = assign(emb, cb)
       // materialize between iterations: the codebook is k ~ sqrt(n) rows
-      // of index metadata (the same payload the next assign broadcasts
+      // of index metadata (the same payload the next assign collects
       // anyway), and cutting the lineage here keeps every downstream use
       // from re-executing — and whole-stage-recompiling — the full
       // accumulated Lloyd subtree (the dominant cold cost of q_knn_ivf)
@@ -82,7 +82,7 @@ object IvfIndex {
 
   /** Collect the codebook and rebuild it as a local relation — k ~ sqrt(n)
     * rows of index metadata. Cuts the k-means lineage so each downstream
-    * broadcast does not re-execute the Lloyd iterations, without pinning a
+    * use does not re-execute the Lloyd iterations, without pinning a
     * cache entry in the session for the codebook's lifetime.
     */
   def materialize(cb: DataFrame): DataFrame = {
@@ -93,8 +93,8 @@ object IvfIndex {
   /** cosine(a, b) with the two norms precomputed: dot(a,b)/(na*nb). The
     * VALUE is bit-identical to [[VecOps.cosine]] (each dot is a
     * deterministic fold and sqrt is correctly rounded), but the
-    * assignment hot loop pays ONE fold per candidate instead of three —
-    * na once per corpus row, nb once per centroid on the broadcast side.
+    * candidate-scoring hot loop pays ONE fold per candidate instead of
+    * three — one norm per corpus row, one per probing query.
     */
   private def cosineCached(a: Column, na: Column, b: Column, nb: Column): Column =
     VecOps.vecDot(a, b) / (na * nb)
@@ -104,54 +104,22 @@ object IvfIndex {
 
   /** Nearest-cell assignment: (emb.*, cent_id); ties -> lowest cent_id.
     *
-    * The argmax is a partial-aggregable `min(struct(-cs, cent_id, ...))`:
-    * the broadcast join's n*k candidate rows collapse map-side to one
-    * best-so-far row per vec_id BEFORE the shuffle (a window row_number
-    * would shuffle and sort all n*k). Negation is an exact sign flip, so
-    * (-cs ASC, cent_id ASC) is precisely the (cs DESC, cent_id) oracle
-    * tie-break.
+    * The codebook is collected (k ~ sqrt(n) rows of index metadata;
+    * driver-only when `cb` is already a local relation) and the argmax
+    * runs row-locally over it ([[graft.functions.AnnAssign.ivfCell]]):
+    * zero exchanges, no n*k candidate rows. Scores and the
+    * (cs DESC, cent_id) tie-break are those of the oracle.
     */
-  def assign(emb: DataFrame, cb: DataFrame): DataFrame = localBook(cb) match {
-    case Some(book) =>
-      // r10 fused path: the codebook is already collected index metadata
-      // (a LocalRelation out of [[materialize]]) — the argmax runs as a
-      // row-local loop over it ([[graft.functions.AnnAssign]]): zero
-      // exchanges, no n*k candidate rows, bit-identical scores/tie-break
-      emb.withColumn("cent_id",
-        graft.functions.AnnAssign.ivfCell(col("embedding"), book))
-        .select(emb.columns.toSeq.map(col) :+ col("cent_id"): _*)
-    case None =>
-      val carry = emb.columns.toSeq.filter(_ != "vec_id")
-      // the n*k candidate fan-out runs at the SCAN's parallelism — spread
-      // a single-split source first (no-op on any real multi-file corpus)
-      withNorm(Iterate.spread(emb), "embedding", "e_nrm")
-        .crossJoin(broadcast(withNorm(cb, "cent_emb", "c_nrm")))
-        .withColumn("cs",
-          cosineCached(col("embedding"), col("e_nrm"), col("cent_emb"), col("c_nrm")))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("cs") * lit(-1.0) +: col("cent_id") +: carry.map(col): _*))
-          .as("m"))
-        .select(col("vec_id") +: col("m.cent_id").as("cent_id") +:
-          carry.map(c => col(s"m.$c").as(c)): _*)
-        .select(emb.columns.toSeq.map(col) :+ col("cent_id"): _*)
-  }
+  def assign(emb: DataFrame, cb: DataFrame): DataFrame =
+    emb.withColumn("cent_id",
+      graft.functions.AnnAssign.ivfCell(col("embedding"), localBook(cb)))
+      .select(emb.columns.toSeq.map(col) :+ col("cent_id"): _*)
 
   /** The collected [[graft.functions.AnnAssign.CentBook]] of a codebook
-    * frame that is ALREADY a local relation ([[materialize]]'s output, or
-    * a plan that constant-folds to one); None keeps the distributed
-    * broadcast-join path. The collect on a LocalRelation is driver-only —
-    * no Spark job.
+    * frame (cent_id, cent_emb).
     */
-  private[ops] def localBook(cb: DataFrame)
-      : Option[graft.functions.AnnAssign.CentBook] =
-    if (isLocalRelation(cb)) Some(graft.functions.AnnAssign.centBook(cb.collect()))
-    else None
-
-  private[ops] def isLocalRelation(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case _ => false
-    }
+  private[ops] def localBook(cb: DataFrame): graft.functions.AnnAssign.CentBook =
+    graft.functions.AnnAssign.centBook(cb.collect())
 
   /** Top-`topK` cosine neighbours for each query row (rows matching
     * `queryPred`), probing the `nprobe` nearest cells. Output:

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VecOps
+import graft.functions.{AnnAssign, VecOps}
 
 /** IVF-PQ: the production-scale ANN composition — [[IvfIndex]]'s coarse
   * k-means cells prune the corpus to `nprobe` cells per query, and
@@ -14,7 +14,9 @@ import graft.functions.VecOps
   * (k = 31623 cells, nprobe = 8): ~250k candidates x 16 code bytes =
   * 4 MB scanned per query vs 256 GB brute — with both index structures
   * (coarse codebook, PQ codebooks) broadcast and the corpus never
-  * shuffled at search time.
+  * shuffled at search time. At build both codebooks are collected and
+  * ship in the stage's task binary, so the cell-keyed codes are one
+  * pass over the corpus.
   *
   * Determinism: the coarse side is exactly q_knn_ivf's codebook (raw
   * vectors, cosine assignment); the PQ side exactly q_knn_pq's
@@ -23,47 +25,36 @@ import graft.functions.VecOps
   */
 object IvfPq {
 
-  /** Built index: coarse codebook, cell assignment, PQ codebooks, codes,
-    * and the search-time frame `cellCodes` = codes keyed by their coarse
-    * cell (the PQ code rows pre-joined to the cell assignment at BUILD
-    * time). The two codebooks are materialized local relations (index
-    * metadata); `cells`, `codes` and `cellCodes` are corpus-sized but
-    * compact (small fixed columns). On a real cluster `cellCodes` is the
-    * frame you persist bucketed/partitioned BY `cent_id`, so a probe
-    * touches only its cells' files.
+  /** Built index: coarse codebook, PQ codebooks, and the search-time
+    * frame `cellCodes` = each vector's PQ codes keyed by its coarse cell.
+    * The two codebooks are materialized local relations (index
+    * metadata); `cellCodes` is corpus-sized but compact (small fixed
+    * columns). On a real cluster `cellCodes` is the frame you persist
+    * bucketed/partitioned BY `cent_id`, so a probe touches only its
+    * cells' files.
     */
-  final case class Index(
-      coarse: DataFrame, cells: DataFrame, pqCb: DataFrame, codes: DataFrame,
-      cellCodes: DataFrame)
+  final case class Index(coarse: DataFrame, pqCb: DataFrame, cellCodes: DataFrame)
 
   /** Build both index structures over a corpus given raw + normalized
     * views of it ((vec_id, embedding) each).
     */
   def build(raw: DataFrame, norm: DataFrame, m: Int = Pq.M): Index = {
     val n = raw.count()
-    val coarse = IvfIndex.materialize(IvfIndex.codebook(raw, IvfIndex.chooseK(n)))
-    val cells = IvfIndex.assign(raw, coarse).select(col("vec_id"), col("cent_id"))
+    val coarse = IvfIndex.codebook(raw, IvfIndex.chooseK(n))
     val pqCb = Pq.codebooks(norm, m, Pq.chooseKsub(n))
-    val codes = Pq.encode(norm, pqCb, m)
-    // cell-keyed codes: r9 built cells and codes as two corpus passes
-    // and equi-joined them back on vec_id (two n-row exchanges + the
-    // join). With both codebooks collected index metadata, ONE raw scan
-    // computes the coarse cell and the m codes row-locally (`norm` is by
-    // contract the [[Pq.normalized]] view of `raw`, so normalizing
-    // inline is the same values) — zero exchanges, zero joins.
-    val cellCodes =
-      (IvfIndex.localBook(coarse), Pq.localSubBook(pqCb)) match {
-        case (Some(cbk), Some(sbk)) =>
-          raw.select(col("vec_id"),
-            graft.functions.AnnAssign.ivfCell(col("embedding"), cbk)
-              .as("cent_id"),
-            posexplode(graft.functions.AnnAssign.pqCodes(
-              Pq.normalized(col("embedding")), sbk)).as(Seq("sub_id", "code")))
-            .select(col("vec_id"), col("cent_id"), col("sub_id"), col("code"))
-        case _ => cells.join(codes, "vec_id")
-          .select(col("vec_id"), col("cent_id"), col("sub_id"), col("code"))
-      }
-    Index(coarse, cells, pqCb, codes, cellCodes)
+    // cell-keyed codes: with both codebooks collected index metadata,
+    // ONE raw scan computes the coarse cell and the m codes row-locally
+    // (`norm` is by contract the [[Pq.normalized]] view of `raw`, so
+    // normalizing inline is the same values) — zero exchanges, zero
+    // joins
+    val cellCodes = raw.select(col("vec_id"),
+      AnnAssign.ivfCell(col("embedding"), IvfIndex.localBook(coarse))
+        .as("cent_id"),
+      posexplode(AnnAssign.pqCodes(
+        Pq.normalized(col("embedding")), Pq.localSubBook(pqCb)))
+        .as(Seq("sub_id", "code")))
+      .select(col("vec_id"), col("cent_id"), col("sub_id"), col("code"))
+    Index(coarse, pqCb, cellCodes)
   }
 
   /** RESIDUAL index: coarse cells as in [[build]], plus the per-cell
@@ -79,38 +70,25 @@ object IvfPq {
     * vs see BASELINE.md r8 residual record on the 131k mixture corpus).
     */
   final case class ResIndex(
-      coarse: DataFrame, cells: DataFrame, cmeans: DataFrame,
-      pqCb: DataFrame, cellCodes: DataFrame)
+      coarse: DataFrame, cmeans: DataFrame, pqCb: DataFrame,
+      cellCodes: DataFrame)
 
-  /** Build the residual index (same coarse chain as [[build]];
-    * `reuse` lets a caller that already built the plain index share its
-    * (coarse, cells) pair instead of re-running the coarse Lloyd).
+  /** Build the residual index over raw (vec_id, embedding) vectors (same
+    * coarse chain as [[build]]).
     */
-  def buildResidual(
-      raw: DataFrame,
-      norm: DataFrame,
-      m: Int = Pq.M,
-      reuse: Option[(DataFrame, DataFrame)] = None): ResIndex = {
+  def buildResidual(raw: DataFrame, m: Int = Pq.M): ResIndex = {
     import graft.queries.Num
     val n = raw.count()
-    val (coarse, cells) = reuse.getOrElse {
-      val cb = IvfIndex.materialize(
-        IvfIndex.codebook(raw, IvfIndex.chooseK(n)))
-      (cb, IvfIndex.assign(raw, cb).select(col("vec_id"), col("cent_id")))
-    }
+    val coarse = IvfIndex.codebook(raw, IvfIndex.chooseK(n))
+    // the normalized view with its coarse cell, row-local off the raw
+    // scan: the coarse chain scores RAW vectors, so the cell cannot be
+    // re-derived from the normalized one
+    val normCell = raw.select(col("vec_id"),
+      Pq.normalized(col("embedding")).as("embedding"),
+      AnnAssign.ivfCell(col("embedding"), IvfIndex.localBook(coarse))
+        .as("cent_id"))
     // per-cell exact fixed-point mean of the normalized vectors — the
-    // residual origin; cells-count rows of index metadata. With the
-    // coarse codebook local, the (norm x cells) vec_id join collapses to
-    // a row-local cell tag off the raw scan (same values: `norm` is the
-    // [[Pq.normalized]] view of `raw` by contract).
-    val normCell = IvfIndex.localBook(coarse) match {
-      case Some(cbk) => raw.select(
-        Pq.normalized(col("embedding")).as("embedding"),
-        graft.functions.AnnAssign.ivfCell(col("embedding"), cbk)
-          .as("cent_id"))
-      case None => norm.join(cells, "vec_id")
-        .select(col("embedding"), col("cent_id"))
-    }
+    // residual origin; cells-count rows of index metadata
     val cmeans = IvfIndex.materialize(
       normCell
         .select(col("cent_id"),
@@ -122,44 +100,57 @@ object IvfPq {
         .agg(expr(
           "transform(array_sort(collect_list(struct(pos, val))), s -> s.val)")
           .as("cent_mean")))
-    // residuals: with the coarse codebook local, the cell tag is
-    // row-local off the norm scan (r9 joined norm x cells on vec_id —
-    // an n-row exchange per side) and only the cells-count mean frame
-    // is broadcast. `norm` is by contract the [[Pq.normalized]] view of
-    // `raw`, so re-deriving the cell from the normalized vector is NOT
-    // valid (the coarse chain scores RAW vectors) — the fused path
-    // instead recomputes the normalized view off the raw scan.
-    val residWithCell = IvfIndex.localBook(coarse) match {
-      case Some(cbk) =>
-        raw.select(col("vec_id"),
-          Pq.normalized(col("embedding")).as("embedding"),
-          graft.functions.AnnAssign.ivfCell(col("embedding"), cbk)
-            .as("cent_id"))
-          .join(broadcast(cmeans), "cent_id")
-          .select(col("vec_id"), col("cent_id"),
-            expr("zip_with(embedding, cent_mean, (a, b) -> a - b)")
-              .as("embedding"))
-      case None => norm.join(cells, "vec_id")
-        .join(broadcast(cmeans), "cent_id")
-        .select(col("vec_id"), col("cent_id"),
-          expr("zip_with(embedding, cent_mean, (a, b) -> a - b)")
-            .as("embedding"))
-    }
-    val resid = residWithCell.select(col("vec_id"), col("embedding"))
-    val pqCb = Pq.codebooks(resid, m, Pq.chooseKsub(n))
-    val codes = Pq.encode(resid, pqCb, m)
+    // residuals: only the cells-count mean frame is broadcast
+    val residWithCell = normCell
+      .join(broadcast(cmeans), "cent_id")
+      .select(col("vec_id"), col("cent_id"),
+        expr("zip_with(embedding, cent_mean, (a, b) -> a - b)")
+          .as("embedding"))
+    val pqCb = Pq.codebooks(
+      residWithCell.select(col("vec_id"), col("embedding")), m,
+      Pq.chooseKsub(n))
     // cell-keyed residual codes in the same pass (see [[build]])
-    val cellCodes = Pq.localSubBook(pqCb) match {
-      case Some(sbk) =>
-        residWithCell.select(col("vec_id"), col("cent_id"),
-          posexplode(graft.functions.AnnAssign.pqCodes(col("embedding"), sbk))
-            .as(Seq("sub_id", "code")))
-          .select(col("vec_id"), col("cent_id"), col("sub_id"), col("code"))
-      case None => cells.join(codes, "vec_id")
-        .select(col("vec_id"), col("cent_id"), col("sub_id"), col("code"))
-    }
-    ResIndex(coarse, cells, cmeans, pqCb, cellCodes)
+    val cellCodes = residWithCell.select(col("vec_id"), col("cent_id"),
+      posexplode(AnnAssign.pqCodes(col("embedding"), Pq.localSubBook(pqCb)))
+        .as(Seq("sub_id", "code")))
+      .select(col("vec_id"), col("cent_id"), col("sub_id"), col("code"))
+    ResIndex(coarse, cmeans, pqCb, cellCodes)
   }
+
+  /** The `nprobe` nearest coarse cells of each RAW query vector
+    * ((q_id, q_emb)): (q_id, probe_cent) — queries x coarse codebook
+    * (broadcast), top-nprobe by raw cosine, identical scoring to
+    * q_knn_ivf's probe CTE.
+    */
+  private def probes(queries: DataFrame, coarse: DataFrame, nprobe: Int): DataFrame = {
+    val wP = Window.partitionBy(col("q_id")).orderBy(col("cs").desc, col("cent_id"))
+    queries
+      .crossJoin(broadcast(coarse))
+      .withColumn("cs", VecOps.cosine(col("q_emb"), col("cent_emb")))
+      .withColumn("rk", row_number().over(wP))
+      .filter(col("rk") <= nprobe)
+      .select(col("q_id"), col("cent_id").as("probe_cent"))
+  }
+
+  /** In-cell ADC candidates (q_id, c_id, cent_id, sub_id, pdot): the
+    * cell-keyed codes stream ONCE against the broadcast probe set and the
+    * broadcast (queries x m x k_sub) dot table `tbl`. Both broadcasts are
+    * bounded by the QUERY BATCH (nprobe rows/query; m*k_sub rows/query),
+    * never by cell size — broadcasting the (queries x nprobe x
+    * cell-size) candidate-id set instead would be ~250k rows PER QUERY at
+    * n = 10^9 and blow the broadcast limit for a batch of hundreds. A
+    * vector lives in exactly one cell, so (q_id, c_id) pairs are
+    * distinct by construction.
+    */
+  private def inCell(cellCodes: DataFrame, probes: DataFrame, tbl: DataFrame): DataFrame =
+    cellCodes
+      .join(broadcast(probes), col("cent_id") === col("probe_cent"))
+      .filter(col("vec_id") =!= col("q_id"))
+      .join(broadcast(tbl),
+        col("q_id") === col("t_q") && col("sub_id") === col("t_sub") &&
+          col("code") === col("t_cent"))
+      .select(col("q_id"), col("vec_id").as("c_id"), col("cent_id"),
+        col("sub_id"), col("pdot"))
 
   /** Residual-ADC top-`topK` search (twin of [[searchWith]]; same probe
     * chain, ADC against the residual codebooks, the exact q·c correction
@@ -194,43 +185,25 @@ object IvfPq {
       nprobe: Int,
       topK: Int,
       shortlist: Int): DataFrame = {
-    val wP = Window.partitionBy(col("q_id"))
-      .orderBy(col("cs").desc, col("cent_id"))
-    val probes = queries
-      .crossJoin(broadcast(idx.coarse))
-      .withColumn("cs", VecOps.cosine(col("q_emb"), col("cent_emb")))
-      .withColumn("rk", row_number().over(wP))
-      .filter(col("rk") <= nprobe)
-      .select(col("q_id"), col("cent_id").as("probe_cent"))
+    val pr = probes(queries, idx.coarse, nprobe)
     val qNorm = queries.select(col("q_id"),
       Pq.normalized(col("q_emb")).as("embedding"))
     // exact correction scalar per (query, probed cell): q·c — bounded by
     // the probe set (queries x nprobe rows), travels by broadcast
-    val corr = probes
+    val corr = pr
       .join(broadcast(idx.cmeans), col("probe_cent") === col("cent_id"))
       .join(qNorm, "q_id")
       .select(col("q_id"), col("probe_cent"),
         VecOps.vecDot(col("embedding"),
           col("cent_mean").cast("array<double>")).as("qc"))
-    val tbl = Pq.adcTableFor(qNorm, idx.pqCb, m)
-    val scored = idx.cellCodes
-      .join(broadcast(probes), col("cent_id") === col("probe_cent"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(tbl),
-        col("q_id") === col("t_q") && col("sub_id") === col("t_sub") &&
-          col("code") === col("t_cent"))
-      .select(col("q_id"), col("vec_id").as("c_id"), col("cent_id"),
-        col("sub_id"), col("pdot"))
-      .groupBy(col("q_id"), col("c_id"), col("cent_id"))
-      .agg(expr(
-        "aggregate(transform(array_sort(collect_list(struct(sub_id, pdot)))," +
-          " s -> s.pdot), CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-        .as("score_res"))
+    val scored = Pq.adcScore(
+      inCell(idx.cellCodes, pr, Pq.adcTableFor(qNorm, idx.pqCb, m)),
+      "q_id", "c_id", "cent_id")
     val withCorr = scored
       .join(broadcast(corr.withColumnRenamed("q_id", "cq")),
         col("cq") === col("q_id") && col("probe_cent") === col("cent_id"))
       .select(col("q_id"), col("c_id"),
-        (col("score_res") + col("qc")).as("score_pq"))
+        (col("score_pq") + col("qc")).as("score_pq"))
     Pq.rerankExact(Pq.keepShortlist(withCorr, shortlist), raw, queries, topK)
   }
 
@@ -248,35 +221,13 @@ object IvfPq {
       nprobe: Int,
       topK: Int,
       shortlist: Int): DataFrame = {
-    // probes: queries x coarse codebook (broadcast), top-nprobe cells by
-    // raw cosine — identical scoring to q_knn_ivf's probe CTE
-    val wP = Window.partitionBy(col("q_id")).orderBy(col("cs").desc, col("cent_id"))
-    val probes = queries
-      .crossJoin(broadcast(idx.coarse))
-      .withColumn("cs", VecOps.cosine(col("q_emb"), col("cent_emb")))
-      .withColumn("rk", row_number().over(wP))
-      .filter(col("rk") <= nprobe)
-      .select(col("q_id"), col("cent_id").as("probe_cent"))
-    // in-cell ADC: the cell-keyed codes frame streams ONCE against the
-    // broadcast probe set and the broadcast (queries x m x k_sub) dot
-    // table built from the unit-normalized queries. Both broadcasts are
-    // bounded by the QUERY BATCH (nprobe rows/query; m*k_sub rows/query),
-    // never by cell size — the earlier shape broadcast the (queries x
-    // nprobe x cell-size) candidate-id set, which at n = 10^9 is ~250k
-    // rows PER QUERY and blows the broadcast limit for a batch of
-    // hundreds. A vector lives in exactly one cell, so (q_id, c_id)
-    // pairs are distinct by construction.
+    // the ADC table is built from the unit-normalized queries
     val qNorm = queries.select(col("q_id"),
       Pq.normalized(col("q_emb")).as("embedding"))
-    val tbl = Pq.adcTableFor(qNorm, idx.pqCb, m)
     val scored = Pq.adcScore(
-      idx.cellCodes
-        .join(broadcast(probes), col("cent_id") === col("probe_cent"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .join(broadcast(tbl),
-          col("q_id") === col("t_q") && col("sub_id") === col("t_sub") &&
-            col("code") === col("t_cent"))
-        .select(col("q_id"), col("vec_id").as("c_id"), col("sub_id"), col("pdot")))
+      inCell(idx.cellCodes, probes(queries, idx.coarse, nprobe),
+        Pq.adcTableFor(qNorm, idx.pqCb, m)),
+      "q_id", "c_id")
     Pq.rerankExact(Pq.keepShortlist(scored, shortlist), raw, queries, topK)
   }
 
@@ -318,8 +269,7 @@ object IvfPq {
     * threshold (e.g. <= ~2k queries/batch at the defaults).
     */
   def buildServedResidual(raw: DataFrame, m: Int = Pq.M): ServedRes = {
-    val norm = raw.select(col("vec_id"), Pq.normalized(col("embedding")).as("embedding"))
-    val idx0 = buildResidual(raw, norm, m)
+    val idx0 = buildResidual(raw, m)
     ServedRes(idx0.copy(cellCodes = idx0.cellCodes.cache()), raw, m)
   }
 }

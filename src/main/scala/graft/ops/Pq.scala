@@ -31,10 +31,11 @@ import graft.queries.Num
   * and scores.
   *
   * Scale: codebook build shuffles only (sub_id, cent_id, pos) partial
-  * sums (m * k * sub_dim groups); encoding is one broadcast pass over
-  * the corpus (no corpus shuffle); ADC scans codes with the table
-  * broadcast (no corpus shuffle); only the shortlist (queries x 64 rows)
-  * is joined back to full vectors. Composes with IVF for 10^9+: assign
+  * sums (m * k * sub_dim groups); the codebooks are collected and ship
+  * in the stage's task binary, so encoding is one pass over the corpus
+  * (no corpus shuffle); ADC scans codes with the table broadcast (no
+  * corpus shuffle); only the shortlist (queries x 64 rows) is joined
+  * back to full vectors. Composes with IVF for 10^9+: assign
   * to coarse cells first, then PQ-encode within probed cells only.
   */
 object Pq {
@@ -76,68 +77,33 @@ object Pq {
         s"transform(sequence(0, $m - 1), s -> slice($vecCol, s * (size($vecCol) div $m) + 1, size($vecCol) div $m))"))
         .as(Seq("sub_id", "sub_emb")))
 
-  /** Squared L2 distance with the two self-dots precomputed — same
-    * association as the oracle: ((aa - 2*a.b) + bb), each dot a
-    * deterministic fold. The assignment hot loop pays ONE fold per
-    * candidate instead of three — aa is computed once per sub-vector on
-    * the stream side, bb once per codeword on the broadcast build side.
-    */
-  private def d2Cached(aa: Column, a: Column, b: Column, bb: Column): Column =
-    aa - lit(2.0) * VecOps.vecDot(a, b) + bb
-
   /** Nearest-codeword assignment per (vec_id, sub_id); ties -> lowest
     * cent_id. `sub` is (vec_id, sub_id, sub_emb); `cb` is (sub_id,
-    * cent_id, cent_emb) and travels by broadcast.
+    * cent_id, cent_emb).
     *
-    * The argmin is a partial-aggregable `min(struct(dist2, cent_id,
-    * sub_emb))`: the broadcast join's n*m*k candidate rows collapse
-    * map-side to one best-so-far row per (vec_id, sub_id) BEFORE the
-    * shuffle, so only n*m compact rows ever move — a window row_number
-    * here would shuffle and sort all n*m*k. (dist2, cent_id) is unique
-    * per group, so the trailing sub_emb never participates in ordering;
-    * the (dist2 ASC, cent_id ASC) semantics match the oracle's
-    * row_number tie-break exactly.
+    * The codebook is collected (m * k rows of index metadata) and the
+    * argmin runs row-locally over it
+    * ([[graft.functions.AnnAssign.pqSubCode]]): zero exchanges, no
+    * n*m*k candidate rows. Distances (aa - 2*a.b + bb, each dot a
+    * deterministic fold) and the (dist2 ASC, cent_id ASC) tie-break are
+    * those of the oracle.
     */
   def assignSub(sub: DataFrame, cb: DataFrame): DataFrame =
-    localSubBook(cb) match {
-      case Some(book) =>
-        // r10 fused path ([[graft.functions.AnnAssign]]): the codebook is
-        // collected index metadata, so the argmin is a row-local loop —
-        // zero exchanges, no n*m*k candidate rows, bit-identical
-        // (dist2 ASC, cent_id ASC) selection
-        sub.withColumn("cent_id",
-          graft.functions.AnnAssign.pqSubCode(
-            col("sub_emb"), col("sub_id"), book))
-          .select(col("vec_id"), col("sub_id"), col("sub_emb"), col("cent_id"))
-      case None =>
-        // the n*m*k candidate fan-out runs at the scan's parallelism —
-        // spread a single-split source (no-op on a real multi-file corpus)
-        Iterate.spread(sub)
-          .withColumn("sub_c2", VecOps.vecDot(col("sub_emb"), col("sub_emb")))
-          .join(broadcast(cb.withColumn("cent_c2",
-            VecOps.vecDot(col("cent_emb"), col("cent_emb")))), "sub_id")
-          .withColumn("dist2",
-            d2Cached(col("sub_c2"), col("sub_emb"), col("cent_emb"), col("cent_c2")))
-          .groupBy(col("vec_id"), col("sub_id"))
-          .agg(min(struct(col("dist2"), col("cent_id"), col("sub_emb"))).as("m"))
-          .select(col("vec_id"), col("sub_id"),
-            col("m.sub_emb").as("sub_emb"), col("m.cent_id").as("cent_id"))
-    }
+    sub.withColumn("cent_id",
+      graft.functions.AnnAssign.pqSubCode(
+        col("sub_emb"), col("sub_id"), localSubBook(cb)))
+      .select(col("vec_id"), col("sub_id"), col("sub_emb"), col("cent_id"))
 
-  /** [[graft.functions.AnnAssign.SubBook]] of an already-local codebook
-    * frame (see [[IvfIndex.localBook]]); None keeps the broadcast path.
+  /** The collected [[graft.functions.AnnAssign.SubBook]] of a codebook
+    * frame (sub_id, cent_id, cent_emb); m = max(sub_id) + 1.
     */
-  private[ops] def localSubBook(cb: DataFrame)
-      : Option[graft.functions.AnnAssign.SubBook] =
-    if (IvfIndex.isLocalRelation(cb)) {
-      val rows = cb.select(col("sub_id"), col("cent_id"), col("cent_emb"))
-        .collect()
-      val m = if (rows.isEmpty) 0
-        else rows.iterator
-          .map(_.get(0).asInstanceOf[Number].longValue).max.toInt + 1
-      if (m == 0) None
-      else Some(graft.functions.AnnAssign.subBook(rows, m))
-    } else None
+  private[ops] def localSubBook(cb: DataFrame): graft.functions.AnnAssign.SubBook = {
+    val rows = cb.select(col("sub_id"), col("cent_id"), col("cent_emb"))
+      .collect()
+    val m = rows.iterator
+      .map(_.get(0).asInstanceOf[Number].intValue + 1).maxOption.getOrElse(0)
+    graft.functions.AnnAssign.subBook(rows, m)
+  }
 
   /** Deterministic per-subspace codebooks (sub_id, cent_id, cent_emb):
     * the k seed rows (smallest (md5(vec_id), vec_id)) are shared by all
@@ -156,9 +122,9 @@ object Pq {
       .orderBy(col("hk"), col("vec_id"))
       .limit(k)
       .withColumn("cent_id", row_number().over(wk).cast("long") - 1)
-    // materialized from round 0 (r10): every Lloyd assignment then takes
-    // assignSub's row-local fused path — the m*k seed rows are the same
-    // payload the first broadcast would have collected
+    // materialized from round 0, so the returned codebooks are always a
+    // local relation — the m*k seed rows are the same payload the first
+    // assignSub would collect
     var cb: DataFrame = IvfIndex.materialize(subVectors(
       seeds.select(col("cent_id"), col("embedding")), "cent_id", "embedding", m)
       .select(col("sub_id"), col("cent_id"), col("sub_emb").as("cent_emb")))
@@ -166,7 +132,7 @@ object Pq {
     for (_ <- 0 until iters) {
       val a = assignSub(sub, cb)
       // materialize between iterations (see IvfIndex.codebook): m*k rows
-      // of metadata; cutting the lineage keeps downstream broadcasts from
+      // of metadata; cutting the lineage keeps downstream uses from
       // re-running — and re-codegenning — the accumulated Lloyd subtree
       cb = IvfIndex.materialize(a
         .select(col("sub_id"), col("cent_id"),
@@ -180,8 +146,8 @@ object Pq {
     cb
   }
 
-  /** PQ codes (vec_id, sub_id, code): one broadcast pass over the corpus —
-    * this IS the compressed index (m small ints per vector).
+  /** PQ codes (vec_id, sub_id, code): one pass over the corpus — this
+    * IS the compressed index (m small ints per vector).
     */
   def encode(emb: DataFrame, cb: DataFrame, m: Int): DataFrame =
     assignSub(subVectors(emb, "vec_id", "embedding", m), cb)
@@ -205,12 +171,13 @@ object Pq {
       emb.filter(queryPred).select(col("vec_id").as("q_id"), col("embedding")),
       cb, m)
 
-  /** Approximate-cosine per (q_id, c_id) from joined (q_id, c_id, sub_id,
-    * pdot) candidate rows: the m partial dots folded in subspace order —
-    * order-deterministic, same fold as the oracle's list_reduce.
+  /** Approximate cosine `score_pq` per group of `keys` (at least q_id,
+    * c_id) from joined (keys, sub_id, pdot) candidate rows: the m
+    * partial dots folded in subspace order — order-deterministic, same
+    * fold as the oracle's list_reduce.
     */
-  private[ops] def adcScore(cand: DataFrame): DataFrame =
-    cand.groupBy(col("q_id"), col("c_id"))
+  private[ops] def adcScore(cand: DataFrame, keys: String*): DataFrame =
+    cand.groupBy(keys.map(col): _*)
       .agg(expr(
         "aggregate(transform(array_sort(collect_list(struct(sub_id, pdot))), s -> s.pdot), CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
         .as("score_pq"))
@@ -266,6 +233,7 @@ object Pq {
         col("sub_id"), col("pdot"))
     val queries = raw.filter(queryPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    rerankExact(keepShortlist(adcScore(cand), shortlist), raw, queries, topK)
+    rerankExact(keepShortlist(adcScore(cand, "q_id", "c_id"), shortlist),
+      raw, queries, topK)
   }
 }

@@ -740,8 +740,7 @@ object CurationQueries {
       import graft.functions.VecOps
       import graft.ops.IvfIndex
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val cb = IvfIndex.materialize(
-        IvfIndex.codebook(emb, IvfIndex.chooseK(emb.count())))
+      val cb = IvfIndex.codebook(emb, IvfIndex.chooseK(emb.count()))
       val asg = IvfIndex.assign(emb, cb)
         .select(col("vec_id"), col("embedding"), col("cent_id"))
       val sc = asg.crossJoin(broadcast(

@@ -221,7 +221,7 @@ object EvalQueries {
     ) { (s, d) =>
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val k = IvfIndex.chooseK(emb.count())
-      val cb = IvfIndex.materialize(IvfIndex.codebook(emb, k, iters = 2))
+      val cb = IvfIndex.codebook(emb, k, iters = 2)
       val ivf = IvfIndex.search(emb, cb, col("vec_id") < 10, nprobe = 2, topK = 5)
         .select(col("q_id"), col("c_id"), col("rank"))
       val qv = emb.filter(col("vec_id") < 10)
@@ -495,7 +495,7 @@ object EvalQueries {
         .select(col("vec_id"), col("embedding"))
       val lab = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
       val k = IvfIndex.chooseK(emb.count())
-      val cb = IvfIndex.materialize(IvfIndex.codebook(emb, k, iters = 2))
+      val cb = IvfIndex.codebook(emb, k, iters = 2)
       val ivf = IvfIndex.search(emb, cb, col("vec_id") < 10, nprobe = 2, topK = 10)
         .select(col("q_id"), col("c_id"), col("rank"))
       val spark = s

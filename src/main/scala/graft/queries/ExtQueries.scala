@@ -1240,11 +1240,10 @@ object ExtQueries {
       import graft.ops.IvfIndex
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val k = IvfIndex.chooseK(emb.count())
-      // materialize the codebook (k ~ sqrt(n) rows of index metadata):
-      // search broadcasts it twice (assignment + probes) and the k-means
-      // lineage must not re-execute per broadcast — and unlike cache(),
-      // a local relation leaks nothing into the shared session
-      val cb = IvfIndex.materialize(IvfIndex.codebook(emb, k, iters = 2))
+      // the codebook comes back a local relation (k ~ sqrt(n) rows of
+      // index metadata): search uses it twice (assignment + probes)
+      // without re-executing the k-means lineage
+      val cb = IvfIndex.codebook(emb, k, iters = 2)
       IvfIndex.search(emb, cb, col("vec_id") < 10, nprobe = 2, topK = 5)
         .select("q_id", "c_id", "cosine", "rank")
     }.intendsNestedLoop(

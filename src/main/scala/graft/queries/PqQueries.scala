@@ -129,8 +129,7 @@ object PqQueries {
     ) { (s, d) =>
       import graft.ops.IvfPq
       val raw = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val norm = normalizedEmb(s, d)
-      val idx = IvfPq.buildResidual(raw, norm)
+      val idx = IvfPq.buildResidual(raw)
       IvfPq.searchResidual(idx, raw, Pq.M, col("vec_id") < 10,
         nprobe = 4, topK = 5, shortlist = 32)
     }.intendsNestedLoop(

@@ -16,9 +16,11 @@ import graft.ops.IvfPq
   * operators cannot express directly — and because each query is fully
   * answerable within its own micro-batch, so no cross-batch state is
   * needed at all. The index side is where the 100 TB scale lives: the
-  * codebooks are broadcast local relations and the cell-keyed codes are
-  * computed ONCE and cached, so each query batch costs ADC scoring of the
-  * probed cells' codes plus a shortlist re-rank.
+  * codebooks are collected local relations (at build they ship in the
+  * stage's task binary; per batch the probe and ADC steps broadcast
+  * them) and the cell-keyed codes are computed ONCE and cached, so each
+  * query batch costs ADC scoring of the probed cells' codes plus a
+  * shortlist re-rank.
   *
   * Results are exactly the batch search's results for the same vectors —
   * spec-pinned (AnnServeSpec), not just claimed.

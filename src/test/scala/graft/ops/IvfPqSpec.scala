@@ -48,9 +48,7 @@ class IvfPqSpec extends AnyFunSuite with Matchers {
 
   test("residual search: exhaustive probe + full shortlist = exact brute force") {
     val raw = clusteredCorpus()
-    val norm = raw.select(col("vec_id"),
-      Pq.normalized(col("embedding")).as("embedding"))
-    val idx = IvfPq.buildResidual(raw, norm)
+    val idx = IvfPq.buildResidual(raw)
     val nCells = idx.coarse.count().toInt
     // probing every cell with a corpus-wide shortlist leaves only the
     // exact re-rank: the residual chain must reproduce brute force
@@ -64,10 +62,8 @@ class IvfPqSpec extends AnyFunSuite with Matchers {
 
   test("residual search: narrow probe + narrow shortlist keeps recall@5 >= 0.9 on clusters") {
     val raw = clusteredCorpus()
-    val norm = raw.select(col("vec_id"),
-      Pq.normalized(col("embedding")).as("embedding"))
     val truth = bruteTop5(raw.select(col("vec_id"), col("embedding").as("q_emb")))
-    val idx = IvfPq.buildResidual(raw, norm)
+    val idx = IvfPq.buildResidual(raw)
     val got = IvfPq.searchResidual(idx, raw, Pq.M, col("vec_id") < 10,
       nprobe = 2, topK = 5, shortlist = 32)
       .select("q_id", "c_id").collect()
