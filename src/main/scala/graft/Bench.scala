@@ -31,8 +31,9 @@ object Bench {
     val spark = GraftExtensions.localSession(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "graft.ops.LocalTail", org.apache.logging.log4j.Level.INFO)
+    for (logger <- Seq("graft.ops.LocalTail", "graft.sources.ParquetOpen"))
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        logger, org.apache.logging.log4j.Level.INFO)
     val meter = new Meter
     spark.sparkContext.addSparkListener(meter)
 

@@ -38,11 +38,13 @@ case class EnrichedCandle(
     signal: String)
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md). All reads
-  * are plain parquet scans so Catalyst can push filters/prune columns.
+  * are plain parquet scans so Catalyst can push filters/prune columns; the
+  * schema comes from one footer read on the driver
+  * ([[graft.sources.ParquetOpen]]), so opening a table runs no Spark job.
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.sources.ParquetOpen(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

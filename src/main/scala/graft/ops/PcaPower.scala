@@ -146,6 +146,8 @@ object PcaPower {
     * collected metadata (the SAME integer ops, in the same order, as
     * the r8 Spark-round form and the DuckDB unroll: integer sums are
     * order-free, max is order-free, tdiv is pointwise).
+    * Its input is the d x d moments, bounded by construction, so it
+    * takes no `LocalTail` gate.
     */
   private def eigvecLocal(st: Stats, d: Int, iters: Int): Array[Long] = {
     require(d >= 2 && iters >= 1)

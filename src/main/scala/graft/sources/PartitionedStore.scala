@@ -50,10 +50,12 @@ object PartitionedStore {
   }
 
   /** Scan the store. Filters on `trade_date` prune partitions; filters on
-    * the symbol column push down to Parquet row-group stats.
+    * the symbol column push down to Parquet row-group stats. The schema
+    * comes from one footer read on the driver ([[ParquetOpen]]), so the
+    * open runs no Spark job.
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetOpen(spark, path)
 
   /** Compact a store accumulated through many small appends (the
     * streaming-sink pattern: every micro-batch writes a file per
